@@ -12,9 +12,12 @@ executor storage flat across a long composed pipeline:
   cached subplan is consumed through the JVM plan, not through the Python
   handle, so a GC-driven release would unpersist intermediates before the
   caller's action ever runs);
-- iterative operators that truncate lineage with ``localCheckpoint``
-  register the resulting frames through :func:`track_checkpoint` and drop
-  superseded rounds mid-loop with :func:`free_checkpoint`;
+- iterative operators run their rounds through :func:`iterate`: one
+  tracked lazy ``localCheckpoint`` per round, a superseded round freed
+  once a convergence probe has materialized its successor.  Under AQE,
+  building a lazy checkpoint's RDD already runs the round's shuffle
+  stages, so most of their jobs run while the DataFrame is built, not
+  under the caller's action;
 - callers invoke :func:`release_caches` once they have consumed the
   operator's output (after the final action on it) — every tracked
   intermediate is unpersisted and the registry emptied;
@@ -44,7 +47,7 @@ query action; put the same call at the end of a foreachBatch handler.
 from __future__ import annotations
 
 import threading
-from typing import List, Optional
+from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -129,21 +132,10 @@ def track_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def free_checkpoint(df: DataFrame) -> bool:
-    """Immediately drop a SUPERSEDED checkpoint's blocks.
-
-    For iterative operators (connected components, PageRank, BPE) that
-    checkpoint once per round: once round i+1's checkpoint is
-    MATERIALIZED, round i's blocks are no longer an input to anything and
-    can be freed mid-loop, keeping peak checkpoint storage O(1) in the
-    iteration count instead of O(rounds).  The caller must guarantee the
-    materialization order — freeing a checkpoint that a not-yet-run lazy
-    checkpoint still reads from would fail that later job.
-
-    A freed id is also dropped from the tracking registry, so operators
-    can safely ``track_checkpoint`` every round AT CREATION (covering
-    exception paths — an untracked mid-loop frame orphaned by a failed
-    job would be unreleasable) and still free superseded rounds without
-    inflating :func:`release_caches`'s count."""
+    """Immediately drop a SUPERSEDED checkpoint's blocks and its tracked
+    id; False when ``df`` is not a checkpoint frame.  The caller must
+    guarantee the materialization order — freeing a checkpoint that a
+    not-yet-run lazy checkpoint still reads from would fail that job."""
     rdd_id = _checkpoint_rdd_id(df)
     if rdd_id is None:
         return False
@@ -151,6 +143,55 @@ def free_checkpoint(df: DataFrame) -> bool:
         while rdd_id in _CHECKPOINT_IDS:
             _CHECKPOINT_IDS.remove(rdd_id)
     return _unpersist_rdd_id(rdd_id)
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df`` now: its checkpoint blocks, or its :func:`register_cache`
+    entry — e.g. an operator's last intermediate its output never reads."""
+    if free_checkpoint(df):
+        return
+    with _LOCK:
+        registered = any(d is df for d in _ACTIVE)
+        _ACTIVE[:] = [d for d in _ACTIVE if d is not df]
+    if registered:
+        df.unpersist()
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    stop: Optional[Callable[[DataFrame, DataFrame], bool]] = None,
+    invariants: Sequence[DataFrame] = (),
+) -> Optional[DataFrame]:
+    """``state = step(state)`` for at most ``rounds`` rounds, each round
+    cut off by a lazy ``localCheckpoint`` tracked at creation (so every
+    exit path leaves it to :func:`release_caches`).
+
+    ``stop(new, old)`` is the round's one materializing action (it must
+    consume every partition of ``new``); ``old`` is freed only after it
+    returns, so at most two rounds are stored.  Returns the first round
+    ``stop`` accepts, or None with the last round freed if it accepts
+    none.  Without ``stop`` all rounds run and the whole chain
+    stays tracked: each round's plan reads its predecessor's checkpoint.
+    ``invariants`` (register_cache frames every round reads) are freed on
+    every exit path."""
+    try:
+        for _ in range(int(rounds)):
+            new = track_checkpoint(step(state).localCheckpoint(eager=False))
+            if stop is not None:
+                done = stop(new, state)
+                release(state)
+                if done:
+                    return new
+            state = new
+        if stop is None:
+            return state
+        release(state)
+        return None
+    finally:
+        for df in invariants:
+            release(df)
 
 
 def release_caches() -> int:

@@ -43,11 +43,7 @@ from typing import List, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from feathub_spark.common.caching import (
-    free_checkpoint,
-    register_cache,
-    track_checkpoint,
-)
+from feathub_spark.common.caching import iterate, register_cache, release
 from feathub_spark.common.parallelism import ensure_parallelism
 
 END_OF_WORD = "</w>"
@@ -317,63 +313,52 @@ def bpe_train(
     # cache populates on the first iteration's top-1 collect — no separate
     # count() job (at 20+ merges the per-iteration JOB COUNT is the cost)
     cur = register_cache(vocab.select(syms.alias("s"), "n"))
+    n_merges = int(n_merges)
 
     merges: List[Tuple[int, str, str, int]] = []
+    batch: List[Tuple[str, str, int]] = []
     pair_expr = (
         "transform(sequence(1, size(s) - 1), "
         "i -> struct(element_at(s, i) AS l, element_at(s, i + 1) AS r))"
     )
-    top_k = max(8, min(64, int(n_merges) * 4))
-    prev = None
-    try:
-        while len(merges) < int(n_merges):
-            top = (
-                cur.filter(F.size("s") >= 2)
-                .select(F.explode(F.expr(pair_expr)).alias("p"), "n")
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("n").alias("c"))
-                .orderBy(F.col("c").desc(), F.col("l").asc(), F.col("r").asc())
-                .limit(top_k)
-                .collect()
-            )
-            # the collect materialized cur's (lazy) checkpoint, so the
-            # round-before-last frame is no longer an input to anything —
-            # drop both its cacheManager entry and its checkpoint blocks
-            if prev is not None:
-                prev.unpersist()
-                free_checkpoint(prev)
-                prev = None
-            batch, stop = plan_merge_batch(
-                [(r["l"], r["r"], int(r["c"])) for r in top],
-                remaining=int(n_merges) - len(merges),
-                min_pair_count=min_pair_count,
-                truncated=len(top) == top_k,
-            )
-            if not batch:
-                if stop:
-                    break
-                # defensive: the planner always accepts the top-1 when it
-                # clears min_pair_count, so an empty non-stop batch is
-                # unreachable; guard against an infinite loop regardless
-                break
-            for left, right, c in batch:
-                merges.append((len(merges), left, right, c))
-            nxt = track_checkpoint(
-                cur.select(
-                    _merge_udf([(l, r) for l, r, _ in batch])(F.col("s")).alias("s"),
-                    "n",
-                )
-                .localCheckpoint(eager=False)
-            )
-            prev = cur
-            cur = nxt
-    finally:
-        # cur may hold an unmaterialized lazy checkpoint (loop exited right
-        # after building it) — freeing is a no-op then; prev's blocks are
-        # still read by cur's UNMATERIALIZED plan, so leave prev to
-        # release_caches() (its id is tracked / its persist is registered)
-        cur.unpersist()
-        free_checkpoint(cur)
+    top_k = max(8, min(64, n_merges * 4))
+
+    def _plan_batch(vocab_syms: DataFrame) -> bool:
+        """Collect the top pairs (materializing ``vocab_syms``), plan the
+        next merge batch and record it; True once training is done."""
+        nonlocal batch
+        top = (
+            vocab_syms.filter(F.size("s") >= 2)
+            .select(F.explode(F.expr(pair_expr)).alias("p"), "n")
+            .groupBy("p.l", "p.r")
+            .agg(F.sum("n").alias("c"))
+            .orderBy(F.col("c").desc(), F.col("l").asc(), F.col("r").asc())
+            .limit(top_k)
+            .collect()
+        )
+        # the planner always accepts the top-1 when it clears
+        # min_pair_count, so an empty batch means training has stopped
+        batch = plan_merge_batch(
+            [(r["l"], r["r"], int(r["c"])) for r in top],
+            remaining=n_merges - len(merges),
+            min_pair_count=min_pair_count,
+            truncated=len(top) == top_k,
+        )[0]
+        for left, right, c in batch:
+            merges.append((len(merges), left, right, c))
+        return not batch or len(merges) >= n_merges
+
+    def _merge_batch(vocab_syms: DataFrame) -> DataFrame:
+        merge = _merge_udf([(l, r) for l, r, _ in batch])
+        return vocab_syms.select(merge(F.col("s")).alias("s"), "n")
+
+    if n_merges > 0 and not _plan_batch(cur):
+        # every round adds a merge, so the loop stops within n_merges rounds
+        cur = iterate(
+            cur, _merge_batch, n_merges, stop=lambda new, _: _plan_batch(new)
+        )
+    # the merge table is driver-built and never reads the vocabulary
+    release(cur)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count bigint"
     )

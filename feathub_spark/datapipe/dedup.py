@@ -21,13 +21,10 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.storagelevel import StorageLevel
 
 from feathub_spark.common.exceptions import FeathubError
-from feathub_spark.common.caching import (
-    free_checkpoint,
-    register_cache,
-    track_checkpoint,
-)
+from feathub_spark.common.caching import iterate, register_cache, track_checkpoint
 from feathub_spark.common.parallelism import ensure_parallelism
 
 _MERSENNE_P = (1 << 61) - 1
@@ -1073,7 +1070,11 @@ def dedup_clusters(
     # twice just to build the edge list
     from feathub_spark.common.plan_shapes import symmetrize_pairs
 
-    edges = symmetrize_pairs(pairs, id_a, id_b, "s", "d").distinct().persist()
+    # loop-invariant: iterate() frees it on every exit path
+    edges = register_cache(
+        symmetrize_pairs(pairs, id_a, id_b, "s", "d").distinct(),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     # seed each node with min(id, min direct neighbor) — the same shuffle
     # the old distinct-ids init paid, but it folds the first propagation
     # hop into initialization: a clique (the typical near-dup component)
@@ -1084,67 +1085,36 @@ def dedup_clusters(
     labels = edges.groupBy(F.col("s").alias("id")).agg(
         F.least(F.min("d"), F.min("s")).alias("cluster_id")
     )
-    converged = False
-    prev_ckpt = None
-    for _ in range(max_iterations):
+
+    def _round(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges["d"] == labels["id"])
             .groupBy(F.col("s").alias("id"))
             .agg(F.min("cluster_id").alias("nmin"))
         )
         # min-labels only ever decrease, so "changed" is knowable inside the
-        # update projection — no extra new-vs-old join per iteration, and
-        # the convergence probe is a limit(1) scan of checkpointed data
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))
-                ).alias("new_cluster_id"),
-                (
-                    F.coalesce(F.col("nmin"), F.col("cluster_id"))
-                    < F.col("cluster_id")
-                ).alias("__changed__"),
-            )
-            .withColumnRenamed("new_cluster_id", "cluster_id")
-            # LAZY checkpoint: the probe below is the materializing
-            # action.  Its job computes EVERY partition (LocalLimit(1)
-            # runs per partition, and a persisted partition materializes
-            # wholesale on first compute), persisting the round's blocks
-            # and truncating lineage in the SAME job the eager form spent
-            # a separate materialize job + a cache-read probe pass on —
-            # one job and one pass over the label table per round instead
-            # of two
-            .localCheckpoint(eager=False)
+        # update projection — no extra new-vs-old join per round, and the
+        # convergence probe is a limit(1) scan of the round's checkpoint
+        nmin = F.coalesce(F.col("nmin"), F.col("cluster_id"))
+        return labels.join(neighbor_min, "id", "left").select(
+            "id",
+            F.least(F.col("cluster_id"), nmin).alias("cluster_id"),
+            (nmin < F.col("cluster_id")).alias("__changed__"),
         )
-        # tracked AT CREATION so an exception below (a failed probe job,
-        # an interrupt) leaves the frame releasable; free_checkpoint on
-        # the superseded round also drops its id from the registry
-        track_checkpoint(new_labels)
-        changed = new_labels.filter(F.col("__changed__")).limit(1).count()
-        # this round's checkpoint is materialized (eager) — the previous
-        # round's blocks are no longer an input to anything; free them so
-        # peak checkpoint storage stays O(1) in the iteration count
-        if prev_ckpt is not None:
-            free_checkpoint(prev_ckpt)
-        prev_ckpt = new_labels
-        labels = new_labels.drop("__changed__")
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        if prev_ckpt is not None:
-            free_checkpoint(prev_ckpt)
+
+    # the probe's one job materializes the whole round: LocalLimit(1) runs
+    # per partition, and a checkpointed partition is stored wholesale
+    labels = iterate(
+        labels, _round, max_iterations, invariants=[edges],
+        stop=lambda new, _: new.filter(F.col("__changed__")).limit(1).count() == 0,
+    )
+    if labels is None:
         raise RuntimeError(
             f"dedup_clusters did not converge within {max_iterations} "
             "iterations (a connected component's diameter exceeds the "
             "limit); raise max_iterations or use algorithm='star'"
         )
-    # the final checkpoint is already tracked (at creation) — the caller
-    # frees its blocks via release_caches() after the final action
-    return labels
+    return labels.drop("__changed__")
 
 
 def _dedup_clusters_star(
@@ -1165,7 +1135,7 @@ def _dedup_clusters_star(
     Converged when a full round leaves the oriented edge set unchanged.
     The per-round check is one (count, sum-of-edge-hashes) aggregate —
     two shuffle-less jobs cheaper than set subtraction — and only a
-    MATCHING fingerprint triggers the exact two-way exceptAll
+    MATCHING fingerprint triggers the exact exceptAll
     confirmation, so a hash collision can cost one extra confirm job but
     never a wrong answer.  Every node's final cluster is its direct
     neighbor minimum (the star root), or itself for roots/isolated ids."""
@@ -1183,12 +1153,10 @@ def _dedup_clusters_star(
         .unionByName(base.select(F.col("y").alias("id")))
         .distinct()
     )
-    # every checkpoint is tracked AT CREATION (exception paths stay
-    # releasable); free_checkpoint on superseded rounds drops their ids
     # LAZY checkpoint: the fingerprint aggregate below consumes every
     # row, so its job materializes the blocks and truncates lineage —
     # no separate eager-materialize job followed by a cache-read pass
-    # (the same fusion as the round loop below)
+    # (the same fusion as the rounds below)
     e = track_checkpoint(
         base.select(
             F.greatest(F.col("x"), F.col("y")).alias("a"),
@@ -1207,7 +1175,6 @@ def _dedup_clusters_star(
         return (row["n"], row["h"])
 
     fp = _fingerprint(e)
-    converged = False
     from feathub_spark.common.plan_shapes import symmetrize_pairs
 
     from pyspark.sql import Window
@@ -1226,7 +1193,8 @@ def _dedup_clusters_star(
     # star reducer fundamentally regroups anyway.
     w_s = Window.partitionBy("s")
     w_a = Window.partitionBy("a")
-    for _ in range(max_iterations):
+
+    def _round(e: DataFrame) -> DataFrame:
         sym = symmetrize_pairs(e, "a", "b", "s", "d")
         large = (
             sym.withColumn("__m__", F.min("d").over(w_s))
@@ -1241,7 +1209,7 @@ def _dedup_clusters_star(
             # projection emits at most one row per symmetrized edge — the
             # exchange an intermediate distinct would add buys nothing
         )
-        new_e = (
+        return (
             large.withColumn("__m2__", F.min("b").over(w_a))
             .select(
                 F.explode(
@@ -1254,36 +1222,27 @@ def _dedup_clusters_star(
             .select(F.col("__e__.x").alias("a"), F.col("__e__.y").alias("b"))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            # LAZY: the fingerprint job is the materializing action (it
-            # consumes every row of every partition) — one job and one
-            # pass over the round's edge set instead of an eager
-            # materialize job plus a cache-read fingerprint pass
-            .localCheckpoint(eager=False)
         )
-        track_checkpoint(new_e)
+
+    def _unchanged(new_e: DataFrame, old_e: DataFrame) -> bool:
+        # the fingerprint job materializes the round (it consumes every
+        # row of every partition).  A one-directional confirm suffices: a
+        # matching fingerprint already pins equal cardinality (n rides in
+        # the fingerprint), and for equal-size multisets new_e \ old_e ==
+        # {} implies equality
+        nonlocal fp
         new_fp = _fingerprint(new_e)
-        # one-directional confirm suffices: a matching fingerprint already
-        # pins equal cardinality (n rides in the fingerprint), and for
-        # equal-size multisets new_e \ e == {} implies equality — the
-        # reverse exceptAll could never find anything
-        unchanged = new_fp == fp and new_e.exceptAll(e).limit(1).count() == 0
-        # new_e is materialized (eager) and the convergence probe has
-        # consumed the old round — free its blocks before moving on
-        old_e = e
-        e, fp = new_e, new_fp
-        free_checkpoint(old_e)
-        if unchanged:
-            converged = True
-            break
-    if not converged:
-        free_checkpoint(e)
+        same = new_fp == fp and new_e.exceptAll(old_e).limit(1).count() == 0
+        fp = new_fp
+        return same
+
+    e = iterate(e, _round, max_iterations, stop=_unchanged)
+    if e is None:
         raise RuntimeError(
             f"dedup_clusters(algorithm='star') did not converge within "
             f"{max_iterations} rounds; raise max_iterations"
         )
-    # the output plan reads the final edge checkpoint (and base, via
-    # nodes) — both already tracked at creation; caller frees via
-    # release_caches() after its action
+    # the output reads the final edges and base: both stay tracked
     roots = e.groupBy(F.col("a").alias("id")).agg(F.min("b").alias("__root__"))
     return nodes.join(roots, "id", "left").select(
         "id", F.coalesce(F.col("__root__"), F.col("id")).alias("cluster_id")

@@ -14,8 +14,9 @@ Scale shape: each iteration is one join of the rank table onto the edge
 list plus one groupBy on the destination — the standard distributed
 PageRank round (contributions combine map-side; a hot node's in-edges
 shuffle to one reducer key, the usual power-law caveat).  The driver
-loop is control flow only; `localCheckpoint` truncates lineage each
-round like dedup_clusters.
+loop is control flow only (``common.caching.iterate``, shared with
+dedup_clusters and bpe_train); a `localCheckpoint` truncates lineage
+each round.
 """
 
 from __future__ import annotations
@@ -57,7 +58,7 @@ def pagerank(
     construction, so the option is a no-op there.
 
     Returns (id, rank_units bigint, rank double = units / UNIT)."""
-    from feathub_spark.common.caching import register_cache, track_checkpoint
+    from feathub_spark.common.caching import iterate, register_cache
 
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
@@ -120,8 +121,7 @@ def pagerank(
     e.unpersist()
     base = int((100 - damping_pct) * UNIT) // 100
 
-    ranks = nodes.withColumn("rank_units", F.lit(UNIT).cast("bigint"))
-    for _ in range(int(iterations)):
+    def _round(ranks: DataFrame) -> DataFrame:
         contrib = (
             ed.join(ranks, ed.src == ranks.id)
             .select(
@@ -131,24 +131,20 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("__c__").alias("__in__"))
         )
-        ranks = (
-            nodes.join(contrib, on="id", how="left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(__in__, 0)) div 100"
-                    )
-                ).cast("bigint").alias("rank_units"),
-            )
-            .localCheckpoint(eager=False)
+        return nodes.join(contrib, on="id", how="left").select(
+            "id",
+            (
+                F.lit(base)
+                + F.expr(f"({damping_pct} * coalesce(__in__, 0)) div 100")
+            ).cast("bigint").alias("rank_units"),
         )
-        # lazy checkpoints all materialize under the caller's final
-        # action (iteration i+1's plan reads iteration i's blocks, so
-        # none can be freed mid-loop) — track each so release_caches()
-        # drops the whole chain afterwards
-        track_checkpoint(ranks)
+
+    # fixed round count, no convergence probe: building each round's lazy
+    # checkpoint already runs its shuffle stages (AQE), and only the last
+    # round's result stage waits for the caller's action — the chain stays
+    # tracked until release_caches()
+    ranks = nodes.withColumn("rank_units", F.lit(UNIT).cast("bigint"))
+    ranks = iterate(ranks, _round, iterations)
     return ranks.withColumn(
         "rank", F.round(F.col("rank_units") / F.lit(float(UNIT)), 6)
     )

@@ -130,37 +130,53 @@ def test_cc_round_probe_materializes_lazy_checkpoint(spark):
     partition the probe job somehow skipped would have nothing left to
     recompute from once its parent's blocks are gone.  Pin that when the
     loop returns (no caller action yet) every still-tracked checkpoint
-    id already has blocks in RDD storage, for both algorithms."""
+    id already has blocks in RDD storage, for both algorithms — and that
+    superseded rounds were freed mid-loop, so after a multi-round
+    convergence (the 10-node chain) only the final round is left (label),
+    or the input checkpoint plus the final edges (star)."""
     import feathub_spark.common.caching as caching
     from feathub_spark.datapipe.dedup import dedup_clusters
 
-    pairs = spark.createDataFrame(
+    mixed = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 30, 2)] + [(1, 2), (3, 4)],
         "id_a long, id_b long",
     )
-    expected = None
-    for algo in ("label", "star"):
-        release_caches()
-        spark.catalog.clearCache()
-        out = dedup_clusters(pairs, algorithm=algo)
-        live = set(caching._CHECKPOINT_IDS)
-        assert live, "the loop should leave tracked checkpoints"
-        missing = live - _cached_rdd_ids(spark)
-        assert not missing, (
-            f"{algo}: tracked checkpoint RDDs {missing} not materialized "
-            "by the probe job"
-        )
-        got = {r.id: r.cluster_id for r in out.collect()}
-        if expected is None:
-            expected = got
-        assert got == expected
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    for pairs in (mixed, chain):
+        expected = None
+        for algo, most in (("label", 1), ("star", 2)):
+            release_caches()
+            spark.catalog.clearCache()
+            before = _cached_rdd_ids(spark)
+            out = dedup_clusters(pairs, algorithm=algo)
+            live = set(caching._CHECKPOINT_IDS)
+            assert live, "the loop should leave tracked checkpoints"
+            missing = live - _cached_rdd_ids(spark)
+            assert not missing, (
+                f"{algo}: tracked checkpoint RDDs {missing} not materialized "
+                "by the probe job"
+            )
+            assert len(live) <= most, f"{algo}: superseded rounds still tracked"
+            assert len(_cached_rdd_ids(spark) - before) <= most, (
+                f"{algo}: superseded rounds still stored"
+            )
+            got = {r.id: r.cluster_id for r in out.collect()}
+            if expected is None:
+                expected = got
+            assert got == expected
     release_caches()
 
 
 def test_iterative_operators_leave_no_checkpoint_residue(spark):
-    """dedup_clusters (label + star) and pagerank checkpoint per round;
-    after the caller's action + release_caches() the RDD storage must be
+    """dedup_clusters (label + star), pagerank and the distributed
+    bpe_train loop checkpoint per round; after the caller's action (or a
+    non-convergence raise) + release_caches() the RDD storage must be
     back to where it started (the round-10 bench-drift leak)."""
+    import pytest
+
+    from feathub_spark.datapipe.bpe import bpe_train
     from feathub_spark.datapipe.dedup import dedup_clusters
     from feathub_spark.datapipe.graph import pagerank
 
@@ -171,16 +187,47 @@ def test_iterative_operators_leave_no_checkpoint_residue(spark):
         [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (7, 8)],
         "id_a long, id_b long",
     )
+    chain10 = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    chain300 = spark.createDataFrame(
+        [(i, i + 1) for i in range(300)], "id_a long, id_b long"
+    )
+    docs = spark.createDataFrame(
+        [("low lower lowest newer newest wider",)] * 3
+        + [("the lowest newer tower",)],
+        "text string",
+    )
+
+    def unconverged(**kw):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_clusters(**kw)
+
+    def bpe_rows():
+        merges = bpe_train(docs, "text", n_merges=8, local_vocab_threshold=0)
+        # the driver-built merge table never reads the vocabulary, so
+        # bpe_train frees its last round before returning
+        assert not (_cached_rdd_ids(spark) - before), (
+            "bpe_train left its vocabulary stored after returning"
+        )
+        return merges.count()
+
     # build each pipeline only after the previous one was released —
     # release_caches() frees EVERY tracked checkpoint, including those of
     # a not-yet-consumed sibling pipeline (the documented strictness)
     for make in (
-        lambda: dedup_clusters(pairs),
-        lambda: dedup_clusters(pairs, algorithm="star"),
-        lambda: pagerank(pairs, iterations=3),
+        lambda: dedup_clusters(pairs).count(),
+        lambda: dedup_clusters(pairs, algorithm="star").count(),
+        lambda: pagerank(pairs, iterations=3).count(),
+        bpe_rows,
+        lambda: unconverged(pairs=chain10, max_iterations=2),
+        lambda: unconverged(
+            pairs=chain300, algorithm="star", max_iterations=1
+        ),
     ):
-        out = make()
-        assert out.count() > 0
+        rows = make()
+        # the two unconverged cases raise inside make() and return None
+        assert rows is None or rows > 0
         release_caches()
         spark.catalog.clearCache()
         assert not (_cached_rdd_ids(spark) - before), (
@@ -189,16 +236,14 @@ def test_iterative_operators_leave_no_checkpoint_residue(spark):
 
 
 def test_no_bare_persist_in_package():
-    """Every .persist( in feathub_spark/ must go through register_cache —
-    except dedup_clusters' edges handle, which runs its own actions and
-    unpersists before returning (a self-contained scope)."""
+    """Every .persist( in feathub_spark/ must go through register_cache."""
     out = subprocess.run(
         ["grep", "-rn", r"\.persist(", "feathub_spark/"],
         capture_output=True, text=True, cwd="/root/repo",
     ).stdout
     offenders = [
         line for line in out.splitlines()
-        if "common/caching.py" not in line and "dedup.py" not in line
+        if "common/caching.py" not in line
     ]
     assert not offenders, f"bare persist() outside the contract: {offenders}"
 
