@@ -3,15 +3,15 @@
 
 Fields are SequenceField(start, end) or RandomField(minv, maxv, length).
 Bounded iff number_of_rows is set or any field is a sequence.  Spark
-realization: spark.range(n) + deterministic column expressions (rand(seed)
-for random fields so results are reproducible per session).
+realization: row ids (spark.range(n) in batch, the rate source in streaming)
++ deterministic column expressions (``field_columns``).
 """
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence
+from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from feathub_spark.common.exceptions import FeathubError
 from feathub_spark.common import types as t
@@ -83,8 +83,11 @@ class DataGenSource(FeatureTable):
             number_of_rows if number_of_rows is not None else min(seq_lengths)
         )
 
-    def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        df = spark.range(self.number_of_rows)
+    def field_columns(self) -> List[Column]:
+        """One column per schema field, computed from a bigint ``id``
+        column.  Random values derive from xxhash64(id, seed + field
+        index), so a row's values depend on its id alone: not on the
+        partition count, nor on the micro-batch a streamed row lands in."""
         cols = []
         for i, (fname, ftype) in enumerate(
             zip(self.schema.field_names, self.schema.field_types)
@@ -94,22 +97,27 @@ class DataGenSource(FeatureTable):
             if isinstance(fc, SequenceField):
                 # wrap over the declared span: with an explicit
                 # number_of_rows larger than the sequence length, a bare
-                # start+id ran past the declared end — the streaming rate
-                # path already wraps (stream_builder.py), so batch matches
+                # start+id would run past the declared end
                 span = fc.end - fc.start + 1
                 col = (
                     F.lit(fc.start) + F.pmod(F.col("id"), F.lit(span))
                 ).cast(spark_t)
             else:
+                u = (
+                    F.abs(F.xxhash64(F.col("id"), F.lit(self.seed + i)))
+                    % F.lit(1_000_000)
+                ) / F.lit(1_000_000.0)
                 if ftype == t.String:
                     col = F.concat(
                         F.lit(f"{fname}_"),
-                        (F.rand(self.seed + i) * F.lit(10 ** fc.length)).cast("bigint"),
+                        (u * F.lit(10 ** fc.length)).cast("bigint"),
                     ).cast(spark_t)
                 else:
                     col = (
-                        F.lit(fc.minv)
-                        + F.rand(self.seed + i) * (F.lit(fc.maxv) - F.lit(fc.minv))
+                        F.lit(fc.minv) + u * (F.lit(fc.maxv) - F.lit(fc.minv))
                     ).cast(spark_t)
             cols.append(col.alias(fname))
-        return df.select(*cols)
+        return cols
+
+    def to_dataframe(self, spark: SparkSession) -> DataFrame:
+        return spark.range(self.number_of_rows).select(*self.field_columns())

@@ -4,12 +4,24 @@ Replicates the reference's compilation shape
 (processors/spark/dataframe_builder/spark_dataframe_builder.py:79-358):
 build-once memoization per named view; per view the phase order is
 
-  per-row transforms before the first join/window
+  DerivedFeatureView: per-row transforms before the first join/window
   → joins grouped by (right_table, keys)
   → over-windows grouped by OverWindowDescriptor
   → remaining per-row transforms
   → filter_expr
+  → output projection;
+
+  SlidingFeatureView: pre-window per-row transforms
+  → sliding window
+  → window-time column
+  → post-window per-row transforms
+  → filter_expr
   → output projection.
+
+The streaming compiler (streaming/stream_builder.py) is a subclass that
+keeps this order and overrides only the physical operators: ``_read_source``,
+``_join``, ``_over_windows``, ``_sliding_window`` and the temp-view
+registration.
 
 Everything is declarative DataFrame API so Catalyst supplies predicate
 pushdown, column pruning, constant folding and AQE; the only hand-built
@@ -24,7 +36,6 @@ from typing import Dict, List, Optional, Tuple
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from feathub_spark.common.exceptions import PlanError
 from feathub_spark.common.time_utils import event_time_sql
@@ -35,6 +46,7 @@ from feathub_spark.feature_views.feature import Feature
 from feathub_spark.feature_views.feature_view import FeatureView
 from feathub_spark.feature_views.sliding_feature_view import SlidingFeatureView
 from feathub_spark.feature_views.sql_feature_view import SqlFeatureView
+from feathub_spark.feature_views.transforms.agg_func import AggFunc
 from feathub_spark.feature_views.transforms.expression_transform import (
     ExpressionTransform,
 )
@@ -58,11 +70,14 @@ from feathub_spark.processors.spark.over_window_utils import (
     AggField,
     OverWindowDescriptor,
     evaluate_over_window,
+    evaluate_salted_bounded_over_window,
+    evaluate_salted_over_window,
 )
 from feathub_spark.processors.spark.sliding_window_utils import (
     SlidingAggField,
     evaluate_sliding_window,
 )
+from feathub_spark.processors.spark.skew_probe import resolve_salt_chunk_ms
 from feathub_spark.processors.spark.source_sink_utils import get_source_dataframe
 from feathub_spark.table.table_descriptor import TableDescriptor
 
@@ -113,16 +128,21 @@ class SparkDataFrameBuilder:
             df = self._build_sliding_feature_view(descriptor)
         elif isinstance(descriptor, DerivedFeatureView):
             df = self._build_derived_feature_view(descriptor)
-        elif isinstance(descriptor, SqlFeatureView):
-            df = self._build_sql_feature_view(descriptor)
         else:
-            df = get_source_dataframe(self._spark, descriptor)
+            df = self._read_source(descriptor)
         self._built[descriptor.name] = df
-        # Register for SqlFeatureView consumers.
-        df.drop(
-            *[c for c in df.columns if c in METADATA_COLS]
-        ).createOrReplaceTempView(descriptor.name)
+        self._register_temp_view(descriptor.name, df)
         return df
+
+    def _read_source(self, descriptor: TableDescriptor) -> DataFrame:
+        if isinstance(descriptor, SqlFeatureView):
+            return self._build_sql_feature_view(descriptor)
+        return get_source_dataframe(self._spark, descriptor)
+
+    def _register_temp_view(self, name: str, df: DataFrame) -> None:
+        """Register for SqlFeatureView consumers."""
+        df = df.drop(*[c for c in df.columns if c in METADATA_COLS])
+        df.createOrReplaceTempView(name)
 
     def _apply_row_feature(self, df: DataFrame, feature: Feature) -> DataFrame:
         """Apply a per-row (expression / pandas-UDF) feature.  Any other
@@ -131,7 +151,10 @@ class SparkDataFrameBuilder:
         declared dtype vanish from the output."""
         tr = feature.transform
         if isinstance(tr, ExpressionTransform):
-            return self._apply_expression(df, feature.name, tr.expr, feature.dtype)
+            return df.withColumn(
+                feature.name,
+                F.expr(to_spark_sql(tr.expr)).cast(to_spark_type(feature.dtype)),
+            )
         if isinstance(tr, PythonUdfTransform):
             return self._apply_python_udf(df, feature.name, tr, feature.dtype)
         raise PlanError(
@@ -139,13 +162,7 @@ class SparkDataFrameBuilder:
             "a per-row transform."
         )
 
-    # -- expression / udf -------------------------------------------------
-    def _apply_expression(
-        self, df: DataFrame, name: str, expr: str, dtype: DType
-    ) -> DataFrame:
-        sql = to_spark_sql(expr)
-        return df.withColumn(name, F.expr(sql).cast(to_spark_type(dtype)))
-
+    # -- udf ----------------------------------------------------------------
     def _apply_python_udf(
         self, df: DataFrame, name: str, tr: PythonUdfTransform, dtype: DType
     ) -> DataFrame:
@@ -178,10 +195,9 @@ class SparkDataFrameBuilder:
     def _build_derived_feature_view(self, view: DerivedFeatureView) -> DataFrame:
         source = view.get_resolved_source()
         df = self._get_df(source)
-        source_fields = [c for c in df.columns if c not in METADATA_COLS]
 
         joins: Dict[Tuple[str, Tuple[str, ...]], List[Feature]] = {}
-        windows: Dict[OverWindowDescriptor, List[Feature]] = {}
+        windows: List[Feature] = []
         late_features: List[Feature] = []
 
         for feature in view.get_resolved_features():
@@ -189,10 +205,8 @@ class SparkDataFrameBuilder:
             if isinstance(tr, (ExpressionTransform, PythonUdfTransform)):
                 if joins or windows:
                     late_features.append(feature)
-                elif isinstance(tr, ExpressionTransform):
-                    df = self._apply_expression(df, feature.name, tr.expr, feature.dtype)
                 else:
-                    df = self._apply_python_udf(df, feature.name, tr, feature.dtype)
+                    df = self._apply_row_feature(df, feature)
             elif isinstance(tr, JoinTransform):
                 if not feature.keys:
                     raise PlanError(
@@ -202,9 +216,7 @@ class SparkDataFrameBuilder:
                     feature
                 )
             elif isinstance(tr, OverWindowTransform):
-                windows.setdefault(
-                    OverWindowDescriptor.from_transform(tr), []
-                ).append(feature)
+                windows.append(feature)
             else:
                 raise PlanError(
                     f"DerivedFeatureView does not support {type(tr).__name__}."
@@ -226,12 +238,6 @@ class SparkDataFrameBuilder:
                     f"Cannot point-in-time join with {table_name!r}: "
                     "right table has no timestamp field."
                 )
-            if view.is_bounded() and not right_desc.is_bounded():
-                raise PlanError(
-                    "Joining a bounded left table with an unbounded right table "
-                    "is not supported."
-                )
-            right_df = self._get_df(right_desc)
             # keyed by OUTPUT name: two features may read the same right
             # column (e.g. map-entry joins under different keys)
             right_fields: Dict[str, str] = {}
@@ -245,35 +251,64 @@ class SparkDataFrameBuilder:
                 right_fields[f_.name] = f_.transform.feature_name
                 if f_.transform.map_key is not None:
                     map_entries[f_.name] = f_.transform.map_key
-            valid_time_ms, defaults = _expiry_of(right_desc, features)
-            df = temporal_join(
-                df,
-                right_df,
-                list(keys),
-                right_fields,
-                valid_time_ms=valid_time_ms,
-                defaults=defaults,
-                salt_chunk_ms=self._asof_salt_chunk_ms,
-                probe_cache=self._skew_probe_cache,
-                decisions=self.salt_decisions,
-            )
+            df = self._join(df, view, right_desc, list(keys), right_fields, features)
             for out_name, key in map_entries.items():
                 df = df.withColumn(out_name, F.col(out_name)[F.lit(key)])
 
-        # over windows, grouped per descriptor — one WindowSpec each
-        for desc, features in windows.items():
+        if windows:
             if df.schema and EVENT_TIME_COL not in df.columns:
                 raise PlanError(
                     f"Over-window features in {view.name!r} require the source "
                     "to declare a timestamp_field."
                 )
-            fields = [AggField.from_feature(f_) for f_ in features]
-            from feathub_spark.feature_views.transforms.agg_func import AggFunc
-            from feathub_spark.processors.spark.over_window_utils import (
-                evaluate_salted_bounded_over_window,
-                evaluate_salted_over_window,
-            )
+            df = self._over_windows(df, view, windows)
 
+        for feature in late_features:
+            df = self._apply_row_feature(df, feature)
+        return self._filter_and_project(df, view)
+
+    def _join(
+        self,
+        df: DataFrame,
+        view: DerivedFeatureView,
+        right_desc: TableDescriptor,
+        keys: List[str],
+        right_fields: Dict[str, str],
+        features: List[Feature],
+    ) -> DataFrame:
+        """Point-in-time join of ``right_fields`` (output name -> right
+        column) from ``right_desc`` onto ``df``."""
+        if view.is_bounded() and not right_desc.is_bounded():
+            raise PlanError(
+                "Joining a bounded left table with an unbounded right table "
+                "is not supported."
+            )
+        right_df = self._get_df(right_desc)
+        valid_time_ms, defaults = _expiry_of(right_desc, features)
+        return temporal_join(
+            df,
+            right_df,
+            keys,
+            right_fields,
+            valid_time_ms=valid_time_ms,
+            defaults=defaults,
+            salt_chunk_ms=self._asof_salt_chunk_ms,
+            probe_cache=self._skew_probe_cache,
+            decisions=self.salt_decisions,
+        )
+
+    def _over_windows(
+        self, df: DataFrame, view: DerivedFeatureView, features: List[Feature]
+    ) -> DataFrame:
+        """Over-window features, grouped per descriptor — one WindowSpec
+        each."""
+        windows: Dict[OverWindowDescriptor, List[Feature]] = {}
+        for f_ in features:
+            windows.setdefault(
+                OverWindowDescriptor.from_transform(f_.transform), []
+            ).append(f_)
+        for desc, group in windows.items():
+            fields = [AggField.from_feature(f_) for f_ in group]
             decomposable = all(
                 f_.agg_func
                 in (AggFunc.SUM, AggFunc.COUNT, AggFunc.AVG, AggFunc.MIN,
@@ -282,10 +317,6 @@ class SparkDataFrameBuilder:
             )
             chunk_ms = None
             if self._salt_chunk_ms is not None and desc.limit is None and decomposable:
-                from feathub_spark.processors.spark.skew_probe import (
-                    resolve_salt_chunk_ms,
-                )
-
                 chunk_ms = resolve_salt_chunk_ms(
                     self._salt_chunk_ms,
                     df,
@@ -311,20 +342,11 @@ class SparkDataFrameBuilder:
                 )
             else:
                 df = evaluate_over_window(df, desc, fields)
-            for f_ in features:
+            for f_ in group:
                 df = df.withColumn(
                     f_.name, F.col(f_.name).cast(to_spark_type(f_.dtype))
                 )
-
-        for feature in late_features:
-            df = self._apply_row_feature(df, feature)
-
-        if view.filter_expr is not None:
-            df = df.filter(F.expr(to_spark_sql(view.filter_expr)))
-
-        output_fields = view.get_output_fields()
-        keep = [c for c in df.columns if c in METADATA_COLS]
-        return df.select(*output_fields, *keep)
+        return df
 
     # -- sliding feature view ---------------------------------------------
     def _build_sliding_feature_view(self, view: SlidingFeatureView) -> DataFrame:
@@ -339,16 +361,7 @@ class SparkDataFrameBuilder:
         for feature in view.pre_sliding_features():
             df = self._apply_row_feature(df, feature)
 
-        sliding = view.sliding_features()
-        fields = [SlidingAggField.from_feature(f_) for f_ in sliding]
-        df = evaluate_sliding_window(
-            df,
-            view.group_by_keys,
-            view.step_size_ms,
-            fields,
-            view.enable_empty_window_output,
-            view.skip_same_window_output,
-        )
+        df = self._sliding_window(df, view)
 
         # window_time feature per the view's timestamp_format.
         df = df.withColumn(
@@ -357,13 +370,26 @@ class SparkDataFrameBuilder:
 
         for feature in view.post_sliding_features():
             df = self._apply_row_feature(df, feature)
+        return self._filter_and_project(df, view)
 
+    def _sliding_window(self, df: DataFrame, view: SlidingFeatureView) -> DataFrame:
+        """The view's sliding features per (keys, window end), with
+        WINDOW_TIME_MS_COL set."""
+        fields = [SlidingAggField.from_feature(f_) for f_ in view.sliding_features()]
+        return evaluate_sliding_window(
+            df,
+            view.group_by_keys,
+            view.step_size_ms,
+            fields,
+            view.enable_empty_window_output,
+            view.skip_same_window_output,
+        )
+
+    def _filter_and_project(self, df: DataFrame, view: FeatureView) -> DataFrame:
         if view.filter_expr is not None:
             df = df.filter(F.expr(to_spark_sql(view.filter_expr)))
-
-        output_fields = view.get_output_fields()
         keep = [c for c in df.columns if c in METADATA_COLS]
-        return df.select(*output_fields, *keep)
+        return df.select(*view.get_output_fields(), *keep)
 
     # -- sql feature view --------------------------------------------------
     def _build_sql_feature_view(self, view: SqlFeatureView) -> DataFrame:

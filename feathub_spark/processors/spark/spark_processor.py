@@ -171,9 +171,7 @@ class SparkProcessor:
 
         if not descriptor.is_resolved():
             descriptor = self.registry.build_features(descriptor)[0]
-        builder = SparkStreamBuilder(self.spark, self.registry)
-        df = builder.get_stream_dataframe(descriptor)
-        return df.drop(*[c for c in df.columns if c in METADATA_COLS])
+        return SparkStreamBuilder(self.spark, self.registry).build(descriptor)
 
     def materialize_stream(
         self,

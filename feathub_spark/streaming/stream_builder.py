@@ -1,68 +1,96 @@
 """Structured Streaming compilation path.
 
-Stream-batch unification per the reference's design: the same descriptors
-compile either to batch DataFrames (processors/spark/dataframe_builder.py)
-or, here, to streaming DataFrames:
+Stream-batch unification: ``SparkStreamBuilder`` is the batch
+``SparkDataFrameBuilder`` with a streaming physical layer.  The phase order
+of a view compile, its per-row lowering (expressions and Python UDFs),
+validations, filter and output projection are the batch builder's; this
+subclass overrides only what runs differently on a stream:
 
-- sources → ``spark.readStream`` (file directory, Kafka, rate for datagen);
-- watermark = event_time - (max_out_of_orderness + 1ms), mirroring
-  source_sink_utils_common.py:95-103;
-- per-row transforms/filters reuse the exact batch expressions;
-- SlidingFeatureView → ``groupBy(window(ts, size, step))`` windowed
-  aggregation in append mode (the no-empty-emission subset of the batch
-  semantics; empty-window defaults and skip-same-output need a custom
-  stateful operator — see NOTES in SlidingFeatureView docs — and are
-  documented divergences in streaming mode);
-- sinks → native streaming writers where they exist (kafka, file, memory,
-  noop), ``foreachBatch`` + the batch sink writer otherwise.
+- sources → ``spark.readStream`` (file directory, Kafka, rate for datagen)
+  with watermark = event_time - (max_out_of_orderness + 1ms), mirroring
+  source_sink_utils_common.py:95-103; nothing is registered as a temp view,
+  so batch ``SqlFeatureView`` consumers keep reading batch tables;
+- as-of joins → ``stateful_asof_join``;
+- over windows → ``stateful_over_window``, one operator per group_by_keys;
+- sliding windows → the stateful over-window operator for infinite
+  windows; ``stateful_sliding_window`` (empty-window defaults, skip-same
+  output, several window sizes sharing state, ``limit``, VALUE_COUNTS);
+  otherwise Spark's native ``groupBy(window(ts, size, step))`` aggregation
+  in append mode.
+
+Sinks → native streaming writers where they exist (kafka, file, noop),
+``foreachBatch`` + the batch sink writer otherwise.
 """
 
 from __future__ import annotations
 
 import os
 from datetime import timedelta
-from typing import Optional
+from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from feathub_spark.common.exceptions import PlanError
+from feathub_spark.common.time_utils import timedelta_ms
 from feathub_spark.common.types import to_spark_type
-from feathub_spark.dsl.parser import to_spark_sql
 from feathub_spark.feature_tables.sources.connector_sources import KafkaSource
 from feathub_spark.feature_tables.sources.datagen_source import DataGenSource
 from feathub_spark.feature_tables.sources.file_system_source import FileSystemSource
 from feathub_spark.feature_views.derived_feature_view import DerivedFeatureView
 from feathub_spark.feature_views.feature import Feature
+from feathub_spark.feature_views.feature_view import FeatureView
 from feathub_spark.feature_views.sliding_feature_view import SlidingFeatureView
-from feathub_spark.feature_views.transforms.expression_transform import (
-    ExpressionTransform,
+from feathub_spark.feature_views.transforms.agg_func import AggFunc
+from feathub_spark.feature_views.transforms.over_window_transform import (
+    OverWindowTransform,
+)
+from feathub_spark.feature_views.transforms.python_udf_transform import (
+    PythonUdfTransform,
 )
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL, WINDOW_TIME_MS_COL
-from feathub_spark.processors.spark.source_sink_utils import _parse_kafka_value
+from feathub_spark.processors.spark.dataframe_builder import SparkDataFrameBuilder
+from feathub_spark.processors.spark.sliding_window_utils import (
+    SlidingAggField,
+    _default_col,
+)
+from feathub_spark.processors.spark.source_sink_utils import (
+    _parse_kafka_value,
+    append_event_time,
+)
+from feathub_spark.streaming.stateful_asof_join import stateful_asof_join
+from feathub_spark.streaming.stateful_over import stateful_over_window
+from feathub_spark.streaming.stateful_sliding import stateful_sliding_window
 from feathub_spark.table.table_descriptor import TableDescriptor
 
 
-def _watermark_delay_ms(source) -> int:
-    from feathub_spark.common.time_utils import timedelta_ms
-
-    ooo = getattr(source, "max_out_of_orderness", timedelta(0)) or timedelta(0)
+def _watermark_delay_ms(descriptor: TableDescriptor) -> int:
+    """max_out_of_orderness + 1ms of a source, or of a view's source."""
+    if isinstance(descriptor, FeatureView):
+        descriptor = descriptor.get_resolved_source()
+    ooo = getattr(descriptor, "max_out_of_orderness", None) or timedelta(0)
     return timedelta_ms(ooo) + 1
 
 
-class SparkStreamBuilder:
-    def __init__(self, spark: SparkSession, registry) -> None:
-        self._spark = spark
-        self._registry = registry
+def _watermarked(df: DataFrame, delay_ms: int) -> DataFrame:
+    """``df`` with a watermark on its event-time column.  ``withWatermark``
+    tags the column's metadata with ``spark.watermarkDelayMs``; a stateful
+    operator's output column no longer carries the tag (yet a following
+    stateful operator's event-time timeout needs a watermarked input), and
+    re-watermarking a tagged column fails ("Redefining watermark is
+    disallowed").  So the tag alone decides."""
+    if (
+        EVENT_TIME_COL not in df.columns
+        or "spark.watermarkDelayMs" in df.schema[EVENT_TIME_COL].metadata
+    ):
+        return df
+    return df.withWatermark(EVENT_TIME_COL, f"{delay_ms} milliseconds")
 
-    # -- sources ---------------------------------------------------------
-    def get_stream_dataframe(self, descriptor: TableDescriptor) -> DataFrame:
-        if isinstance(descriptor, SlidingFeatureView):
-            return self._build_sliding(descriptor)
-        if isinstance(descriptor, DerivedFeatureView):
-            return self._build_derived(descriptor)
-        return self._read_stream_source(descriptor)
 
-    def _read_stream_source(self, source: TableDescriptor) -> DataFrame:
+class SparkStreamBuilder(SparkDataFrameBuilder):
+    def _register_temp_view(self, name: str, df: DataFrame) -> None:
+        pass
+
+    def _read_source(self, source: TableDescriptor) -> DataFrame:
         if isinstance(source, FileSystemSource):
             if source.schema is None:
                 raise PlanError("Streaming file sources need a declared schema.")
@@ -93,12 +121,8 @@ class SparkStreamBuilder:
                 kreader = kreader.option(k, v)
             df = _parse_kafka_value(kreader.load(), source)
         elif isinstance(source, DataGenSource):
-            from feathub_spark.common import types as _t
-            from feathub_spark.feature_tables.sources.datagen_source import (
-                RandomField,
-                SequenceField,
-            )
-
+            # rand(seed) is nondeterministic per micro-batch; field_columns
+            # derives every value from the row id instead
             rate = (
                 self._spark.readStream.format("rate")
                 .option("rowsPerSecond", str(source.rows_per_second))
@@ -107,362 +131,155 @@ class SparkStreamBuilder:
             df = rate.select(F.col("value").alias("id"))
             if source.number_of_rows is not None:
                 df = df.filter(F.col("id") < source.number_of_rows)
-            # Same field semantics as the batch DataGenSource.to_dataframe:
-            # sequences offset from start (wrapping over their span),
-            # random fields uniform in [minv, maxv) / prefixed strings.
-            # rand(seed) is nondeterministic per micro-batch, so randomness
-            # derives from xxhash64(id, seed+i) — deterministic per row id.
-            cols = []
-            for i, (fname, ftype) in enumerate(
-                zip(source.schema.field_names, source.schema.field_types)
-            ):
-                fc = source.field_configs.get(fname, RandomField())
-                spark_t = to_spark_type(ftype)
-                if isinstance(fc, SequenceField):
-                    span = fc.end - fc.start + 1
-                    col = (
-                        F.lit(fc.start) + F.pmod(F.col("id"), F.lit(span))
-                    ).cast(spark_t)
-                else:
-                    u = (
-                        F.abs(F.xxhash64(F.col("id"), F.lit(source.seed + i)))
-                        % F.lit(1_000_000)
-                    ) / F.lit(1_000_000.0)
-                    if ftype == _t.String:
-                        col = F.concat(
-                            F.lit(f"{fname}_"),
-                            (u * F.lit(10 ** fc.length)).cast("bigint"),
-                        ).cast(spark_t)
-                    else:
-                        col = (
-                            F.lit(fc.minv) + u * (F.lit(fc.maxv) - F.lit(fc.minv))
-                        ).cast(spark_t)
-                cols.append(col.alias(fname))
-            df = df.select(*cols)
+            df = df.select(*source.field_columns())
         else:
             raise PlanError(
-                f"Unsupported streaming source {type(source).__name__}."
+                f"{type(source).__name__} {source.name!r} has no streaming "
+                "reader; it needs the batch path."
             )
-        return self._append_event_time_and_watermark(df, source)
-
-    def _append_event_time_and_watermark(self, df: DataFrame, source) -> DataFrame:
-        if source.timestamp_field is None:
-            return df
-        from feathub_spark.processors.spark.source_sink_utils import append_event_time
-
         df = append_event_time(df, source)
-        delay_ms = _watermark_delay_ms(source)
-        return df.withWatermark(EVENT_TIME_COL, f"{delay_ms} milliseconds")
+        return _watermarked(df, _watermark_delay_ms(source))
 
-    # -- derived view (expressions + stateful over-windows) ---------------
-    def _build_derived(self, view: DerivedFeatureView) -> DataFrame:
-        from feathub_spark.feature_views.transforms.join_transform import (
-            JoinTransform,
+    def _join(
+        self,
+        df: DataFrame,
+        view: DerivedFeatureView,
+        right_desc: TableDescriptor,
+        keys: List[str],
+        right_fields: Dict[str, str],
+        features: List[Feature],
+    ) -> DataFrame:
+        # the union feeding applyInPandasWithState needs BOTH sides
+        # watermarked or Spark rejects the event-time timeout plan
+        right_df = self._get_df(right_desc)
+        return stateful_asof_join(
+            _watermarked(df, _watermark_delay_ms(view)),
+            _watermarked(right_df, _watermark_delay_ms(right_desc)),
+            keys,
+            right_fields,
         )
-        from feathub_spark.feature_views.transforms.over_window_transform import (
-            OverWindowTransform,
-        )
-        from feathub_spark.streaming.stateful_asof_join import stateful_asof_join
-        from feathub_spark.streaming.stateful_over import stateful_over_window
 
-        source = view.get_resolved_source()
-        df = self.get_stream_dataframe(source)
+    def _over_windows(
+        self, df: DataFrame, view: DerivedFeatureView, features: List[Feature]
+    ) -> DataFrame:
+        groups: Dict[tuple, List[Feature]] = {}
+        for f_ in features:
+            groups.setdefault(tuple(f_.transform.group_by_keys), []).append(f_)
+        for group in groups.values():
+            df = _watermarked(df, _watermark_delay_ms(view))
+            df = stateful_over_window(df, group)
+        return df
 
-        # reference phase order: leading per-row exprs → joins → windows → rest
-        join_groups: dict = {}
-        window_groups: dict = {}
-        late_features = []
-        for feature in view.get_resolved_features():
-            tr = feature.transform
-            if isinstance(tr, ExpressionTransform):
-                if window_groups or join_groups:
-                    late_features.append(feature)
-                else:
-                    df = df.withColumn(
-                        feature.name,
-                        F.expr(to_spark_sql(tr.expr)).cast(
-                            to_spark_type(feature.dtype)
-                        ),
-                    )
-            elif isinstance(tr, JoinTransform):
-                join_groups.setdefault(
-                    (tr.table_name, tuple(feature.keys or ())), []
-                ).append(feature)
-            elif isinstance(tr, OverWindowTransform):
-                window_groups.setdefault(tuple(tr.group_by_keys), []).append(
-                    feature
-                )
-            else:
-                raise PlanError(
-                    f"Streaming DerivedFeatureView supports per-row expressions, "
-                    f"as-of joins and over-windows; {type(tr).__name__} needs "
-                    "the batch path."
-                )
-
-        # a stateful stage rebuilds EVENT_TIME_COL without watermark
-        # metadata, but the NEXT stateful stage's EventTimeTimeout needs a
-        # watermarked column in its child plan — re-attach the source's
-        # watermark between stateful stages
-        source_delay_ms = _watermark_delay_ms(view.get_resolved_source())
-        stateful_ran = False
-
-        def _rewatermark(frame: DataFrame) -> DataFrame:
-            if not stateful_ran:
-                return frame
-            return frame.withWatermark(
-                EVENT_TIME_COL, f"{source_delay_ms} milliseconds"
-            )
-
-        for (table_name, jkeys), group in join_groups.items():
-            right_desc = self._registry.get_features(table_name)
-            right_df = self.get_stream_dataframe(right_desc)
-            # a right table that is itself a stateful view loses its
-            # watermark (the stateful operator rebuilds EVENT_TIME_COL);
-            # the union feeding applyInPandasWithState needs BOTH sides
-            # watermarked or Spark rejects the event-time timeout plan.
-            # Re-watermark ONLY when the plan has none — redefining an
-            # existing watermark is a streaming-query error.
-            if EVENT_TIME_COL in right_df.columns and (
-                "EventTimeWatermark"
-                not in right_df._jdf.queryExecution().analyzed().toString()
-            ):
-                rsrc = (
-                    right_desc.get_resolved_source()
-                    if hasattr(right_desc, "get_resolved_source")
-                    else right_desc
-                )
-                right_df = right_df.withWatermark(
-                    EVENT_TIME_COL, f"{_watermark_delay_ms(rsrc)} milliseconds"
-                )
-            right_fields = {
-                f.name: f.transform.feature_name for f in group
-            }
-            df = stateful_asof_join(
-                _rewatermark(df), right_df, list(jkeys), right_fields
-            )
-            stateful_ran = True
-            for f_ in group:
-                if f_.transform.map_key is not None:
-                    df = df.withColumn(
-                        f_.name, F.col(f_.name)[F.lit(f_.transform.map_key)]
-                    )
-
-        for _, group in window_groups.items():
-            df = stateful_over_window(_rewatermark(df), group)
-            stateful_ran = True
-
-        for feature in late_features:
-            df = df.withColumn(
-                feature.name,
-                F.expr(to_spark_sql(feature.transform.expr)).cast(
-                    to_spark_type(feature.dtype)
-                ),
-            )
-
-        if view.filter_expr is not None:
-            df = df.filter(F.expr(to_spark_sql(view.filter_expr)))
-        output_fields = view.get_output_fields()
-        keep = [c for c in df.columns if c == EVENT_TIME_COL]
-        return df.select(*output_fields, *keep)
-
-    # -- sliding windows (windowed-agg subset) ----------------------------
-    def _build_sliding(self, view: SlidingFeatureView) -> DataFrame:
-        source = view.get_resolved_source()
-        df = self.get_stream_dataframe(source)
-
-        for feature in view.pre_sliding_features():
-            tr = feature.transform
-            if isinstance(tr, ExpressionTransform):
-                df = df.withColumn(
-                    feature.name,
-                    F.expr(to_spark_sql(tr.expr)).cast(to_spark_type(feature.dtype)),
-                )
-
+    def _sliding_window(self, df: DataFrame, view: SlidingFeatureView) -> DataFrame:
+        df = _watermarked(df, _watermark_delay_ms(view))
         sliding = view.sliding_features()
-        step_ms = view.step_size_ms
-        window_sizes = {f.transform.window_size_ms for f in sliding}
-
-        if any(f.transform.is_infinite for f in sliding):
+        if any(f_.transform.is_infinite for f_ in sliding):
             # window_size == step_size == 0: infinite window, one emission
             # per input row → the stateful over-window operator with
             # unbounded frames (same mapping as the batch planner).
-            from feathub_spark.feature_views.transforms.over_window_transform import (
-                OverWindowTransform,
-            )
-            from feathub_spark.streaming.stateful_over import stateful_over_window
-
-            over_features = []
-            for f_ in sliding:
-                tr = f_.transform
-                of = Feature(
+            over_features = [
+                Feature(
                     f_.name,
                     transform=OverWindowTransform(
-                        tr.expr,
-                        tr.agg_func,
-                        group_by_keys=tr.group_by_keys,
-                        filter_expr=tr.filter_expr,
-                        limit=tr.limit,
+                        f_.transform.expr,
+                        f_.transform.agg_func,
+                        group_by_keys=f_.transform.group_by_keys,
+                        filter_expr=f_.transform.filter_expr,
+                        limit=f_.transform.limit,
                     ),
                     dtype=f_.dtype,
                 )
-                over_features.append(of)
-            from feathub_spark.processors.spark.dataframe_builder import (
-                _window_time_col,
-            )
-
-            result = stateful_over_window(df, over_features)
-            result = result.withColumn(
+                for f_ in sliding
+            ]
+            return stateful_over_window(df, over_features).withColumn(
                 WINDOW_TIME_MS_COL, F.unix_millis(F.col(EVENT_TIME_COL))
-            ).withColumn(
-                view.timestamp_field, _window_time_col(view.timestamp_format)
             )
-            for feature in view.post_sliding_features():
-                ptr = feature.transform
-                if isinstance(ptr, ExpressionTransform):
-                    result = result.withColumn(
-                        feature.name,
-                        F.expr(to_spark_sql(ptr.expr)).cast(
-                            to_spark_type(feature.dtype)
-                        ),
-                    )
-            if view.filter_expr is not None:
-                result = result.filter(F.expr(to_spark_sql(view.filter_expr)))
-            return result.select(*view.get_output_fields())
-
-        needs_stateful = (
+        fields = [SlidingAggField.from_feature(f_) for f_ in sliding]
+        if (
             view.enable_empty_window_output
             or view.skip_same_window_output
-            or len(window_sizes) > 1
-            or any(f.transform.limit is not None for f in sliding)
-            or any(
-                f.transform.agg_func.name in ("VALUE_COUNTS",) for f in sliding
-            )
-        )
-        if needs_stateful:
+            or len({f_.window_ms for f_ in fields}) > 1
+            or any(f_.limit is not None for f_ in fields)
+            or any(f_.agg_func == AggFunc.VALUE_COUNTS for f_ in fields)
+        ):
             # Full semantics (empty-window defaults, skip-same, multi-size
             # shared state) → the custom stateful operator.
-            from feathub_spark.streaming.stateful_sliding import (
-                stateful_sliding_window,
-            )
-
-            result = stateful_sliding_window(df, view)
-            from feathub_spark.processors.spark.dataframe_builder import (
-                _window_time_col,
-            )
-
-            result = result.withColumn(
-                view.timestamp_field, _window_time_col(view.timestamp_format)
-            )
-            for feature in view.post_sliding_features():
-                tr = feature.transform
-                if isinstance(tr, ExpressionTransform):
-                    result = result.withColumn(
-                        feature.name,
-                        F.expr(to_spark_sql(tr.expr)).cast(
-                            to_spark_type(feature.dtype)
-                        ),
-                    )
-            if view.filter_expr is not None:
-                result = result.filter(F.expr(to_spark_sql(view.filter_expr)))
-            return result.select(*view.get_output_fields())
-
-        window_ms = window_sizes.pop()
-        keys = view.group_by_keys
-
-        aggs = []
-        for f_ in sliding:
-            tr = f_.transform
-            value_sql = to_spark_sql(tr.expr)
-            if tr.filter_expr:
-                value_sql = (
-                    f"CASE WHEN {to_spark_sql(tr.filter_expr)} THEN {value_sql} END"
+            out = stateful_sliding_window(df, view)
+            if any(
+                isinstance(f_.transform, PythonUdfTransform)
+                for f_ in view.get_resolved_features()
+            ):
+                # an Arrow UDF's input must be UnsafeRows, which the
+                # stateful operator does not emit: a column the optimizer
+                # cannot fold away (the emitted window time is never NULL)
+                # puts a projection in between
+                out = out.withColumn(
+                    WINDOW_TIME_MS_COL,
+                    F.coalesce(F.col(WINDOW_TIME_MS_COL), F.lit(0).cast("bigint")),
                 )
-            # COUNT counts filter-passing ROWS (incl. NULL values) and
-            # SUM/COUNT default to 0 on empty/all-filtered windows —
-            # matching the batch evaluator's row_gate_sql/_default_col
-            # golden semantics exactly (sliding_window_utils.py:106-118)
-            gate_sql = (
-                "1" if not tr.filter_expr
-                else f"CASE WHEN {to_spark_sql(tr.filter_expr)} THEN 1 END"
-            )
-            agg_name = tr.agg_func.name
-            if agg_name == "AVG":
-                col = F.expr(f"avg({value_sql})")
-            elif agg_name == "SUM":
-                col = F.coalesce(
-                    F.expr(f"sum({value_sql})"),
-                    F.lit(0).cast(to_spark_type(f_.dtype)),
-                )
-            elif agg_name in ("COUNT", "ROW_NUMBER"):
-                col = F.expr(f"count({gate_sql})")
-            elif agg_name == "MAX":
-                col = F.expr(f"max({value_sql})")
-            elif agg_name == "MIN":
-                col = F.expr(f"min({value_sql})")
-            elif agg_name in ("FIRST_VALUE", "LAST_VALUE"):
-                # the ORDERING key is gated, not the value: min_by/max_by
-                # ignore NULL-ordered rows, so filtered-out rows never
-                # win the slot (an ungated ordering key let a filtered
-                # row win and emit NULL where batch emits the first/last
-                # PASSING value)
-                ord_sql = (
-                    f"CASE WHEN {gate_sql} IS NOT NULL "
-                    f"THEN unix_millis(`{EVENT_TIME_COL}`) END"
-                    if tr.filter_expr
-                    else f"unix_millis(`{EVENT_TIME_COL}`)"
-                )
-                fn = "min_by" if agg_name == "FIRST_VALUE" else "max_by"
-                raw_sql = to_spark_sql(tr.expr)
-                col = F.expr(f"{fn}({raw_sql}, {ord_sql})")
-            elif agg_name == "COLLECT_LIST":
-                # struct-wrapped so NULL VALUES survive (collect_list
-                # drops bare NULL elements; batch semantics include
-                # them), sorted by event time for deterministic order
-                raw_sql = to_spark_sql(tr.expr)
-                wrap = (
-                    f"CASE WHEN {gate_sql} IS NOT NULL THEN "
-                    f"struct(unix_millis(`{EVENT_TIME_COL}`) AS o, "
-                    f"({raw_sql}) AS v) END"
-                    if tr.filter_expr
-                    else f"struct(unix_millis(`{EVENT_TIME_COL}`) AS o, "
-                    f"({raw_sql}) AS v)"
-                )
-                col = F.expr(
-                    f"transform(array_sort(collect_list({wrap})), s -> s.v)"
-                )
-            else:
-                raise PlanError(f"Streaming sliding agg {agg_name} unsupported.")
-            aggs.append(col.cast(to_spark_type(f_.dtype)).alias(f_.name))
-
-        window_col = F.window(
-            F.col(EVENT_TIME_COL),
-            f"{window_ms} milliseconds",
-            f"{step_ms} milliseconds",
+            return out
+        return _native_sliding_window(
+            df, view.group_by_keys, view.step_size_ms, fields
         )
-        grouped = df.groupBy(window_col.alias("__w__"), *[F.col(k) for k in keys]).agg(
-            *aggs
-        )
-        result = grouped.withColumn(
+
+
+def _gated(field: SlidingAggField, sql: str) -> str:
+    """``sql`` on the rows that pass the field's filter, NULL elsewhere."""
+    if field.filter_sql is None:
+        return sql
+    return f"CASE WHEN {field.row_gate_sql()} IS NOT NULL THEN {sql} END"
+
+
+def _native_sliding_window(
+    df: DataFrame, keys: List[str], step_ms: int, fields: List[SlidingAggField]
+) -> DataFrame:
+    """One window size and no emission flags: Spark's own windowed
+    aggregation, with the batch evaluator's value / row-gate lowering and
+    empty-window defaults (sliding_window_utils.py)."""
+    ms_sql = f"unix_millis(`{EVENT_TIME_COL}`)"
+    aggs = []
+    for f_ in fields:
+        a = f_.agg_func
+        if a == AggFunc.AVG:
+            col = F.expr(f"avg({f_.value_sql()})")
+        elif a == AggFunc.SUM:
+            col = F.expr(f"sum({f_.value_sql()})")
+        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
+            col = F.expr(f"count({f_.row_gate_sql()})")
+        elif a in (AggFunc.MAX, AggFunc.MIN):
+            col = F.expr(f"{a.name.lower()}({f_.value_sql()})")
+        elif a in (AggFunc.FIRST_VALUE, AggFunc.LAST_VALUE):
+            # the ORDERING key is gated, not the value: min_by/max_by
+            # ignore NULL-ordered rows, so a filtered-out row never wins
+            # the slot and emits NULL where batch emits the first/last
+            # PASSING value
+            order = _gated(f_, ms_sql)
+            fn = "min_by" if a == AggFunc.FIRST_VALUE else "max_by"
+            col = F.expr(f"{fn}({f_.expr_sql}, {order})")
+        else:  # COLLECT_LIST
+            # struct-wrapped so NULL VALUES survive (collect_list drops
+            # bare NULL elements; batch semantics include them), sorted
+            # by event time for a deterministic order
+            pair = _gated(f_, f"struct({ms_sql} AS o, ({f_.expr_sql}) AS v)")
+            col = F.expr(
+                f"transform(array_sort(collect_list({pair})), s -> s.v)"
+            )
+        col = _default_col(f_, col).cast(to_spark_type(f_.dtype))
+        aggs.append(col.alias(f_.name))
+
+    window = F.window(
+        F.col(EVENT_TIME_COL),
+        f"{fields[0].window_ms} milliseconds",
+        f"{step_ms} milliseconds",
+    )
+    return (
+        df.groupBy(window.alias("__w__"), *[F.col(k) for k in keys])
+        .agg(*aggs)
+        .withColumn(
             WINDOW_TIME_MS_COL, F.unix_millis(F.col("__w__.end")) - F.lit(1)
         )
-        from feathub_spark.processors.spark.dataframe_builder import _window_time_col
-
-        result = result.withColumn(
-            view.timestamp_field, _window_time_col(view.timestamp_format)
-        )
-
-        for feature in view.post_sliding_features():
-            tr = feature.transform
-            if isinstance(tr, ExpressionTransform):
-                result = result.withColumn(
-                    feature.name,
-                    F.expr(to_spark_sql(tr.expr)).cast(to_spark_type(feature.dtype)),
-                )
-
-        if view.filter_expr is not None:
-            result = result.filter(F.expr(to_spark_sql(view.filter_expr)))
-        output_fields = view.get_output_fields()
-        return result.select(*output_fields)
+        .drop("__w__")
+    )
 
 
 def _default_stream_checkpoint_dir(query_name, ident: str) -> str:
@@ -560,76 +377,63 @@ def write_stream(
     from feathub_spark.feature_tables.sinks.misc_sinks import BlackHoleSink
     from feathub_spark.processors.spark.source_sink_utils import insert_into_sink
 
+    if isinstance(sink, KafkaSink):
+        # keyed records like the batch Kafka writer (key-based
+        # partitioning / log compaction must survive a batch->streaming
+        # switch)
+        keys = descriptor.keys if descriptor is not None else None
+        value = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+        if keys:
+            key = F.to_json(F.struct(*[F.col(k) for k in keys]))
+            df = df.select(key.alias("key"), value.alias("value"))
+        else:
+            df = df.select(value.alias("value"))
+
     writer = df.writeStream.outputMode(output_mode)
     if query_name:
         writer = writer.queryName(query_name)
+    derived_ckpt = None
+    if checkpoint_dir is None and isinstance(sink, (FileSystemSink, KafkaSink)):
+        # file and Kafka sinks REQUIRE a checkpointLocation (Spark only
+        # auto-creates temp checkpoints for console/noop/memory/
+        # foreachBatch): named-stable / unnamed-unique default, and a
+        # second live named query onto a derived path is refused
+        if isinstance(sink, KafkaSink):
+            checkpoint_dir = _default_kafka_checkpoint_dir(query_name, sink)
+        else:
+            checkpoint_dir = _default_stream_checkpoint_dir(
+                query_name, f"file_{sink.path}"
+            )
+        if query_name:
+            derived_ckpt = checkpoint_dir
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
 
     if isinstance(sink, FileSystemSink):
-        derived_ckpt = None
-        if checkpoint_dir is None:
-            # file sinks REQUIRE a checkpointLocation (Spark only
-            # auto-creates temp checkpoints for console/noop/memory/
-            # foreachBatch) — derive the same named-stable / unnamed-
-            # unique default the Kafka branch gets
-            checkpoint_dir = _default_stream_checkpoint_dir(
-                query_name, f"file_{sink.path}"
-            )
-            if query_name:
-                derived_ckpt = checkpoint_dir
-            writer = writer.option("checkpointLocation", checkpoint_dir)
         writer = writer.format(sink.data_format).option("path", sink.path)
         for k, v in getattr(sink, "data_format_props", {}).items():
             writer = writer.option(k, v)
         if getattr(sink, "partition_by", None):
             writer = writer.partitionBy(*sink.partition_by)
-        query = writer.start()
-        if derived_ckpt is not None:
-            # same liveness guard the Kafka branch gets: a second live
-            # named query onto this derived path must be refused
-            _ACTIVE_DEFAULT_CKPTS[derived_ckpt] = query
-        return query
-    if isinstance(sink, BlackHoleSink):
-        return writer.format("noop").start()
-    if isinstance(sink, KafkaSink):
-        # keyed records like the batch Kafka writer (key-based
-        # partitioning / log compaction must survive a batch->streaming
-        # switch), query_name preserved, and the default checkpoint made
-        # UNIQUE per query — two queries sharing one checkpoint resume
-        # each other's offsets and corrupt both
-        keys = descriptor.keys if descriptor is not None else None
-        value = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-        out = df.select(value.alias("value"))
-        if keys:
-            out = df.select(
-                F.to_json(F.struct(*[F.col(k) for k in keys])).alias("key"),
-                value.alias("value"),
-            )
-        derived_ckpt = None
-        if checkpoint_dir is None:
-            checkpoint_dir = _default_kafka_checkpoint_dir(query_name, sink)
-            if query_name:
-                derived_ckpt = checkpoint_dir
-        kwriter = out.writeStream.outputMode(output_mode)
-        if query_name:
-            kwriter = kwriter.queryName(query_name)
+    elif isinstance(sink, BlackHoleSink):
+        writer = writer.format("noop")
+    elif isinstance(sink, KafkaSink):
         from feathub_spark.processors.spark.kafka_python_source import (
             kafka_format_for,
         )
 
-        query = (
-            kwriter.format(kafka_format_for(df.sparkSession))
+        writer = (
+            writer.format(kafka_format_for(df.sparkSession))
             .option("kafka.bootstrap.servers", sink.bootstrap_server)
             .option("topic", sink.topic)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
         )
-        if derived_ckpt is not None:
-            _ACTIVE_DEFAULT_CKPTS[derived_ckpt] = query
-        return query
+    else:
 
-    def write_batch(batch_df, batch_id):
-        insert_into_sink(batch_df, sink, descriptor)
+        def write_batch(batch_df, batch_id):
+            insert_into_sink(batch_df, sink, descriptor)
 
-    return writer.foreachBatch(write_batch).start()
+        writer = writer.foreachBatch(write_batch)
+    query = writer.start()
+    if derived_ckpt is not None:
+        _ACTIVE_DEFAULT_CKPTS[derived_ckpt] = query
+    return query

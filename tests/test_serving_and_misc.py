@@ -147,6 +147,28 @@ def test_datagen_source(client):
     assert df["noise"].notna().all()
 
 
+def test_datagen_random_fields_ignore_partition_count(spark):
+    """Random datagen values derive from the row id alone, so the same ids
+    get the same values under any partition count (rand(seed) is seeded
+    per partition)."""
+    gen = DataGenSource(
+        name="gen_parts",
+        schema=Schema(["id", "noise", "tag"], [t.Int64, t.Float64, t.String]),
+        number_of_rows=100,
+        field_configs={"id": SequenceField(0, 99)},
+    )
+
+    def rows(partitions):
+        ids = spark.range(0, 100, 1, numPartitions=partitions)
+        return sorted(ids.select(*gen.field_columns()).collect())
+
+    one = rows(1)
+    assert one == rows(4)
+    assert [r.id for r in one] == list(range(100))
+    assert len({r.noise for r in one}) > 90
+    assert all(0 <= r.noise < 100 for r in one)
+
+
 def test_metrics_compile(client, tmp_path):
     from datetime import timedelta
 

@@ -6,6 +6,8 @@ import os
 import time
 from datetime import timedelta
 
+import pytest
+
 from feathub_spark import (
     DerivedFeatureView,
     Feature,
@@ -15,7 +17,11 @@ from feathub_spark import (
     SlidingFeatureView,
     String,
 )
-from feathub_spark.feature_views.transforms import SlidingWindowTransform
+from feathub_spark.common.exceptions import PlanError
+from feathub_spark.feature_views.transforms import (
+    PythonUdfTransform,
+    SlidingWindowTransform,
+)
 
 from tests.fixtures import F1_ROWS
 
@@ -546,3 +552,154 @@ def test_streaming_native_filtered_first_last_and_nulls(client, tmp_path):
     assert len(stream_rows) > 0
     # the view filter held: no NULL first_big row survived
     assert all(v[0] is not None for v in stream_rows.values())
+
+
+@pytest.mark.parametrize("stateful", [False, True])
+def test_streaming_sliding_python_udf_matches_batch(client, tmp_path, stateful):
+    """Python UDF features before and after a streaming sliding window
+    lower like batch, on the native window path and on the stateful
+    operator (the stream path used to lower only expression features, so
+    the UDF columns went missing)."""
+    d = _write_stream_dir(tmp_path)
+    with open(os.path.join(d, "part_sentinel.csv"), "w") as f:
+        f.write("name,cost,distance,time\n")
+        f.write("Zed,1,1,2022-01-20 00:00:00\n")
+    schema = (
+        Schema.new_builder()
+        .column("name", String)
+        .column("cost", Int64)
+        .column("distance", Int64)
+        .column("time", String)
+        .build()
+    )
+    source = FileSystemSource(
+        name=f"stream_src_udf_{int(stateful)}",
+        path=d,
+        data_format="csv",
+        schema=schema,
+        keys=["name"],
+        timestamp_field="time",
+        timestamp_format="%Y-%m-%d %H:%M:%S",
+        max_out_of_orderness=timedelta(seconds=0),
+    )
+
+    def make_view(name):
+        return SlidingFeatureView(
+            name=name,
+            source=source,
+            features=[
+                Feature(
+                    "c2",
+                    transform=PythonUdfTransform(lambda row: row["cost"] * 2),
+                    dtype=Int64,
+                ),
+                Feature(
+                    "s",
+                    transform=SlidingWindowTransform(
+                        "c2", "SUM", window_size=timedelta(days=1),
+                        step_size=timedelta(days=1), group_by_keys=["name"],
+                    ),
+                ),
+                Feature(
+                    "s2",
+                    transform=PythonUdfTransform(lambda row: row["s"] * 2),
+                    dtype=Int64,
+                ),
+            ],
+            enable_empty_window_output=stateful,
+            skip_same_window_output=stateful,
+        )
+
+    stream_view = make_view(f"stream_udf_view_{int(stateful)}")
+    client.build_features([source, stream_view])
+    # the native path runs in complete mode so windows beyond the final
+    # watermark are emitted too; the stateful one drains through the
+    # sentinel key
+    out = _run_to_memory(
+        client.spark, client.processor, stream_view,
+        f"stream_udf_out_{int(stateful)}", "append" if stateful else "complete",
+    )
+    stream_rows = {
+        (r["name"], r.window_time): (r.s, r.s2)
+        for r in out.collect()
+        if r["name"] != "Zed"
+    }
+
+    batch_view = make_view(f"batch_udf_view_{int(stateful)}")
+    client.build_features([batch_view])
+    batch = client.get_features(batch_view).to_pandas()
+    batch_rows = {
+        (r["name"], r["window_time"]): (r["s"], r["s2"])
+        for _, r in batch.iterrows()
+        if r["name"] != "Zed"
+    }
+    assert len(stream_rows) > 0
+    assert all(s2 == 2 * s for s, s2 in stream_rows.values())
+    assert stream_rows == batch_rows
+
+
+@pytest.mark.parametrize("case", ["join_without_keys", "sliding_without_timestamp"])
+def test_streaming_compile_raises_batch_plan_errors(client, tmp_path, case):
+    """The streaming compile runs the batch builder's validations: a join
+    feature with no keys and a sliding view over a source without a
+    timestamp_field both raise the batch PlanError."""
+    source = _stream_source(tmp_path, f"stream_src_err_{case}")
+    if case == "join_without_keys":
+        right = FileSystemSource(
+            name="keyless_right",
+            path=source.path,
+            data_format="csv",
+            schema=source.schema,
+            timestamp_field="time",
+            timestamp_format="%Y-%m-%d %H:%M:%S",
+        )
+        client.build_features([right])
+        view = DerivedFeatureView(
+            name="keyless_join_view", source=source, features=["keyless_right.cost"]
+        )
+        message = "needs keys to join on"
+    else:
+        view = SlidingFeatureView(
+            name="untimed_sliding_view",
+            source=source,
+            features=[
+                Feature(
+                    "total_cost",
+                    transform=SlidingWindowTransform(
+                        "cost", "SUM", window_size=timedelta(days=1),
+                        step_size=timedelta(days=1), group_by_keys=["name"],
+                    ),
+                ),
+            ],
+        )
+        message = "requires the source to declare a timestamp_field"
+    view = client.build_features([source, view])[1]
+    if case == "sliding_without_timestamp":
+        # the registry already rejects this declaration; the compile-time
+        # check guards a resolved view whose source has no event time
+        view.get_resolved_source().timestamp_field = None
+    with pytest.raises(PlanError, match=message):
+        client.get_features(view)
+    with pytest.raises(PlanError, match=message):
+        client.processor.get_stream_dataframe(view)
+
+
+def test_streaming_registers_no_temp_views(client, tmp_path):
+    """Batch compiles register each view as a temp view for SqlFeatureView
+    consumers; compiling a stream of the same views must leave those batch
+    temp views in place."""
+    source = _stream_source(tmp_path, "stream_src_tv")
+    view = DerivedFeatureView(
+        name="stream_tv_view",
+        source=source,
+        features=[Feature("total", transform="cost + distance")],
+        keep_source_fields=True,
+    )
+    client.build_features([source, view])
+    client.get_features(view).to_pandas()
+    stream = client.processor.get_stream_dataframe(view)
+    assert stream.isStreaming
+    for name in ("stream_src_tv", "stream_tv_view"):
+        assert not client.spark.table(name).isStreaming
+    totals = client.spark.sql("SELECT total FROM stream_tv_view").collect()
+    assert sorted(r.total for r in totals) == [200, 450, 500, 650, 1000, 1400]
