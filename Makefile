@@ -4,7 +4,7 @@
 COMPOSE := docker compose -f docker/docker-compose.connectors.yml
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test correctness bench plan-audit scale-gate connector-it connector-services connector-down
+.PHONY: test correctness bench perfbench-smoke plan-audit scale-gate connector-it connector-services connector-down
 
 test:
 	python -m pytest tests/ -x -q
@@ -14,6 +14,11 @@ correctness:
 
 bench:
 	python bench.py
+
+# Every perfbench workload on tiny inputs, untraced and traced: each must
+# check clean and print every metric.  Not part of `make test`.
+perfbench-smoke:
+	python -m pytest perfbench/test_smoke.py -q
 
 plan-audit:
 	python tools/plan_audit.py

@@ -5,6 +5,12 @@
 by key and evaluates expression features pandas-side via DuckDB (same SQL
 dialect subset our DSL lowers to, so expressions behave like the Spark
 path without paying a Spark job per request).
+
+Cost of one call: one store ``get`` per table the view looks up (all of a
+table's features in one lookup, each proportional to the request), then
+one query per expression feature that selects only that feature's column.
+The service holds one DuckDB connection and takes a cursor from it per
+expression, so concurrent calls share the connection safely.
 """
 
 from __future__ import annotations
@@ -61,16 +67,17 @@ def _backticks_to_ansi(sql: str) -> str:
 
 class LocalFeatureService:
     def __init__(self, online_store: MemoryOnlineStore = None) -> None:
+        import duckdb
+
         self.online_store = online_store or MemoryOnlineStore.get_instance()
+        self._duckdb = duckdb.connect()
 
     def get_online_features(
         self, request_df: pd.DataFrame, view: OnDemandFeatureView
     ) -> pd.DataFrame:
-        out = request_df.copy()
-        for table_name, feature_name in view.lookup_features():
-            out = self.online_store.get(table_name, out, [feature_name])
+        out = self._lookup(request_df.reset_index(drop=True), view.lookup_features())
         for feature in view.expression_features():
-            out = self._eval_expression(out, feature)
+            out[feature.name] = self._eval_expression(out, feature)
         if not view.keep_source_fields:
             # strip: the lookup regex tolerates padded feature strings
             # ('tbl.feat '), so the projection name must too, or the
@@ -83,7 +90,26 @@ class LocalFeatureService:
             out = out[[c for c in keys + names if c in out.columns]]
         return out
 
-    def _eval_expression(self, df: pd.DataFrame, feature) -> pd.DataFrame:
+    def _lookup(self, out: pd.DataFrame, lookups) -> pd.DataFrame:
+        """One store ``get`` per table, serving what one ``get`` per
+        feature in declaration order would: the stored value wins a name
+        clash, so a name looked up twice takes the later table's value and
+        moves to the end, after the request columns it replaces."""
+        store = self.online_store
+        keys = {table: store.key_fields(table) for table, _ in lookups}
+        # a lookup of one of its table's key fields only reads the request
+        named = [(t, f) for t, f in lookups if f not in keys[t]]
+        owner = {f: t for t, f in named}
+        last = {f: i for i, (_, f) in enumerate(named)}
+        order = sorted(owner, key=last.get)
+        features = {table: [] for table in keys}
+        for feature in order:
+            features[owner[feature]].append(feature)
+        for table, names in features.items():
+            out = store.get(table, out, names)
+        return out[[c for c in out.columns if c not in owner] + order]
+
+    def _eval_expression(self, df: pd.DataFrame, feature):
         from feathub_spark.feature_views.transforms.expression_transform import (
             ExpressionTransform,
         )
@@ -101,21 +127,16 @@ class LocalFeatureService:
                     if tr.fail_on_exception:
                         raise
                     values.append(tr.value_on_exception)
-            df[feature.name] = values
-            return df
+            return values
         if not isinstance(tr, ExpressionTransform):
             raise FeathubError(
                 f"OnDemandFeatureView supports expression/UDF features, got {tr!r}."
             )
-        import duckdb
-
         sql = _backticks_to_ansi(to_spark_sql(tr.expr))
-        con = duckdb.connect()
+        cursor = self._duckdb.cursor()
         try:
-            con.register("req", df)
-            result = con.execute(
-                f'SELECT *, {sql} AS "{feature.name}" FROM req'
-            ).df()
+            cursor.register("req", df)
+            result = cursor.execute(f'SELECT {sql} AS "{feature.name}" FROM req').df()
         finally:
-            con.close()
-        return result
+            cursor.close()
+        return result[feature.name].array

@@ -261,8 +261,7 @@ class MemoryStoreSource(FeatureTable):
                 MemoryOnlineStore,
             )
 
-            store = MemoryOnlineStore.get_instance()
-            pdf = store._tables[self.table_name]
+            pdf = MemoryOnlineStore.get_instance().snapshot(self.table_name)
             names, dtypes = [], []
             for col, dt in zip(pdf.columns, pdf.dtypes):
                 names.append(col)

@@ -55,9 +55,8 @@ class MemoryLookup:
         from feathub_spark.online_stores.memory_online_store import MemoryOnlineStore
 
         store = MemoryOnlineStore.get_instance()
-        pdf = store._tables.get(self.table_name)
         struct = self._struct()
-        if pdf is None:
+        if self.table_name not in store.all_tables():
             # never-written table: the documented empty-store behavior is
             # left-join NULL enrichment, which needs a declared schema —
             # the store has no column names to synthesize from
@@ -68,9 +67,7 @@ class MemoryLookup:
                     "schema= for NULL enrichment before the first put()."
                 )
             return spark.createDataFrame([], struct)
-        if self.feature_names:
-            keys = store._keys[self.table_name]
-            pdf = pdf[keys + [c for c in self.feature_names if c not in keys]]
+        pdf = store.snapshot(self.table_name, self.feature_names)
         if len(pdf) == 0:
             if struct is not None:
                 from pyspark.sql.types import StructType

@@ -277,8 +277,7 @@ def get_source_dataframe(spark: SparkSession, source: TableDescriptor) -> DataFr
     if isinstance(source, MemoryStoreSource):
         from feathub_spark.online_stores.memory_online_store import MemoryOnlineStore
 
-        store = MemoryOnlineStore.get_instance()
-        pdf = store._tables[source.table_name]
+        pdf = MemoryOnlineStore.get_instance().snapshot(source.table_name)
         return append_event_time(spark.createDataFrame(pdf), source)
 
     if isinstance(source, RedisSource):

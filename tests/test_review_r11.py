@@ -221,34 +221,6 @@ def test_redis_key_and_value_codec_dtype_fidelity():
     assert build_redis_key("ns", [1, 2], "__NAMESPACE__#__KEYS__") == "ns#1:2"
 
 
-def test_memory_store_get_stored_value_wins_on_name_overlap():
-    """A looked-up feature name colliding with a request column must not
-    vanish into pandas _x/_y suffixes — the stored value wins, matching
-    SqlOnlineStore/RedisOnlineStore dict-overwrite semantics."""
-    import pandas as pd
-
-    from feathub_spark.online_stores.memory_online_store import MemoryOnlineStore
-
-    store = MemoryOnlineStore()
-    store.put("t", pd.DataFrame({"k": [1], "score": [9.0]}), key_fields=["k"])
-    got = store.get("t", pd.DataFrame({"k": [1], "score": [0.5]}))
-    assert list(got.columns) == ["k", "score"]
-    assert got["score"].tolist() == [9.0]
-
-
-def test_memory_store_keyless_get_raises_clearly():
-    import pandas as pd
-    import pytest
-
-    from feathub_spark.common.exceptions import FeathubError
-    from feathub_spark.online_stores.memory_online_store import MemoryOnlineStore
-
-    store = MemoryOnlineStore()
-    store.put("m", pd.DataFrame({"v": [1.0]}), key_fields=[])
-    with pytest.raises(FeathubError):
-        store.get("m", pd.DataFrame({"v": [1.0]}))
-
-
 def test_sql_store_string_timestamps_keep_max_wins(tmp_path):
     """String timestamp fields must still give max-timestamp-wins (not
     silent last-write-wins), matching MemoryOnlineStore."""

@@ -140,39 +140,6 @@ class TestNullTimestampUpsert:
     won MemoryOnlineStore's keep='last' dedupe; SqlOnlineStore's
     ts-comparison guard was False for None/NaN and overwrote too)."""
 
-    def test_memory_store_null_ts_never_wins(self):
-        import pandas as pd
-
-        from feathub_spark.online_stores.memory_online_store import (
-            MemoryOnlineStore,
-        )
-
-        s = MemoryOnlineStore()
-        s.put("t", pd.DataFrame({"k": [1], "v": [10.0], "ts": [100.0]}),
-              ["k"], "ts")
-        s.put("t", pd.DataFrame({"k": [1], "v": [99.0],
-                                 "ts": [float("nan")]}), ["k"], "ts")
-        got = s.get("t", pd.DataFrame({"k": [1]}))
-        assert got["v"].tolist() == [10.0]
-        # but a LATER timestamped row still wins
-        s.put("t", pd.DataFrame({"k": [1], "v": [11.0], "ts": [200.0]}),
-              ["k"], "ts")
-        assert s.get("t", pd.DataFrame({"k": [1]}))["v"].tolist() == [11.0]
-
-    def test_memory_store_both_untimestamped_last_wins(self):
-        import pandas as pd
-
-        from feathub_spark.online_stores.memory_online_store import (
-            MemoryOnlineStore,
-        )
-
-        s = MemoryOnlineStore()
-        s.put("t", pd.DataFrame({"k": [1], "v": [1.0],
-                                 "ts": [float("nan")]}), ["k"], "ts")
-        s.put("t", pd.DataFrame({"k": [1], "v": [2.0],
-                                 "ts": [float("nan")]}), ["k"], "ts")
-        assert s.get("t", pd.DataFrame({"k": [1]}))["v"].tolist() == [2.0]
-
     def test_sql_store_null_ts_never_wins(self):
         import sqlite3
 

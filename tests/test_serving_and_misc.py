@@ -242,6 +242,6 @@ def test_metric_piggyback_on_materialize(spark, tmp_path):
     store = MemoryOnlineStore.get_instance()
     assert "features_out" in store.all_tables()
     assert "metrics_out" in store.all_tables()
-    metrics = store._tables["metrics_out"]
+    metrics = store.snapshot("metrics_out")
     assert metrics.iloc[0]["total_count"] == 5
     assert metrics.iloc[0]["total_average"] == pytest.approx(4200 / 6)
