@@ -2,9 +2,11 @@
 
 Flink runs the reference's temporal join with versioned-table state
 (join_utils.py:243-331); Spark has no streaming as-of primitive, so this
-operator re-creates it with applyInPandasWithState over the tagged UNION of
-both streams (the same union-sort idea as the batch plan, with state
-instead of a sort):
+operator re-creates it as a fold of the keyed-state driver
+(``keyed_state.py``) over the tagged UNION of both streams (the same
+union-sort idea as the batch plan, with state instead of a sort).  The
+driver buffers left rows until the watermark passes them; the fold owns
+the as-of match:
 
 - both sides are watermarked; the union's watermark is the minimum, so
   when wm passes a left row's time, every right row at-or-before it has
@@ -30,17 +32,15 @@ arrival order for that key.
 
 from __future__ import annotations
 
-import math
-from typing import Iterator, List, Tuple
-
-import pandas as pd
+import json
+from typing import List
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL
-from feathub_spark.streaming._state_json import dumps_state, loads_state
+from feathub_spark.streaming.keyed_state import MS, KeyedFold, keyed_state, release
+
 
 def _tie_encode(v):
     """Null-safe recursive ordering key for one payload value, mirroring
@@ -68,6 +68,60 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
+class _AsofFold(KeyedFold):
+    name = "stateful_asof_join"
+    state_schema = _STATE_SCHEMA
+    out_fields = [
+        T.StructField(MS, T.LongType()),
+        T.StructField("__l__", T.StringType()),
+        T.StructField("__r__", T.StringType()),
+    ]
+
+    def __init__(self, payload_fields: List[str]) -> None:
+        self.payload_fields = payload_fields  # struct field order for tie keys
+
+    def empty(self) -> list:
+        return [[], []]
+
+    def _payload_key(self, rjson):
+        # batch tie rule: max payload struct wins among equal ms.
+        # Index by the declared field order (to_json DROPS null
+        # fields, so positional parsing would misalign).  Note the
+        # granularity difference vs batch: batch orders the running
+        # last by unix_micros, so right rows distinct at sub-ms
+        # become payload-ordered "ties" only here (parity tests pin
+        # event times at ms boundaries).
+        vals = json.loads(rjson)
+        return tuple(_tie_encode(vals.get(n)) for n in self.payload_fields)
+
+    def step(self, st: list, rows: List[list], wm: int) -> List[list]:
+        rights = st[0]
+        lefts = []
+        for ms, side, payload in rows:
+            (lefts if side else rights).append([ms, payload])
+        try:
+            rights.sort(key=lambda r: (r[0], self._payload_key(r[1])))
+        except TypeError:
+            # uncomparable payload values — keep arrival order on ties
+            rights.sort(key=lambda r: r[0])
+
+        emissions = []
+        for ms, left_json in release(st, lefts, wm):
+            match = None
+            for rms, rjson in rights:
+                if rms <= ms:
+                    match = rjson
+                else:
+                    break
+            emissions.append([ms, left_json, match])
+
+        # prune: keep the single latest right <= wm (the as-of value for any
+        # future left row) plus rights beyond the watermark
+        at_or_before = [r for r in rights if r[0] <= wm]
+        st[0] = at_or_before[-1:] + [r for r in rights if r[0] > wm]
+        return emissions
+
+
 def stateful_asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -84,130 +138,24 @@ def stateful_asof_join(
             for out, rc in right_fields.items()
         ]
     )
-
-    # rows whose timestamp failed to parse have no event-time position and
-    # cannot participate in a temporal join
-    left = left.filter(F.col(EVENT_TIME_COL).isNotNull())
-    right = right.filter(F.col(EVENT_TIME_COL).isNotNull())
-    l2 = left.select(
-        *[F.col(k) for k in keys],
-        F.unix_millis(F.col(EVENT_TIME_COL)).alias("__ms__"),
-        F.lit(1).alias("__side__"),
-        F.to_json(F.struct(*[F.col(c) for c in left_cols])).alias("__payload__"),
-        F.col(EVENT_TIME_COL),
+    left_row = F.to_json(F.struct(*[F.col(c) for c in left_cols]))
+    right_row = F.to_json(
+        F.struct(*[F.col(rc).alias(out) for out, rc in right_fields.items()])
     )
-    r2 = right.filter(
-        " AND ".join(f"`{k}` IS NOT NULL" for k in keys)
-    ).select(
-        *[F.col(k) for k in keys],
-        F.unix_millis(F.col(EVENT_TIME_COL)).alias("__ms__"),
-        F.lit(0).alias("__side__"),
-        F.to_json(
-            F.struct(*[F.col(rc).alias(out) for out, rc in right_fields.items()])
-        ).alias("__payload__"),
-        F.col(EVENT_TIME_COL),
+    right = right.filter(" AND ".join(f"`{k}` IS NOT NULL" for k in keys))
+    restored = keyed_state(
+        [
+            (left, [F.lit(1).alias("__side__"), left_row.alias("__payload__")]),
+            (right, [F.lit(0).alias("__side__"), right_row.alias("__payload__")]),
+        ],
+        keys,
+        _AsofFold(list(right_fields)),
+        payloads={"__l__": left_struct, "__r__": right_struct},
     )
-    unioned = l2.unionByName(r2)
-
-    out_schema = T.StructType(
-        [unioned.schema[k] for k in keys]
-        + [
-            T.StructField("__ms__", T.LongType()),
-            T.StructField("__left_json__", T.StringType()),
-            T.StructField("__right_json__", T.StringType()),
-        ]
-    )
-    nk = len(keys)
-    payload_fields = list(right_fields)  # struct field order for tie keys
-
-    def process_key(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            rights_json, pending_json = state.get
-            rights = loads_state(rights_json)
-            pending = loads_state(pending_json)
-        else:
-            rights, pending = [], []
-
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                ms = int(row[nk])
-                side = int(row[nk + 1])
-                payload = row[nk + 2]
-                if side == 0:
-                    rights.append([ms, payload])
-                else:
-                    pending.append([ms, payload])
-
-        wm = state.getCurrentWatermarkMs()
-
-        def _payload_key(rjson):
-            # batch tie rule: max payload struct wins among equal ms.
-            # Index by the declared field order (to_json DROPS null
-            # fields, so positional parsing would misalign).  Note the
-            # granularity difference vs batch: batch orders the running
-            # last by unix_micros, so right rows distinct at sub-ms
-            # become payload-ordered "ties" only here (parity tests pin
-            # event times at ms boundaries).
-            import json as _json
-
-            vals = _json.loads(rjson)
-            return tuple(_tie_encode(vals.get(n)) for n in payload_fields)
-
-        try:
-            rights.sort(key=lambda r: (r[0], _payload_key(r[1])))
-        except TypeError:
-            # uncomparable payload values — keep arrival order on ties
-            rights.sort(key=lambda r: r[0])
-
-        ready = sorted([p for p in pending if p[0] <= wm], key=lambda p: p[0])
-        pending = [p for p in pending if p[0] > wm]
-
-        emissions = []
-        for ms, left_json in ready:
-            match = None
-            for rms, rjson in rights:
-                if rms <= ms:
-                    match = rjson
-                else:
-                    break
-            emissions.append(list(key) + [ms, left_json, match])
-
-        # prune: keep the single latest right <= wm (the as-of value for any
-        # future left row) plus rights beyond the watermark
-        at_or_before = [r for r in rights if r[0] <= wm]
-        keep = at_or_before[-1:] + [r for r in rights if r[0] > wm]
-        rights = keep
-
-        state.update((dumps_state(rights), dumps_state(pending)))
-        # re-arm only while left rows are buffered: the retained right
-        # as-of value needs no timer (new data re-arms), and an
-        # unconditional re-arm wakes every historical key on every
-        # watermark advance forever — O(total keys) per trigger
-        if pending:
-            state.setTimeoutTimestamp(max(wm + 1, 1))
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions,
-                columns=keys + ["__ms__", "__left_json__", "__right_json__"],
-            )
-
-    joined = unioned.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
-        process_key,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    restored = joined.withColumn(
-        "__l__", F.from_json(F.col("__left_json__"), left_struct)
-    ).withColumn("__r__", F.from_json(F.col("__right_json__"), right_struct))
     out_names = list(right_fields.keys())
     passthrough = [c for c in left_cols if c not in out_names]
     return restored.select(
         *[F.col(f"__l__.{c}").alias(c) for c in passthrough],
-        F.timestamp_millis(F.col("__ms__")).alias(EVENT_TIME_COL),
+        F.timestamp_millis(F.col(MS)).alias(EVENT_TIME_COL),
         *[F.col(f"__r__.{n}").alias(n) for n in out_names],
     )

@@ -2,14 +2,16 @@
 datapipe.sessions.funnel_steps).
 
 The batch funnel is a greedy earliest-chain scan in event-time order —
-an ONLINE algorithm — so the streaming form is exact, not approximate:
-buffer events per key until the watermark passes them (late data within
+an ONLINE algorithm — so the streaming form is exact, not approximate.
+It runs as a fold of the keyed-state driver (``keyed_state.py``), which
+buffers events per key until the watermark passes them (late data within
 the watermark re-sorts correctly; later is dropped, the standard
-contract), walk the ready events in time order, and advance the chain
-state exactly as the batch fold would.  One output row is emitted each
-time a key's chain ADVANCES (append mode), carrying the new step count
-and the chosen step timestamps; the final emission per key equals the
-batch result over the same completed prefix (conformance-tested).
+contract); the fold walks the released events in time order and advances
+the chain state exactly as the batch fold would.  One output row is
+emitted each time a key's chain ADVANCES (append mode), carrying the new
+step count and the chosen step timestamps; the final emission per key
+equals the batch result over the same completed prefix
+(conformance-tested).
 
 State per key is tiny and bounded: the chain (<= m timestamps) plus the
 under-watermark buffer — no event history is retained once consumed,
@@ -19,16 +21,13 @@ revisits past events.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
-
-import pandas as pd
+from typing import List
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL
-from feathub_spark.streaming._state_json import dumps_state, loads_state
+from feathub_spark.streaming.keyed_state import KeyedFold, keyed_state, release
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -36,6 +35,43 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("pending", T.StringType()),   # [[ms, type], ...]
     ]
 )
+
+
+class _FunnelFold(KeyedFold):
+    name = "stateful_funnel"
+    state_schema = _STATE_SCHEMA
+    out_fields = [
+        T.StructField("n_steps", T.IntegerType()),
+        T.StructField("step_ts", T.ArrayType(T.LongType())),
+        T.StructField("advanced_ms", T.LongType()),
+    ]
+
+    def __init__(self, steps: List[str]) -> None:
+        self.steps = steps
+
+    def empty(self) -> list:
+        return [[], []]
+
+    def step(self, st: list, rows: List[list], wm: int) -> List[list]:
+        chain, m = st[0], len(self.steps)
+        if len(chain) == m:
+            # Terminal: the funnel already completed for this key.  New
+            # events are not buffered and the key is not woken; state stays
+            # at the bounded m-element chain (needed to suppress
+            # re-emission if more events arrive), never grows.
+            return []
+        emissions = []
+        for ms, tp in release(st, rows, wm, order=lambda p: (p[0], p[1])):
+            k = len(chain)
+            if k < m and tp == self.steps[k] and (k == 0 or ms > chain[-1]):
+                chain.append(ms)
+                emissions.append([len(chain), list(chain), ms])
+        if len(chain) == m:
+            # Completed this batch: drop buffered events (nothing can
+            # advance any more), so the key is never woken again; the
+            # m-element chain alone remains.
+            st[1] = []
+        return emissions
 
 
 def stateful_funnel(
@@ -58,86 +94,9 @@ def stateful_funnel(
     steps = list(steps)
     if not steps:
         raise ValueError("steps must name at least one event type")
-    m = len(steps)
-
-    prepared = (
-        df.filter(F.col(type_col).isin(steps))
-        # a NULL event time (unparseable timestamp) reaches the pandas
-        # batch as NaN and int(NaN) kills the query; the batch
-        # funnel_steps filters the same way
-        .filter(F.col(event_time_col).isNotNull())
-        .withColumn("__ms__", F.unix_millis(F.col(event_time_col)))
-        .select(key_col, "__ms__", F.col(type_col).alias("__tp__"),
-                event_time_col)
-    )
-    key_field = prepared.schema[key_col]
-    out_schema = T.StructType(
-        [
-            key_field,
-            T.StructField("n_steps", T.IntegerType()),
-            T.StructField("step_ts", T.ArrayType(T.LongType())),
-            T.StructField("advanced_ms", T.LongType()),
-        ]
-    )
-
-    def process_key(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            chain_json, pending_json = state.get
-            chain = loads_state(chain_json)
-            pending = loads_state(pending_json)
-        else:
-            chain, pending = [], []
-
-        if len(chain) == m:
-            # Terminal: the funnel already completed for this key.  Don't
-            # buffer the new events and don't re-arm the timeout — state
-            # stays at the bounded m-element chain (needed to suppress
-            # re-emission if more events arrive), never grows.
-            return
-
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                pending.append([int(row[1]), row[2]])
-
-        wm = state.getCurrentWatermarkMs()
-        ready = sorted(
-            (p for p in pending if p[0] <= wm), key=lambda p: (p[0], p[1])
-        )
-        pending = [p for p in pending if p[0] > wm]
-
-        emissions = []
-        for ms, tp in ready:
-            k = len(chain)
-            if k < m and tp == steps[k] and (k == 0 or ms > chain[-1]):
-                chain.append(ms)
-                emissions.append(
-                    list(key) + [len(chain), list(chain), ms]
-                )
-
-        if len(chain) == m:
-            # Completed this batch: drop buffered events (nothing can
-            # advance any more) and stop re-arming the timeout so the key
-            # is never woken again; the m-element chain alone remains.
-            pending = []
-        state.update((dumps_state(chain), dumps_state(pending)))
-        # re-arm ONLY while events are buffered: an unconditional re-arm
-        # wakes every historical key on every watermark advance forever
-        # (per-trigger cost O(total distinct keys) on long streams)
-        if len(chain) < m and pending:
-            state.setTimeoutTimestamp(max(wm + 1, 1))
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions,
-                columns=[key_col, "n_steps", "step_ts", "advanced_ms"],
-            )
-
-    return prepared.groupBy(F.col(key_col)).applyInPandasWithState(
-        process_key,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_state(
+        [(df.filter(F.col(type_col).isin(steps)), [F.col(type_col).alias("__tp__")])],
+        [key_col],
+        _FunnelFold(steps),
+        event_time_col,
     )

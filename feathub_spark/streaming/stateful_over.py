@@ -3,15 +3,17 @@ operator.
 
 The batch evaluator (processors/spark/over_window_utils.py) cannot run on a
 stream — Spark forbids window functions over streaming DataFrames — so this
-operator reproduces its golden semantics with applyInPandasWithState
-(the Spark analog of Flink's event-time Over window, which the reference
-uses: processors/flink/table_builder/over_window_utils.py:70-196):
+operator reproduces its golden semantics as a fold of the keyed-state driver
+(``keyed_state.py``; the Spark analog of Flink's event-time Over window,
+which the reference uses: processors/flink/table_builder/over_window_utils.py:70-196).
+The driver buffers rows per key until the watermark passes their event time
+(so every earlier row has arrived); the fold owns the rest:
 
-- rows buffer per key until the watermark passes their event time (so every
-  earlier row has arrived), then emit exactly one output row per input row,
-  aggregating history in [t - window, t] (ties included), optionally the
-  most recent ``limit`` matching rows;
-- history is pruned to watermark - max_window;
+- emit exactly one output row per released input row, aggregating history
+  in [t - window, t] (ties included), optionally the most recent ``limit``
+  matching rows;
+- prune history to watermark - max_window; an unbounded window keeps it
+  whole, and such a key is woken only while it buffers rows;
 - the full input row rides through state as a JSON payload generated
   JVM-side (to_json) and restored with from_json, so arbitrary column types
   survive without Python-side serialization rules.
@@ -19,24 +21,16 @@ uses: processors/flink/table_builder/over_window_utils.py:70-196):
 
 from __future__ import annotations
 
-import math
-from typing import Iterator, List, Tuple
-
-import pandas as pd
+from typing import List
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from feathub_spark.common.types import to_spark_type
-from feathub_spark.dsl.parser import to_spark_sql
 from feathub_spark.feature_views.feature import Feature
-from feathub_spark.feature_views.transforms.over_window_transform import (
-    OverWindowTransform,
-)
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL
-from feathub_spark.streaming.stateful_sliding import _agg_pandas
-from feathub_spark.streaming._state_json import dumps_state, loads_state
+from feathub_spark.streaming._window_agg import value_flag_columns, window_agg
+from feathub_spark.streaming.keyed_state import MS, KeyedFold, keyed_state, release
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -46,6 +40,64 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
+class _OverFold(KeyedFold):
+    name = "stateful_over_window"
+    state_schema = _STATE_SCHEMA
+
+    def __init__(self, features: List[Feature]) -> None:
+        transforms = [f.transform for f in features]
+        self.windows_ms = [tr.window_size_ms for tr in transforms]
+        # Any unbounded field forbids pruning: history must be kept whole.
+        self.max_window = (
+            None if any(w is None for w in self.windows_ms) else max(self.windows_ms)
+        )
+        self.aggs = [tr.agg_func for tr in transforms]
+        self.limits = [tr.limit for tr in transforms]
+        self.out_fields = [
+            T.StructField(MS, T.LongType()),
+            T.StructField("__row__", T.StringType()),
+        ] + [T.StructField(f.name, to_spark_type(f.dtype)) for f in features]
+
+    def empty(self) -> list:
+        return [[], []]
+
+    def wake(self, st: list) -> bool:
+        history, pending = st
+        return bool(pending) or (self.max_window is not None and bool(history))
+
+    def step(self, st: list, rows: List[list], wm: int) -> List[list]:
+        n_fields = len(self.aggs)
+        ready = release(st, rows, wm)
+        history = st[0]
+        emissions = []
+        if ready:
+            history.extend([p[: 1 + 2 * n_fields] for p in ready])
+            history.sort(key=lambda r: r[0])
+            for p in ready:
+                t0 = p[0]
+                out_vals = [
+                    window_agg(
+                        history, i, n_fields, None if w is None else t0 - w, t0,
+                        agg, limit,
+                    )
+                    for i, (w, agg, limit) in enumerate(
+                        zip(self.windows_ms, self.aggs, self.limits)
+                    )
+                ]
+                emissions.append([t0, p[1 + 2 * n_fields]] + out_vals)
+
+        if self.max_window is not None and history:
+            # lazy grace-period prune (reference prunes only every
+            # maxWindow/10, SlidingWindowKeyedProcessFunction.java:76-105):
+            # O(1) staleness probe on the sorted history, O(n) rebuild only
+            # once per grace interval; grace-band rows are already outside
+            # every [t0 - w, t0] membership test, so emissions don't change
+            horizon = wm - self.max_window
+            if history[0][0] < horizon - max(1, self.max_window // 10):
+                st[0] = [r for r in history if r[0] >= horizon]
+        return emissions
+
+
 def stateful_over_window(df: DataFrame, features: List[Feature]) -> DataFrame:
     """``features`` carry OverWindowTransforms sharing group_by_keys.
     Returns the original columns plus one column per feature."""
@@ -53,142 +105,17 @@ def stateful_over_window(df: DataFrame, features: List[Feature]) -> DataFrame:
     keys = list(transforms[0].group_by_keys)
     assert all(list(tr.group_by_keys) == keys for tr in transforms)
 
-    windows_ms = [tr.window_size_ms for tr in transforms]
-    # Any unbounded field forbids pruning: history must be kept whole.
-    max_window = (
-        None
-        if any(w is None for w in windows_ms)
-        else max(windows_ms)
-    )
-    aggs = [tr.agg_func for tr in transforms]
-    limits = [tr.limit for tr in transforms]
-    n_fields = len(features)
-
     orig_cols = [c for c in df.columns if c != EVENT_TIME_COL]
     row_struct = T.StructType([df.schema[c] for c in orig_cols])
-
-    prepared = df
-    for i, tr in enumerate(transforms):
-        prepared = prepared.withColumn(f"__v{i}__", F.expr(to_spark_sql(tr.expr)))
-        prepared = prepared.withColumn(
-            f"__f{i}__",
-            F.expr(f"coalesce({to_spark_sql(tr.filter_expr)}, false)")
-            if tr.filter_expr
-            else F.lit(True),
-        )
-    # NULL event times (unparseable timestamps) would arrive in pandas as
-    # NaN and crash int() in the state loop — drop them like the stateful
-    # as-of join does
-    prepared = prepared.filter(F.col(EVENT_TIME_COL).isNotNull())
-    prepared = prepared.withColumn(
-        "__ms__", F.unix_millis(F.col(EVENT_TIME_COL))
-    ).withColumn(
-        "__row_json__", F.to_json(F.struct(*[F.col(c) for c in orig_cols]))
-    )
-    prepared = prepared.select(
-        *keys, "__ms__", *[f"__v{i}__" for i in range(n_fields)],
-        *[f"__f{i}__" for i in range(n_fields)],
-        "__row_json__", EVENT_TIME_COL,
-    )
-
-    out_schema = T.StructType(
-        [prepared.schema[k] for k in keys]
-        + [T.StructField("__ms__", T.LongType()),
-           T.StructField("__row_json__", T.StringType())]
-        + [T.StructField(f.name, to_spark_type(f.dtype)) for f in features]
-    )
-
-    def process_key(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            history_json, pending_json = state.get
-            history = loads_state(history_json)
-            pending = loads_state(pending_json)
-        else:
-            history, pending = [], []
-
-        nk = len(key)
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                ms = int(row[nk])
-                vals = [
-                    None if (isinstance(v, float) and math.isnan(v)) else v
-                    for v in row[nk + 1 : nk + 1 + n_fields]
-                ]
-                flags = [
-                    bool(x) for x in row[nk + 1 + n_fields : nk + 1 + 2 * n_fields]
-                ]
-                pending.append([ms] + vals + flags + [row[nk + 1 + 2 * n_fields]])
-
-        wm = state.getCurrentWatermarkMs()
-        ready = [p for p in pending if p[0] <= wm]
-        pending = [p for p in pending if p[0] > wm]
-
-        emissions = []
-        if ready:
-            history.extend([p[: 1 + 2 * n_fields] for p in ready])
-            history.sort(key=lambda r: r[0])
-            ready.sort(key=lambda r: r[0])
-            for p in ready:
-                t0 = p[0]
-                out_vals = []
-                for i in range(n_fields):
-                    w = windows_ms[i]
-                    lo = t0 - w if w is not None else None
-                    in_win = [
-                        r[1 + i]
-                        for r in history
-                        if r[0] <= t0
-                        and (lo is None or r[0] >= lo)
-                        and r[1 + n_fields + i]
-                    ]
-                    if limits[i] is not None:
-                        in_win = in_win[-limits[i]:]
-                    v = _agg_pandas(aggs[i], in_win)
-                    if v is None and aggs[i].empty_window_default() is not None:
-                        v = aggs[i].empty_window_default()
-                    out_vals.append(v)
-                emissions.append(list(key) + [t0, p[1 + 2 * n_fields]] + out_vals)
-
-        if max_window is not None and history:
-            # lazy grace-period prune (reference prunes only every
-            # maxWindow/10, SlidingWindowKeyedProcessFunction.java:76-105):
-            # O(1) staleness probe on the sorted history, O(n) rebuild only
-            # once per grace interval; grace-band rows are already outside
-            # every [t0 - w, t0] membership test, so emissions don't change
-            horizon = wm - max_window
-            if history[0][0] < horizon - max(1, max_window // 10):
-                history = [r for r in history if r[0] >= horizon]
-
-        if not history and not pending and max_window is not None:
-            # fully drained (bounded windows, nothing buffered): drop the
-            # state entry instead of keeping an empty record + timer alive
-            # forever on long-running high-cardinality streams
-            state.remove()
-        else:
-            state.update((dumps_state(history), dumps_state(pending)))
-            state.setTimeoutTimestamp(max(wm + 1, 1))
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=[f.name for f in out_schema.fields]
-            )
-
-    result = prepared.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
-        process_key,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    restored = result.withColumn(
-        "__row__", F.from_json(F.col("__row_json__"), row_struct)
+    row_json = F.to_json(F.struct(*[F.col(c) for c in orig_cols])).alias("__row__")
+    restored = keyed_state(
+        [(df, value_flag_columns(transforms) + [row_json])], keys, _OverFold(features),
+        payloads={"__row__": row_struct},
     )
     feature_names = [f.name for f in features]
     passthrough = [c for c in orig_cols if c not in feature_names]
     return restored.select(
         *[F.col(f"__row__.{c}").alias(c) for c in passthrough],
-        F.timestamp_millis(F.col("__ms__")).alias(EVENT_TIME_COL),
+        F.timestamp_millis(F.col(MS)).alias(EVENT_TIME_COL),
         *[F.col(n) for n in feature_names],
     )

@@ -1,13 +1,15 @@
 """Streaming SCD2 (the unbounded counterpart of datapipe.scd.scd2_intervals).
 
 Interval building is an ONLINE algorithm — each key only needs its current
-open state — so the streaming form is exact: buffer events per key until
+open state — so the streaming form is exact.  It runs as a fold of the
+keyed-state driver (``keyed_state.py``), which buffers events per key until
 the watermark passes them (late data within the watermark re-sorts
-correctly; later is dropped, the standard contract), walk the ready events
-in event-time order, and emit one CLOSED interval row whenever the key's
-attributes change (append mode cannot retract, so the currently-open
-interval lives only in state; readers union the emitted closed intervals
-with a point-lookup of the open state if they need "now").  The final set
+correctly; later is dropped, the standard contract); the fold walks the
+released events in event-time order and emits one CLOSED interval row
+whenever the key's attributes change (append mode cannot retract, so the
+currently-open interval lives only in state; readers union the emitted
+closed intervals with a point-lookup of the open state if they need
+"now").  The final set
 of closed intervals equals the batch builder's ``valid_to IS NOT NULL``
 rows over the same completed prefix (conformance-tested).
 
@@ -27,16 +29,13 @@ pre-dedup) for batch-identical output, mirroring the batch builder's
 
 from __future__ import annotations
 
-import json
-from typing import Iterator, List, Tuple, Union
-
-import pandas as pd
+from typing import List, Union
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL
+from feathub_spark.streaming.keyed_state import KeyedFold, keyed_state, release
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -44,6 +43,30 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("pending", T.StringType()),  # [[ms, attrs_json], ...]
     ]
 )
+
+
+class _Scd2Fold(KeyedFold):
+    name = "stateful_scd2"
+    state_schema = _STATE_SCHEMA
+    out_fields = [
+        T.StructField("__a__", T.StringType()),
+        T.StructField("valid_from_ms", T.LongType()),
+        T.StructField("valid_to_ms", T.LongType()),
+    ]
+
+    def empty(self) -> list:
+        return [None, []]
+
+    def step(self, st: list, rows: List[list], wm: int) -> List[list]:
+        emissions = []
+        for ms, aj in release(st, rows, wm, order=lambda p: (p[0], p[1])):
+            cur = st[0]
+            if cur is None:
+                st[0] = [ms, aj]
+            elif aj != cur[1]:
+                emissions.append([cur[1], cur[0], ms])
+                st[0] = [ms, aj]
+        return emissions
 
 
 def stateful_scd2(
@@ -61,74 +84,10 @@ def stateful_scd2(
         raise ValueError("stateful_scd2 needs key_cols and attr_cols")
 
     attr_struct = T.StructType([df.schema[c] for c in attrs])
-    # NULL event times (unparseable timestamps) reach the pandas batch as
-    # NaN and int(NaN) kills the query — same guard as asof/over/sliding
-    df = df.filter(F.col(event_time_col).isNotNull())
-    prepared = df.select(
-        *keys,
-        F.unix_millis(F.col(event_time_col)).alias("__ms__"),
-        F.to_json(F.struct(*[F.col(c) for c in attrs])).alias("__aj__"),
-        F.col(event_time_col),
-    )
-
-    out_schema = T.StructType(
-        [prepared.schema[k] for k in keys]
-        + [
-            T.StructField("__aj__", T.StringType()),
-            T.StructField("valid_from_ms", T.LongType()),
-            T.StructField("valid_to_ms", T.LongType()),
-        ]
-    )
-
-    def process_key(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_json, pending_json = state.get
-            cur = json.loads(cur_json) if cur_json else None
-            pending = json.loads(pending_json)
-        else:
-            cur, pending = None, []
-
-        nk = len(key)
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                pending.append([int(row[nk]), row[nk + 1]])
-
-        wm = state.getCurrentWatermarkMs()
-        ready = sorted(
-            (p for p in pending if p[0] <= wm), key=lambda p: (p[0], p[1])
-        )
-        pending = [p for p in pending if p[0] > wm]
-
-        emissions = []
-        for ms, aj in ready:
-            if cur is None:
-                cur = [ms, aj]
-            elif aj != cur[1]:
-                emissions.append(list(key) + [cur[1], cur[0], ms])
-                cur = [ms, aj]
-
-        state.update((json.dumps(cur) if cur else None, json.dumps(pending)))
-        # re-arm only while rows are buffered — an unconditional re-arm
-        # wakes every historical key on every watermark advance forever
-        if pending:
-            state.setTimeoutTimestamp(max(wm + 1, 1))
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=[f.name for f in out_schema.fields]
-            )
-
-    result = prepared.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
-        process_key,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    restored = result.withColumn(
-        "__a__", F.from_json(F.col("__aj__"), attr_struct)
+    attrs_json = F.to_json(F.struct(*[F.col(c) for c in attrs])).alias("__a__")
+    restored = keyed_state(
+        [(df, [attrs_json])], keys, _Scd2Fold(), event_time_col,
+        payloads={"__a__": attr_struct},
     )
     return restored.select(
         *keys,

@@ -3,8 +3,9 @@
 This is the engine's one genuinely custom physical operator, the Spark
 analog of the reference's SlidingWindowKeyedProcessFunction
 (java/feathub-udf/.../SlidingWindowKeyedProcessFunction.java:51-64 +
-SlidingWindowUtils.java:63-186), re-designed for Structured Streaming's
-``applyInPandasWithState``:
+SlidingWindowUtils.java:63-186), run as a fold of the keyed-state driver
+(``keyed_state.py``), which owns the input projection, the state
+lifecycle and the timer.  The fold owns the window emission loop:
 
 - per-key state holds the raw (ms, value...) history for the LARGEST window
   size only — all window sizes share it (the reference's headline state
@@ -13,8 +14,8 @@ SlidingWindowUtils.java:63-186), re-designed for Structured Streaming's
   order: empty windows emit 0 for SUM/COUNT and NULL otherwise
   (enable_empty_window_output), and emissions equal to the previous step are
   suppressed (skip_same_window_output);
-- event-time timeout keeps keys draining after input stops: windows keep
-  firing until the last window containing data has closed;
+- the key is woken every step until the last window containing data has
+  closed, then dropped;
 - history older than (watermark - max_window) is pruned each trigger.
 
 Aggregations are computed in pandas per (key, window) — the same golden
@@ -24,22 +25,17 @@ semantics as the batch evaluator, verified against it in tests.
 from __future__ import annotations
 
 import json
-import math
-from typing import Any, Iterator, List, Tuple
+from typing import List
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from feathub_spark.common.exceptions import PlanError
 from feathub_spark.common.types import to_spark_type
-from feathub_spark.dsl.parser import to_spark_sql
-from feathub_spark.streaming._state_json import dumps_state, loads_state
 from feathub_spark.feature_views.sliding_feature_view import SlidingFeatureView
-from feathub_spark.feature_views.transforms.agg_func import AggFunc
-from feathub_spark.processors.spark.constants import EVENT_TIME_COL, WINDOW_TIME_MS_COL
+from feathub_spark.processors.spark.constants import WINDOW_TIME_MS_COL
+from feathub_spark.streaming._state_json import dumps_state, loads_state
+from feathub_spark.streaming._window_agg import value_flag_columns, window_agg
+from feathub_spark.streaming.keyed_state import KeyedFold, keyed_state
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -51,141 +47,65 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _agg_pandas(agg: AggFunc, values: List[Any]) -> Any:
-    """``values`` has one element per filter-passing WINDOW ROW (None for
-    rows whose value expression is null).  Reference semantics (local
-    aggregation_utils.py): COUNT/ROW_NUMBER = len(l), FIRST/LAST =
-    l[0]/l[-1], COLLECT_LIST = list(l) — all INCLUDING null values;
-    SUM/AVG/MIN/MAX/VALUE_COUNTS skip null values."""
-    vals = [v for v in values if v is not None and not (isinstance(v, float) and math.isnan(v))]
-    if agg == AggFunc.SUM:
-        return sum(vals) if vals else 0
-    if agg == AggFunc.COUNT or agg == AggFunc.ROW_NUMBER:
-        return len(values)
-    if agg == AggFunc.AVG:
-        return (sum(vals) / len(vals)) if vals else None
-    if agg == AggFunc.MAX:
-        return max(vals) if vals else None
-    if agg == AggFunc.MIN:
-        return min(vals) if vals else None
-    if agg == AggFunc.FIRST_VALUE:
-        return values[0] if values else None
-    if agg == AggFunc.LAST_VALUE:
-        return values[-1] if values else None
-    if agg == AggFunc.COLLECT_LIST:
-        return list(values) if values else None
-    if agg == AggFunc.VALUE_COUNTS:
-        if not vals:
-            return None
-        out = {}
-        for v in vals:
-            out[v] = out.get(v, 0) + 1
-        return out
-    raise PlanError(f"Unsupported stateful sliding agg {agg}.")
+class _SlidingFold(KeyedFold):
+    name = "stateful_sliding_window"
+    state_schema = _STATE_SCHEMA
 
+    def __init__(self, view: SlidingFeatureView) -> None:
+        sliding = view.sliding_features()
+        self.step_ms = self.tick_ms = view.step_size_ms
+        self.windows_ms = [f.transform.window_size_ms for f in sliding]
+        self.max_window = max(self.windows_ms)
+        self.aggs = [f.transform.agg_func for f in sliding]
+        self.limits = [f.transform.limit for f in sliding]
+        self.enable_empty = view.enable_empty_window_output
+        self.skip_same = view.skip_same_window_output
+        self.out_fields = [T.StructField(WINDOW_TIME_MS_COL, T.LongType())] + [
+            T.StructField(f.name, to_spark_type(f.dtype)) for f in sliding
+        ]
 
-def stateful_sliding_window(
-    df: DataFrame,
-    view: SlidingFeatureView,
-) -> DataFrame:
-    """Apply the stateful sliding operator to a streaming DataFrame carrying
-    EVENT_TIME_COL.  Returns keys + window_time ms + agg feature columns."""
-    keys = view.group_by_keys
-    step_ms = view.step_size_ms
-    sliding = view.sliding_features()
-    field_names = [f.name for f in sliding]
-    windows_ms = [f.transform.window_size_ms for f in sliding]
-    max_window = max(windows_ms)
-    aggs = [f.transform.agg_func for f in sliding]
-    defaults = [f.transform.agg_func.empty_window_default() for f in sliding]
-    value_exprs = [to_spark_sql(f.transform.expr) for f in sliding]
-    filter_exprs = [
-        to_spark_sql(f.transform.filter_expr) if f.transform.filter_expr else None
-        for f in sliding
-    ]
-    limits = [f.transform.limit for f in sliding]
-    enable_empty = view.enable_empty_window_output
-    skip_same = view.skip_same_window_output
+    def empty(self) -> list:
+        return [[], None, None, None]
 
-    # Pre-compute per-field raw value and filter-flag columns so the pandas
-    # function only sees (keys..., ms, v0..vn, f0..fn) — expressions stay
-    # JVM-side.  The flag is separate from the value: a filtered-out row
-    # never enters the window, while a passing row with a NULL value still
-    # occupies a limit slot.
-    prepared = df
-    for i, (vexpr, fexpr) in enumerate(zip(value_exprs, filter_exprs)):
-        prepared = prepared.withColumn(f"__v{i}__", F.expr(vexpr))
-        prepared = prepared.withColumn(
-            f"__f{i}__",
-            F.expr(f"coalesce({fexpr}, false)") if fexpr else F.lit(True),
+    def load(self, stored: tuple) -> list:
+        history_json, last_wend, last_values_enc, drain_wend = stored
+        # last_values is kept as its canonical JSON encoding (sort_keys +
+        # default=str) and compared encoding-to-encoding: a parsed round
+        # trip would stringify VALUE_COUNTS' non-string map keys and
+        # defeat skip_same_window_output across micro-batches.
+        if last_values_enc == "null":
+            last_values_enc = None
+        # Checkpoint upgrade compatibility: state written before the
+        # nullable-Long encoding stored None as a -1 sentinel.  Only
+        # decode -1 as None when -1 cannot be a REAL value on the
+        # respective grid (last_wend is a step multiple; drain_wend a
+        # step multiple plus max_window) — pre-epoch streams with a
+        # grid that lands on -1 keep the new encoding's reading, the
+        # unavoidable side of the old ambiguity.
+        if last_wend == -1 and (-1) % self.step_ms != 0:
+            last_wend = None
+        if drain_wend == -1 and (-1 - self.max_window) % self.step_ms != 0:
+            drain_wend = None
+        return [loads_state(history_json), last_wend, last_values_enc, drain_wend]
+
+    def store(self, st: list) -> tuple:
+        history, last_wend, last_values_enc, drain_wend = st
+        enc = "null" if last_values_enc is None else last_values_enc
+        return (dumps_state(history), last_wend, enc, drain_wend)
+
+    def drained(self, st: list) -> bool:
+        _, last_wend, _, drain_wend = st
+        return (
+            last_wend is not None and drain_wend is not None and last_wend >= drain_wend
         )
-    # a NULL event time (unparseable timestamp) has no window and would
-    # arrive in pandas as NaN, crashing int() in the state loop — drop it
-    # like the stateful as-of join does
-    prepared = prepared.filter(F.col(EVENT_TIME_COL).isNotNull())
-    prepared = prepared.withColumn("__ms__", F.unix_millis(F.col(EVENT_TIME_COL)))
-    # EVENT_TIME_COL stays in the projection: event-time timeout requires the
-    # watermarked column to remain present in the child plan.
-    prepared = prepared.select(
-        *keys,
-        "__ms__",
-        *[f"__v{i}__" for i in range(len(sliding))],
-        *[f"__f{i}__" for i in range(len(sliding))],
-        EVENT_TIME_COL,
-    )
 
-    out_fields = [T.StructField(k, prepared.schema[k].dataType) for k in keys]
-    out_fields.append(T.StructField(WINDOW_TIME_MS_COL, T.LongType()))
-    for f_ in sliding:
-        out_fields.append(T.StructField(f_.name, to_spark_type(f_.dtype)))
-    out_schema = T.StructType(out_fields)
+    def wake(self, st: list) -> bool:
+        return True
 
-    n_fields = len(sliding)
-
-    def process_key(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            history_json, last_wend, last_values_enc, drain_wend = state.get
-            history = loads_state(history_json)
-            # last_values is kept as its canonical JSON encoding (sort_keys +
-            # default=str) and compared encoding-to-encoding: a parsed round
-            # trip would stringify VALUE_COUNTS' non-string map keys and
-            # defeat skip_same_window_output across micro-batches.
-            if last_values_enc == "null":
-                last_values_enc = None
-            # Checkpoint upgrade compatibility: state written before the
-            # nullable-Long encoding stored None as a -1 sentinel.  Only
-            # decode -1 as None when -1 cannot be a REAL value on the
-            # respective grid (last_wend is a step multiple; drain_wend a
-            # step multiple plus max_window) — pre-epoch streams with a
-            # grid that lands on -1 keep the new encoding's reading, the
-            # unavoidable side of the old ambiguity.
-            if last_wend == -1 and (-1) % step_ms != 0:
-                last_wend = None
-            if drain_wend == -1 and (
-                max_window is None or (-1 - max_window) % step_ms != 0
-            ):
-                drain_wend = None
-        else:
-            history, last_wend, last_values_enc, drain_wend = [], None, None, None
-
-        for pdf in pdf_iter:
-            for row in pdf.itertuples(index=False):
-                ms = int(row[len(key)])
-                vals = list(row[len(key) + 1 : len(key) + 1 + n_fields])
-                vals = [
-                    None if (isinstance(v, float) and math.isnan(v)) else v
-                    for v in vals
-                ]
-                flags = [
-                    bool(x)
-                    for x in row[len(key) + 1 + n_fields : len(key) + 1 + 2 * n_fields]
-                ]
-                history.append([ms] + vals + flags)
-
-        wm = state.getCurrentWatermarkMs()
-
+    def step(self, st: list, rows: List[list], wm: int) -> List[list]:
+        history, last_wend, last_values_enc, drain_wend = st
+        step_ms, max_window, n_fields = self.step_ms, self.max_window, len(self.aggs)
+        history.extend(rows)
         emissions = []
         if history:
             history.sort(key=lambda r: r[0])
@@ -204,20 +124,13 @@ def stateful_sliding_window(
             else:
                 wend = (history[0][0] // step_ms + 1) * step_ms
             while wend <= wm and wend <= drain_wend:
-                values = []
-                for i in range(n_fields):
-                    w = windows_ms[i]
-                    in_win = [
-                        r[1 + i]
-                        for r in history
-                        if wend - w <= r[0] < wend and r[1 + n_fields + i]
-                    ]
-                    if limits[i] is not None:
-                        in_win = in_win[-limits[i]:]
-                    v = _agg_pandas(aggs[i], in_win)
-                    if v is None and defaults[i] is not None:
-                        v = defaults[i]
-                    values.append(v)
+                # the window [wend - w, wend) on integer millis
+                values = [
+                    window_agg(history, i, n_fields, wend - w, wend - 1, agg, limit)
+                    for i, (w, agg, limit) in enumerate(
+                        zip(self.windows_ms, self.aggs, self.limits)
+                    )
+                ]
                 # "empty" = no source ROW in the largest window — matching
                 # the batch evaluator, which emits every window end that
                 # received contributions (even all-default ones, e.g. a
@@ -225,12 +138,12 @@ def stateful_sliding_window(
                 any_rows = any(
                     wend - max_window <= r[0] < wend for r in history
                 )
-                should_emit = enable_empty or any_rows
+                should_emit = self.enable_empty or any_rows
                 enc = json.dumps(values, sort_keys=True, default=str)
-                if skip_same and last_values_enc is not None and enc == last_values_enc:
+                if self.skip_same and enc == last_values_enc:
                     should_emit = False
                 if should_emit:
-                    emissions.append(list(key) + [wend - 1] + values)
+                    emissions.append([wend - 1] + values)
                     last_values_enc = enc
                 last_wend = wend
                 wend += step_ms
@@ -249,34 +162,18 @@ def stateful_sliding_window(
                 if history[0][0] < horizon - grace:
                     history = [r for r in history if r[0] >= horizon]
 
-        done = (
-            last_wend is not None
-            and drain_wend is not None
-            and last_wend >= drain_wend
-        )
-        if done:
-            state.remove()
-        else:
-            state.update(
-                (
-                    dumps_state(history),
-                    last_wend,
-                    "null" if last_values_enc is None else last_values_enc,
-                    drain_wend,
-                )
-            )
-            # Wake at the next step past the watermark so windows keep
-            # closing without new input (the Flink analog registers step
-            # timers, SlidingWindowKeyedProcessFunction.java).
-            state.setTimeoutTimestamp(max(wm + step_ms, 1))
+        st[:] = [history, last_wend, last_values_enc, drain_wend]
+        return emissions
 
-        if emissions:
-            yield pd.DataFrame(emissions, columns=[f.name for f in out_fields])
 
-    return prepared.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
-        process_key,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+def stateful_sliding_window(
+    df: DataFrame,
+    view: SlidingFeatureView,
+) -> DataFrame:
+    """Apply the stateful sliding operator to a streaming DataFrame carrying
+    EVENT_TIME_COL.  Returns keys + window_time ms + agg feature columns."""
+    transforms = [f.transform for f in view.sliding_features()]
+    return keyed_state(
+        [(df, value_flag_columns(transforms))], view.group_by_keys,
+        _SlidingFold(view),
     )

@@ -18,6 +18,11 @@ subclass overrides only what runs differently on a stream:
   otherwise Spark's native ``groupBy(window(ts, size, step))`` aggregation
   in append mode.
 
+The stateful operators are folds of one keyed-state driver
+(``keyed_state.py``).  A streaming view may hold one of them: a second one
+in the same plan raises ``PlanError`` at compile time, since Spark would
+refuse to start the query; such a view needs the batch path.
+
 Sinks → native streaming writers where they exist (kafka, file, noop),
 ``foreachBatch`` + the batch sink writer otherwise.
 """
@@ -75,9 +80,10 @@ def _watermarked(df: DataFrame, delay_ms: int) -> DataFrame:
     """``df`` with a watermark on its event-time column.  ``withWatermark``
     tags the column's metadata with ``spark.watermarkDelayMs``; a stateful
     operator's output column no longer carries the tag (yet a following
-    stateful operator's event-time timeout needs a watermarked input), and
-    re-watermarking a tagged column fails ("Redefining watermark is
-    disallowed").  So the tag alone decides."""
+    native windowed aggregation needs a watermarked input; a following
+    stateful operator is refused by ``keyed_state``), and re-watermarking
+    a tagged column fails ("Redefining watermark is disallowed").  So the
+    tag alone decides."""
     if (
         EVENT_TIME_COL not in df.columns
         or "spark.watermarkDelayMs" in df.schema[EVENT_TIME_COL].metadata

@@ -1,7 +1,7 @@
 """Regression pins for the round-11 advisor findings (ADVICE.md r11):
-JDBC upsert batch dedupe + unique staging, stable Kafka checkpoint
-defaults, SQL online-store reconnect, and the parallelism bracket
-parser."""
+JDBC upsert batch dedupe + unique staging, SQL online-store reconnect,
+and the parallelism bracket parser.  The Kafka checkpoint default test
+lives in test_streaming.py."""
 
 import sqlite3
 
@@ -61,51 +61,6 @@ def test_dedupe_for_upsert_skips_unorderable_map_columns(spark):
     )
     out = dedupe_for_upsert(df, ["k"], None).collect()
     assert len(out) == 1 and out[0]["v"] == 2.0
-
-
-def test_kafka_default_checkpoint_stable_and_collision_guarded(spark):
-    """The derived default checkpoint path must be STABLE across start()
-    calls (restart-resume) and refuse a second LIVE query on the same
-    derived path."""
-    import pytest
-
-    from feathub_spark.common.exceptions import PlanError
-    from feathub_spark.feature_tables.sinks.connector_sinks import KafkaSink
-    from feathub_spark.streaming import stream_builder as sb
-
-    sink = KafkaSink(bootstrap_server="localhost:9092", topic="t1")
-    p1 = sb._default_kafka_checkpoint_dir("qname", sink)
-    p2 = sb._default_kafka_checkpoint_dir("qname", sink)
-    assert p1 == p2
-
-    class _FakeQuery:
-        isActive = True
-
-    sb._ACTIVE_DEFAULT_CKPTS[p1] = _FakeQuery()
-    try:
-        with pytest.raises(PlanError):
-            sb._default_kafka_checkpoint_dir("qname", sink)
-        # a STOPPED query releases the path for resume
-        sb._ACTIVE_DEFAULT_CKPTS[p1].isActive = False
-        assert sb._default_kafka_checkpoint_dir("qname", sink) == p1
-
-        # a DEAD query handle (stopped JVM/session: isActive raises)
-        # must release the path, not crash the guard
-        class _DeadQuery:
-            @property
-            def isActive(self):
-                raise RuntimeError("JVM gone")
-
-        sb._ACTIVE_DEFAULT_CKPTS[p1] = _DeadQuery()
-        assert sb._default_kafka_checkpoint_dir("qname", sink) == p1
-    finally:
-        sb._ACTIVE_DEFAULT_CKPTS.pop(p1, None)
-    # UNNAMED queries keep per-start unique temp dirs: with no identity
-    # there is nothing safe to resume by, and two independent unnamed
-    # writers to one topic must never share a checkpoint
-    p3 = sb._default_kafka_checkpoint_dir(None, sink)
-    p4 = sb._default_kafka_checkpoint_dir(None, sink)
-    assert p3 != p4
 
 
 def test_sql_online_store_reconnects_after_dead_connection(tmp_path):

@@ -1,6 +1,6 @@
 """Round-12 review fixes (ADVICE.md r11): ndarray-safe online-store codec,
-checkpoint identity folded into the named-query digest + file-sink liveness
-registration, protobuf writer master fallback, SequenceField span check."""
+protobuf writer master fallback, SequenceField span check.  The checkpoint
+identity tests live in test_streaming.py."""
 
 import numpy as np
 import pytest
@@ -36,55 +36,6 @@ class TestPyNdarray:
         assert decode_field(raw) == [1.0, 2.5]
         raw = encode_field(np.array([5]))
         assert decode_field(raw) == [5]  # '[5]', never the scalar '5'
-
-
-class TestCheckpointIdentity:
-    def test_named_paths_differ_by_sink_identity(self):
-        from feathub_spark.streaming.stream_builder import (
-            _default_stream_checkpoint_dir,
-        )
-
-        a = _default_stream_checkpoint_dir("q1", "file_/tmp/out_a")
-        b = _default_stream_checkpoint_dir("q1", "kafka_topic@host:9092")
-        assert a != b  # same query_name, different sinks -> distinct ckpts
-
-    def test_named_path_stable_for_same_identity(self):
-        from feathub_spark.streaming.stream_builder import (
-            _default_stream_checkpoint_dir,
-        )
-
-        a = _default_stream_checkpoint_dir("q2", "file_/tmp/out")
-        b = _default_stream_checkpoint_dir("q2", "file_/tmp/out")
-        assert a == b
-
-    def test_dead_claim_is_pruned(self):
-        from feathub_spark.streaming import stream_builder as sb
-
-        class DeadQuery:
-            @property
-            def isActive(self):
-                raise RuntimeError("jvm gone")
-
-        path = sb._default_stream_checkpoint_dir("q3", "file_/tmp/out3")
-        sb._ACTIVE_DEFAULT_CKPTS[path] = DeadQuery()
-        again = sb._default_stream_checkpoint_dir("q3", "file_/tmp/out3")
-        assert again == path
-        assert path not in sb._ACTIVE_DEFAULT_CKPTS  # ref released
-
-    def test_live_claim_refused(self):
-        from feathub_spark.common.exceptions import PlanError
-        from feathub_spark.streaming import stream_builder as sb
-
-        class LiveQuery:
-            isActive = True
-
-        path = sb._default_stream_checkpoint_dir("q4", "file_/tmp/out4")
-        sb._ACTIVE_DEFAULT_CKPTS[path] = LiveQuery()
-        try:
-            with pytest.raises(PlanError):
-                sb._default_stream_checkpoint_dir("q4", "file_/tmp/out4")
-        finally:
-            del sb._ACTIVE_DEFAULT_CKPTS[path]
 
 
 class TestSequenceFieldSpan:

@@ -1,10 +1,9 @@
 """Round-13 review fixes (ADVICE.md r12): backslash-escape-aware
 backtick rewriting for the serving-path DuckDB dialect bridge,
 partition-layout-preserving compact_files, case-insensitive JDBC bounds
-probe, legacy checkpoint migration, and null-safe streaming as-of tie
-encoding."""
+probe.  The legacy checkpoint migration and streaming as-of tie encoding
+tests live in test_streaming.py."""
 
-import json
 import os
 
 import duckdb
@@ -142,108 +141,6 @@ class TestCompactFilesPartitioned:
         ).write.partitionBy("p").parquet(src)
         compact_files(spark, src)
         assert spark.conf.get(key) == prev
-
-
-class TestCheckpointMigration:
-    def test_legacy_name_only_path_is_reused(self, tmp_path, monkeypatch):
-        import hashlib
-        import re
-        import tempfile
-
-        from feathub_spark.streaming.stream_builder import (
-            _default_stream_checkpoint_dir,
-        )
-
-        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-        name, ident = "r13_migrate_q", "file_/tmp/out"
-        slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", name)[:80]
-        legacy_digest = hashlib.sha256(name.encode()).hexdigest()[:12]
-        legacy = tmp_path / "feathub_spark_ckpt" / f"{slug}_{legacy_digest}"
-        (legacy / "offsets").mkdir(parents=True)
-        (legacy / "offsets" / "0").write_text("{}")
-
-        path = _default_stream_checkpoint_dir(name, ident)
-        assert not legacy.exists()  # moved, not copied
-        assert os.path.isfile(os.path.join(path, "offsets", "0"))
-
-    def test_fresh_name_gets_fresh_dir(self, tmp_path, monkeypatch):
-        import tempfile
-
-        from feathub_spark.streaming.stream_builder import (
-            _default_stream_checkpoint_dir,
-        )
-
-        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-        path = _default_stream_checkpoint_dir("r13_fresh_q", "file_/x")
-        assert os.path.isdir(path)
-        assert os.listdir(path) == []
-
-    def test_existing_new_path_wins_over_legacy(self, tmp_path, monkeypatch):
-        import hashlib
-        import re
-        import tempfile
-
-        from feathub_spark.streaming.stream_builder import (
-            _default_stream_checkpoint_dir,
-        )
-
-        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-        name, ident = "r13_both_q", "file_/tmp/out"
-        new_path = _default_stream_checkpoint_dir(name, ident)
-        marker = os.path.join(new_path, "commits")
-        os.makedirs(marker)
-
-        slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", name)[:80]
-        legacy_digest = hashlib.sha256(name.encode()).hexdigest()[:12]
-        legacy = tmp_path / "feathub_spark_ckpt" / f"{slug}_{legacy_digest}"
-        (legacy / "offsets").mkdir(parents=True)
-
-        again = _default_stream_checkpoint_dir(name, ident)
-        assert again == new_path
-        assert os.path.isdir(marker)  # untouched
-        assert legacy.exists()  # NOT stolen once the new path exists
-
-
-class TestAsofTieEncoding:
-    def _key_fn(self, payload_fields):
-        from feathub_spark.streaming.stateful_asof_join import _tie_encode
-
-        def key(rjson):
-            vals = json.loads(rjson)
-            return tuple(_tie_encode(vals.get(n)) for n in payload_fields)
-
-        return key
-
-    def test_null_array_elements_do_not_raise(self):
-        key = self._key_fn(["arr"])
-        a = key(json.dumps({"arr": [1.0, None, 3.0]}))
-        b = key(json.dumps({"arr": [1.0, 2.0, 3.0]}))
-        # nulls-first ordering, no TypeError: [1, null, 3] < [1, 2, 3]
-        assert a < b
-
-    def test_prefix_array_sorts_first(self):
-        key = self._key_fn(["arr"])
-        assert key(json.dumps({"arr": [1, 2]})) < key(
-            json.dumps({"arr": [1, 2, 0]})
-        )
-
-    def test_nested_null_array(self):
-        key = self._key_fn(["arr"])
-        a = key(json.dumps({"arr": [[1, None], [2]]}))
-        b = key(json.dumps({"arr": [[1, 0], [2]]}))
-        assert a < b
-
-    def test_dropped_null_field_sorts_first(self):
-        # to_json drops null fields entirely; .get() must yield the
-        # nulls-first encoding, not KeyError
-        key = self._key_fn(["v", "w"])
-        assert key(json.dumps({"w": 1})) < key(json.dumps({"v": 0, "w": 1}))
-
-    def test_map_payloads_compare_equal(self):
-        key = self._key_fn(["m", "v"])
-        a = key(json.dumps({"m": {"x": 1}, "v": 5}))
-        b = key(json.dumps({"m": {"y": 9}, "v": 7}))
-        assert a < b  # maps tie; the orderable field still decides
 
 
 class TestJdbcBoundsCaseFolding:

@@ -2,6 +2,7 @@
 sliding window -> in-memory streaming sink; results must agree with the
 batch path on the same data (stream-batch unification)."""
 
+import json
 import os
 import time
 from datetime import timedelta
@@ -703,3 +704,473 @@ def test_streaming_registers_no_temp_views(client, tmp_path):
         assert not client.spark.table(name).isStreaming
     totals = client.spark.sql("SELECT total FROM stream_tv_view").collect()
     assert sorted(r.total for r in totals) == [200, 450, 500, 650, 1000, 1400]
+
+
+def test_kafka_default_checkpoint_stable_and_collision_guarded(spark):
+    """The derived default checkpoint path must be STABLE across start()
+    calls (restart-resume) and refuse a second LIVE query on the same
+    derived path."""
+    import pytest
+
+    from feathub_spark.common.exceptions import PlanError
+    from feathub_spark.feature_tables.sinks.connector_sinks import KafkaSink
+    from feathub_spark.streaming import stream_builder as sb
+
+    sink = KafkaSink(bootstrap_server="localhost:9092", topic="t1")
+    p1 = sb._default_kafka_checkpoint_dir("qname", sink)
+    p2 = sb._default_kafka_checkpoint_dir("qname", sink)
+    assert p1 == p2
+
+    class _FakeQuery:
+        isActive = True
+
+    sb._ACTIVE_DEFAULT_CKPTS[p1] = _FakeQuery()
+    try:
+        with pytest.raises(PlanError):
+            sb._default_kafka_checkpoint_dir("qname", sink)
+        # a STOPPED query releases the path for resume
+        sb._ACTIVE_DEFAULT_CKPTS[p1].isActive = False
+        assert sb._default_kafka_checkpoint_dir("qname", sink) == p1
+
+        # a DEAD query handle (stopped JVM/session: isActive raises)
+        # must release the path, not crash the guard
+        class _DeadQuery:
+            @property
+            def isActive(self):
+                raise RuntimeError("JVM gone")
+
+        sb._ACTIVE_DEFAULT_CKPTS[p1] = _DeadQuery()
+        assert sb._default_kafka_checkpoint_dir("qname", sink) == p1
+    finally:
+        sb._ACTIVE_DEFAULT_CKPTS.pop(p1, None)
+    # UNNAMED queries keep per-start unique temp dirs: with no identity
+    # there is nothing safe to resume by, and two independent unnamed
+    # writers to one topic must never share a checkpoint
+    p3 = sb._default_kafka_checkpoint_dir(None, sink)
+    p4 = sb._default_kafka_checkpoint_dir(None, sink)
+    assert p3 != p4
+
+
+class TestCheckpointIdentity:
+    def test_named_paths_differ_by_sink_identity(self):
+        from feathub_spark.streaming.stream_builder import (
+            _default_stream_checkpoint_dir,
+        )
+
+        a = _default_stream_checkpoint_dir("q1", "file_/tmp/out_a")
+        b = _default_stream_checkpoint_dir("q1", "kafka_topic@host:9092")
+        assert a != b  # same query_name, different sinks -> distinct ckpts
+
+    def test_named_path_stable_for_same_identity(self):
+        from feathub_spark.streaming.stream_builder import (
+            _default_stream_checkpoint_dir,
+        )
+
+        a = _default_stream_checkpoint_dir("q2", "file_/tmp/out")
+        b = _default_stream_checkpoint_dir("q2", "file_/tmp/out")
+        assert a == b
+
+    def test_dead_claim_is_pruned(self):
+        from feathub_spark.streaming import stream_builder as sb
+
+        class DeadQuery:
+            @property
+            def isActive(self):
+                raise RuntimeError("jvm gone")
+
+        path = sb._default_stream_checkpoint_dir("q3", "file_/tmp/out3")
+        sb._ACTIVE_DEFAULT_CKPTS[path] = DeadQuery()
+        again = sb._default_stream_checkpoint_dir("q3", "file_/tmp/out3")
+        assert again == path
+        assert path not in sb._ACTIVE_DEFAULT_CKPTS  # ref released
+
+    def test_live_claim_refused(self):
+        from feathub_spark.common.exceptions import PlanError
+        from feathub_spark.streaming import stream_builder as sb
+
+        class LiveQuery:
+            isActive = True
+
+        path = sb._default_stream_checkpoint_dir("q4", "file_/tmp/out4")
+        sb._ACTIVE_DEFAULT_CKPTS[path] = LiveQuery()
+        try:
+            with pytest.raises(PlanError):
+                sb._default_stream_checkpoint_dir("q4", "file_/tmp/out4")
+        finally:
+            del sb._ACTIVE_DEFAULT_CKPTS[path]
+
+
+class TestCheckpointMigration:
+    def test_legacy_name_only_path_is_reused(self, tmp_path, monkeypatch):
+        import hashlib
+        import re
+        import tempfile
+
+        from feathub_spark.streaming.stream_builder import (
+            _default_stream_checkpoint_dir,
+        )
+
+        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+        name, ident = "r13_migrate_q", "file_/tmp/out"
+        slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", name)[:80]
+        legacy_digest = hashlib.sha256(name.encode()).hexdigest()[:12]
+        legacy = tmp_path / "feathub_spark_ckpt" / f"{slug}_{legacy_digest}"
+        (legacy / "offsets").mkdir(parents=True)
+        (legacy / "offsets" / "0").write_text("{}")
+
+        path = _default_stream_checkpoint_dir(name, ident)
+        assert not legacy.exists()  # moved, not copied
+        assert os.path.isfile(os.path.join(path, "offsets", "0"))
+
+    def test_fresh_name_gets_fresh_dir(self, tmp_path, monkeypatch):
+        import tempfile
+
+        from feathub_spark.streaming.stream_builder import (
+            _default_stream_checkpoint_dir,
+        )
+
+        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+        path = _default_stream_checkpoint_dir("r13_fresh_q", "file_/x")
+        assert os.path.isdir(path)
+        assert os.listdir(path) == []
+
+    def test_existing_new_path_wins_over_legacy(self, tmp_path, monkeypatch):
+        import hashlib
+        import re
+        import tempfile
+
+        from feathub_spark.streaming.stream_builder import (
+            _default_stream_checkpoint_dir,
+        )
+
+        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+        name, ident = "r13_both_q", "file_/tmp/out"
+        new_path = _default_stream_checkpoint_dir(name, ident)
+        marker = os.path.join(new_path, "commits")
+        os.makedirs(marker)
+
+        slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", name)[:80]
+        legacy_digest = hashlib.sha256(name.encode()).hexdigest()[:12]
+        legacy = tmp_path / "feathub_spark_ckpt" / f"{slug}_{legacy_digest}"
+        (legacy / "offsets").mkdir(parents=True)
+
+        again = _default_stream_checkpoint_dir(name, ident)
+        assert again == new_path
+        assert os.path.isdir(marker)  # untouched
+        assert legacy.exists()  # NOT stolen once the new path exists
+
+
+class TestAsofTieEncoding:
+    def _key_fn(self, payload_fields):
+        from feathub_spark.streaming.stateful_asof_join import _tie_encode
+
+        def key(rjson):
+            vals = json.loads(rjson)
+            return tuple(_tie_encode(vals.get(n)) for n in payload_fields)
+
+        return key
+
+    def test_null_array_elements_do_not_raise(self):
+        key = self._key_fn(["arr"])
+        a = key(json.dumps({"arr": [1.0, None, 3.0]}))
+        b = key(json.dumps({"arr": [1.0, 2.0, 3.0]}))
+        # nulls-first ordering, no TypeError: [1, null, 3] < [1, 2, 3]
+        assert a < b
+
+    def test_prefix_array_sorts_first(self):
+        key = self._key_fn(["arr"])
+        assert key(json.dumps({"arr": [1, 2]})) < key(
+            json.dumps({"arr": [1, 2, 0]})
+        )
+
+    def test_nested_null_array(self):
+        key = self._key_fn(["arr"])
+        a = key(json.dumps({"arr": [[1, None], [2]]}))
+        b = key(json.dumps({"arr": [[1, 0], [2]]}))
+        assert a < b
+
+    def test_dropped_null_field_sorts_first(self):
+        # to_json drops null fields entirely; .get() must yield the
+        # nulls-first encoding, not KeyError
+        key = self._key_fn(["v", "w"])
+        assert key(json.dumps({"w": 1})) < key(json.dumps({"v": 0, "w": 1}))
+
+    def test_map_payloads_compare_equal(self):
+        key = self._key_fn(["m", "v"])
+        a = key(json.dumps({"m": {"x": 1}, "v": 5}))
+        b = key(json.dumps({"m": {"y": 9}, "v": 7}))
+        assert a < b  # maps tie; the orderable field still decides
+
+
+def _over(name, keys=("name",)):
+    from feathub_spark.feature_views.transforms import OverWindowTransform
+
+    return Feature(
+        name,
+        transform=OverWindowTransform(
+            "cost", "SUM", window_size=timedelta(days=2), group_by_keys=list(keys)
+        ),
+    )
+
+
+@pytest.mark.parametrize(
+    "shape",
+    ["asof_and_over", "over_two_key_sets", "asof_right_over_view", "over_view_over_over_view"],
+)
+def test_streaming_second_stateful_stage_raises(client, tmp_path, shape):
+    """Spark compiles a streaming query with two applyInPandasWithState
+    stages but refuses to start it; the streaming compile raises PlanError
+    naming the batch path, which still computes the view."""
+    source = _stream_source(tmp_path, f"two_src_{shape}")
+    right = DerivedFeatureView(
+        name=f"two_right_{shape}",
+        source=source,
+        features=[
+            _over("r_total")
+            if shape == "asof_right_over_view"
+            else Feature("r_total", transform="cost + distance")
+        ],
+    )
+    inner = DerivedFeatureView(
+        name=f"two_inner_{shape}", source=source, features=[_over("sum_1")],
+        keep_source_fields=True,
+    )
+    features = {
+        "asof_and_over": [f"{right.name}.r_total", _over("sum_2")],
+        "over_two_key_sets": [_over("sum_2"), _over("sum_3", keys=["distance"])],
+        "asof_right_over_view": [f"{right.name}.r_total"],
+        "over_view_over_over_view": [_over("sum_2")],
+    }[shape]
+    view = DerivedFeatureView(
+        name=f"two_view_{shape}",
+        source=inner if shape == "over_view_over_over_view" else source,
+        features=features,
+        keep_source_fields=True,
+    )
+    view = client.build_features([source, right, inner, view])[3]
+    with pytest.raises(PlanError, match="may hold one stateful stage.*batch path"):
+        client.processor.get_stream_dataframe(view)
+    assert len(client.get_features(view).to_pandas()) == 6
+
+
+@pytest.fixture()
+def few_partitions(spark):
+    """Four state partitions instead of the session's default: a stream
+    with few keys then runs each micro-batch in a fraction of the time."""
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+
+def _write_event_files(d, files, schema):
+    """One parquet file per list of rows, mtimes increasing in list order
+    so a stream with maxFilesPerTrigger=1 reads them in order."""
+    import pandas as pd
+
+    os.makedirs(d, exist_ok=True)
+    base = time.time() - 1000
+    for name, rows in files:
+        path = os.path.join(d, f"{name}.parquet")
+        pd.DataFrame(rows, columns=schema).to_parquet(path, index=False)
+        mtime = base + int(name.split("_")[-1])
+        os.utime(path, (mtime, mtime))
+
+
+def _epoch_source(name, path, fields, keys):
+    from feathub_spark import Float64
+
+    builder = Schema.new_builder()
+    for f_ in fields:
+        builder = builder.column(f_, {"user": String, "tp": String, "v": Float64}.get(f_, Int64))
+    return FileSystemSource(
+        name=name, path=path, data_format="parquet", schema=builder.build(),
+        keys=keys, timestamp_field="t", timestamp_format="epoch",
+        max_out_of_orderness=timedelta(seconds=0),
+        data_format_props={"maxFilesPerTrigger": "1"},
+    )
+
+
+def test_unbounded_over_wakes_only_keys_with_rows(client, few_partitions, tmp_path):
+    """With an unbounded over window, a key whose buffered rows have all
+    been emitted is not woken again: later micro-batches update state only
+    for the keys that received rows, and the output still equals batch."""
+    from feathub_spark.feature_views.transforms import OverWindowTransform
+
+    d = os.path.join(str(tmp_path), "wake_in")
+    cols = ["user", "cost", "t"]
+    files = [
+        ("f_0", [("a", 1, 1000), ("b", 2, 2000), ("c", 3, 3000), ("b", 4, 4000),
+                 ("c", 5, 5000), ("a", 6, 10000)]),
+        ("f_1", [("a", 7, 11000), ("a", 8, 12000)]),
+        ("f_2", [("a", 9, 13000)]),
+        ("f_3", [("a", 10, 14000), ("zed", 0, 1_000_000)]),
+    ]
+    _write_event_files(d, files, cols)
+    source = _epoch_source("wake_src", d, cols, ["user"])
+
+    def make_view(name):
+        return DerivedFeatureView(
+            name=name,
+            source=source,
+            features=[
+                Feature(
+                    "life_sum",
+                    transform=OverWindowTransform("cost", "SUM", group_by_keys=["user"]),
+                )
+            ],
+            keep_source_fields=True,
+        )
+
+    view = client.build_features([source, make_view("wake_view")])[1]
+    df = client.processor.get_stream_dataframe(view)
+    query = (
+        df.writeStream.outputMode("append").format("memory")
+        .queryName("wake_out").trigger(availableNow=True).start()
+    )
+    assert query.awaitTermination(120)
+    data_batches = [
+        json.loads(p.json) for p in query.recentProgress
+        if json.loads(p.json)["numInputRows"] > 0
+    ]
+    assert len(data_batches) == len(files)
+    for (_, rows), progress in list(zip(files, data_batches))[2:]:
+        keys_with_rows = len({r[0] for r in rows})
+        assert progress["stateOperators"][0]["numRowsUpdated"] <= keys_with_rows
+
+    # the sentinel's own row stays ahead of the final watermark
+    stream = {
+        (r.user, r.t): r.life_sum
+        for r in client.spark.sql("SELECT * FROM wake_out").collect()
+    }
+    batch_view = client.build_features([make_view("wake_batch_view")])[0]
+    batch = {
+        (r["user"], r["t"]): r["life_sum"]
+        for _, r in client.get_features(batch_view).to_pandas().iterrows()
+        if r["user"] != "zed"
+    }
+    assert len(stream) == sum(len(rows) for _, rows in files) - 1
+    assert stream == batch
+
+
+def _restart_stream(client, op, d, right_d, tag):
+    """The streaming DataFrame of ``op`` over the event files in ``d`` (and
+    the as-of join's right-side files in ``right_d``)."""
+    from pyspark.sql import functions as F
+
+    from feathub_spark.feature_views.transforms import OverWindowTransform
+    from feathub_spark.streaming.stateful_funnel import stateful_funnel
+    from feathub_spark.streaming.stateful_scd2 import stateful_scd2
+
+    if op in ("scd2", "funnel"):
+        raw = (
+            client.spark.readStream.schema("user string, tp string, v double, t long")
+            .option("maxFilesPerTrigger", "1").parquet(d)
+            .withColumn("__ts__", F.timestamp_seconds(F.col("t")))
+            .withWatermark("__ts__", "1 second")
+        )
+        if op == "scd2":
+            return stateful_scd2(raw, "user", "tp", event_time_col="__ts__")
+        return stateful_funnel(
+            raw, "user", "tp", ["view", "click", "buy"], event_time_col="__ts__"
+        )
+    source = _epoch_source(f"rs_{op}_{tag}", d, ["user", "tp", "v", "t"], ["user"])
+    descriptors = [source]
+    if op == "sliding":
+        view = SlidingFeatureView(
+            name=f"rs_view_{op}_{tag}",
+            source=source,
+            features=[
+                Feature(
+                    f"v_{agg.lower()}",
+                    transform=SlidingWindowTransform(
+                        "v", agg, window_size=timedelta(seconds=w),
+                        step_size=timedelta(seconds=50), group_by_keys=["user"],
+                    ),
+                )
+                for agg, w in (("SUM", 100), ("COUNT", 300), ("MAX", 100))
+            ],
+        )
+    elif op == "over":
+        view = DerivedFeatureView(
+            name=f"rs_view_{op}_{tag}",
+            source=source,
+            features=[
+                Feature(
+                    "v_sum",
+                    transform=OverWindowTransform(
+                        "v", "SUM", window_size=timedelta(seconds=200),
+                        group_by_keys=["user"],
+                    ),
+                )
+            ],
+            keep_source_fields=True,
+        )
+    else:
+        right = _epoch_source(f"rs_right_{tag}", right_d, ["user", "rv", "t"], ["user"])
+        descriptors.append(right)
+        view = DerivedFeatureView(
+            name=f"rs_view_{op}_{tag}", source=source,
+            features=[f"{right.name}.rv"], keep_source_fields=True,
+        )
+    view = client.build_features(descriptors + [view])[-1]
+    return client.processor.get_stream_dataframe(view)
+
+
+def _run_checkpointed(df, ckpt):
+    """Drain ``df`` with availableNow on checkpoint ``ckpt``; returns the
+    emitted rows as tuples."""
+    rows = []
+    query = (
+        df.writeStream.outputMode("append")
+        .foreachBatch(lambda b, _: rows.extend(tuple(r) for r in b.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start()
+    )
+    assert query.awaitTermination(120)
+    assert query.exception() is None
+    return rows
+
+
+@pytest.mark.parametrize("op", ["sliding", "over", "asof", "scd2", "funnel"])
+def test_stateful_state_survives_restart(client, few_partitions, tmp_path, op):
+    """A stateful stream stopped after its first files and restarted on the
+    same checkpoint once more files arrive emits exactly the rows of one
+    uninterrupted run over all the files."""
+    import random
+
+    rnd = random.Random(7)
+    files, right_files = [], []
+    for i in range(3):
+        rows = [
+            (f"u{rnd.randrange(8)}", rnd.choice(["view", "click", "buy"]),
+             float(rnd.randrange(100)), i * 250 + j * 10)
+            for j in range(20)
+        ]
+        right = [(f"u{rnd.randrange(8)}", rnd.randrange(50), i * 250 + j * 40) for j in range(6)]
+        if i == 2:
+            rows.append(("zz", "view", 0.0, 100_000))
+            right.append(("zz", 0, 100_000))
+        files.append((f"e_{i}", rows))
+        right_files.append((f"r_{i}", right))
+
+    root = str(tmp_path)
+    cols, right_cols = ["user", "tp", "v", "t"], ["user", "rv", "t"]
+    dirs = {tag: (os.path.join(root, f"in_{tag}"), os.path.join(root, f"right_{tag}"))
+            for tag in ("whole", "split")}
+    ckpt = os.path.join(root, "ck_split")
+    _write_event_files(dirs["whole"][0], files, cols)
+    _write_event_files(dirs["whole"][1], right_files, right_cols)
+    whole = _run_checkpointed(
+        _restart_stream(client, op, *dirs["whole"], "whole"),
+        os.path.join(root, "ck_whole"),
+    )
+    _write_event_files(dirs["split"][0], files[:2], cols)
+    _write_event_files(dirs["split"][1], right_files[:2], right_cols)
+    first = _run_checkpointed(_restart_stream(client, op, *dirs["split"], "split"), ckpt)
+    _write_event_files(dirs["split"][0], files[2:], cols)
+    _write_event_files(dirs["split"][1], right_files[2:], right_cols)
+    second = _run_checkpointed(_restart_stream(client, op, *dirs["split"], "split"), ckpt)
+
+    assert len(first) > 0 and len(second) > 0
+    assert sorted(map(repr, first + second)) == sorted(map(repr, whole))
