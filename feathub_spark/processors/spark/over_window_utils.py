@@ -87,6 +87,22 @@ def _is_orderable(dtype: t.DType) -> bool:
     return True
 
 
+def _sort_pairs_sql(pairs_sql: str, agg: AggFunc, dtype: t.DType) -> str:
+    """``array_sort`` of an array of ``struct(t, v)`` rows for a field of
+    ``agg`` and output ``dtype``: by (t, v) when the value is orderable, by
+    ``t`` alone otherwise — Spark rejects map-typed values in struct
+    comparisons, so tied times then keep no value order, as FIRST/LAST over
+    maps already do."""
+    if agg == AggFunc.VALUE_COUNTS and isinstance(dtype, t.MapType):
+        dtype = dtype.key_dtype  # the output map is keyed by the value
+    if _is_orderable(dtype):
+        return f"array_sort({pairs_sql})"
+    return (
+        f"array_sort({pairs_sql}, (a, b) -> "
+        "CASE WHEN a.t < b.t THEN -1 WHEN a.t > b.t THEN 1 ELSE 0 END)"
+    )
+
+
 def _window_spec(
     desc: OverWindowDescriptor, fields: Sequence["AggField"] = (),
 ) -> WindowSpec:
@@ -852,7 +868,10 @@ def evaluate_over_window(
                 collected = F.expr(f"collect_list({pair})").over(spec)
                 tmp = f"__collect_{f_.name}__"
                 df = df.withColumn(tmp, collected)
-                sorted_vals = f"transform(array_sort(`{tmp}`), s -> s.v)"
+                sorted_vals = (
+                    f"transform({_sort_pairs_sql(f'`{tmp}`', f_.agg_func, f_.dtype)}, "
+                    "s -> s.v)"
+                )
                 if desc.limit is not None:
                     sorted_vals = (
                         f"slice({sorted_vals}, "

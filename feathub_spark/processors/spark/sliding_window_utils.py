@@ -50,6 +50,7 @@ from feathub_spark.processors.spark.over_window_utils import (
     _array_agg_sql,
     _filtered_value_sql,
     _is_orderable,
+    _sort_pairs_sql,
 )
 
 _MS = "__ms__"
@@ -153,7 +154,7 @@ def evaluate_sliding_window(
                 if f_.filter_sql is not None
                 else base_pair
             )
-            arr = f"array_sort(collect_list({pair}))"
+            arr = _sort_pairs_sql(f"collect_list({pair})", a, f_.dtype)
             if f_.limit is not None:
                 arr = (
                     f"slice({arr}, greatest(1, size({arr}) + 1 - {f_.limit}), "
@@ -333,7 +334,7 @@ def evaluate_sliding_window(
         if f_.vc_distributive:
             continue  # joined in below as a ready-made map column
         if f_.uses_array:
-            arr = f"array_sort(`{p}arr`)"
+            arr = _sort_pairs_sql(f"`{p}arr`", a, f_.dtype)
             if f_.limit is not None:
                 arr = (
                     f"slice({arr}, greatest(1, size({arr}) + 1 - {f_.limit}), "

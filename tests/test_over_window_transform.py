@@ -423,3 +423,32 @@ def test_bounded_value_counts_negative_timestamps(client, tmp_path):
             if t - 3 <= tt <= t:
                 expected[vv] = expected.get(vv, 0) + 1
         assert got[t] == expected, f"ts {t}"
+
+
+def test_collect_list_over_map_values(client, tmp_path):
+    """COLLECT_LIST over a map-typed value: maps are unorderable, so the
+    collected (time, value) pairs sort on time alone."""
+    from feathub_spark.common.types import Int64, MapType, String, VectorType
+
+    source = write_f1_source(tmp_path)
+    view = DerivedFeatureView(
+        name="ow_map_list",
+        source=source,
+        features=[
+            Feature(
+                "costs_2d",
+                transform=OverWindowTransform(
+                    "MAP('c', cost)", "COLLECT_LIST",
+                    window_size=timedelta(days=2), group_by_keys=["name"],
+                ),
+                dtype=VectorType(MapType(String, Int64)),
+            ),
+        ],
+        keep_source_fields=True,
+    )
+    client.build_features([source, view])
+    got = [[dict(m) for m in v] for v in _by_time(client, view)["costs_2d"]]
+    assert got == [
+        [{"c": 100}], [{"c": 400}], [{"c": 100}, {"c": 300}],
+        [{"c": 400}, {"c": 200}], [{"c": 500}], [{"c": 300}, {"c": 600}],
+    ]

@@ -1174,3 +1174,249 @@ def test_stateful_state_survives_restart(client, few_partitions, tmp_path, op):
 
     assert len(first) > 0 and len(second) > 0
     assert sorted(map(repr, first + second)) == sorted(map(repr, whole))
+
+
+def _multi_size_view(source, name, step_s=50, windows=None):
+    """A multi-size sliding view with no emission flags over ``v``/``tp``
+    (``_epoch_source`` columns): every aggregation the native path lowers,
+    filtered FIRST/LAST/COUNT, one step shared by every size."""
+    windows = windows or {"s": 1, "a": 2, "mn": 1, "mx": 3, "c": 2, "fv": 1,
+                          "lv": 3, "cl": 2, "n": 4}
+    spec = {
+        "s": ("v", "SUM", None), "a": ("v", "AVG", None),
+        "mn": ("v", "MIN", None), "mx": ("v", "MAX", None),
+        "c": ("v", "COUNT", "tp = 'click'"), "fv": ("v", "FIRST_VALUE", "v > 30"),
+        "lv": ("v", "LAST_VALUE", "tp <> 'buy'"), "cl": ("v", "COLLECT_LIST", None),
+        "n": ("v", "COUNT", None),
+    }
+    return SlidingFeatureView(
+        name=name,
+        source=source,
+        features=[
+            Feature(
+                f_,
+                transform=SlidingWindowTransform(
+                    spec[f_][0], spec[f_][1],
+                    window_size=timedelta(seconds=steps * step_s),
+                    step_size=timedelta(seconds=step_s),
+                    group_by_keys=["user"], filter_expr=spec[f_][2],
+                ),
+            )
+            for f_, steps in windows.items()
+        ],
+        enable_empty_window_output=False,
+        skip_same_window_output=False,
+    )
+
+
+def _raw_epoch_stream(spark, d):
+    """The event files of ``d`` as a watermarked stream carrying the
+    engine's event-time column, for calling a stateful operator directly."""
+    from pyspark.sql import functions as F
+
+    from feathub_spark.processors.spark.constants import EVENT_TIME_COL
+
+    return (
+        spark.readStream.schema("user string, tp string, v double, t long")
+        .option("maxFilesPerTrigger", "1").parquet(d)
+        .withColumn(EVENT_TIME_COL, F.timestamp_seconds(F.col("t")))
+        .withWatermark(EVENT_TIME_COL, "1 millisecond")
+    )
+
+
+def _multi_size_files(seed):
+    """Three files of keyed rows in event-time order with unique times
+    (FIRST/LAST and COLLECT_LIST are then order-deterministic), some NULL
+    values, and a sentinel key in the last file far past every window."""
+    import random
+
+    rnd = random.Random(seed)
+    times = sorted(rnd.sample(range(1, 1500), 90))
+    files = []
+    for i in range(3):
+        rows = [
+            (f"u{rnd.randrange(5)}", rnd.choice(["view", "click", "buy"]),
+             None if rnd.random() < 0.1 else float(rnd.randrange(100)), t)
+            for t in times[i * 30:(i + 1) * 30]
+        ]
+        if i == 2:
+            rows.append(("zz", "view", 0.0, 100_000))
+        files.append((f"e_{i}", rows))
+    return files
+
+
+def _plan(df):
+    return df._jdf.queryExecution().logical().toString()
+
+
+def test_native_multi_size_sliding_equals_stateful_and_batch(
+    client, few_partitions, tmp_path
+):
+    """A multi-size view without emission flags runs as one native windowed
+    aggregation, and emits exactly the rows of the stateful operator on the
+    same input and of the batch evaluator: no window missing, none extra."""
+    import math
+
+    from feathub_spark.processors.spark.constants import WINDOW_TIME_MS_COL
+    from feathub_spark.streaming.stateful_sliding import stateful_sliding_window
+
+    d = os.path.join(str(tmp_path), "ms_in")
+    cols = ["user", "tp", "v", "t"]
+    _write_event_files(d, _multi_size_files(11), cols)
+    source = _epoch_source("ms_src", d, cols, ["user"])
+    view = client.build_features([source, _multi_size_view(source, "ms_view")])[1]
+    names = [f_.name for f_ in view.sliding_features()]
+
+    def norm(x):
+        if isinstance(x, float):
+            return None if math.isnan(x) else round(x, 9)
+        if isinstance(x, (list, tuple)) or hasattr(x, "tolist"):
+            return tuple(norm(e) for e in list(x))
+        return x
+
+    def keyed(rows, time_col):
+        return {
+            (r["user"], r[time_col]): tuple(norm(r[n]) for n in names)
+            for r in rows
+            if r["user"] != "zz"
+        }
+
+    def emitted(df, ckpt, time_col):
+        rows = _run_checkpointed(df, str(tmp_path / ckpt))
+        return keyed([dict(zip(df.columns, r)) for r in rows], time_col)
+
+    native_df = client.processor.get_stream_dataframe(view)
+    assert "FlatMapGroupsInPandasWithState" not in _plan(native_df)
+    stateful_df = stateful_sliding_window(_raw_epoch_stream(client.spark, d), view)
+    assert "FlatMapGroupsInPandasWithState" in _plan(stateful_df)
+    native = emitted(native_df, "ck_native", "window_time")
+    stateful = emitted(stateful_df, "ck_stateful", WINDOW_TIME_MS_COL)
+    batch_view = client.build_features([_multi_size_view(source, "ms_batch")])[0]
+    batch = keyed(
+        client.get_features(batch_view).to_pandas().to_dict("records"), "window_time"
+    )
+    assert len(native) > 50
+    assert native == stateful
+    assert native == batch
+
+
+def test_multi_size_sliding_plans_stateful_above_step_bound(client, tmp_path):
+    """A multi-size view whose largest window spans more steps than the
+    native bound plans the stateful operator; one at the bound, and a
+    single-size view of any length, run natively."""
+    from feathub_spark.streaming.stream_builder import (
+        _NATIVE_MULTI_SIZE_MAX_STEPS as bound,
+    )
+
+    d = os.path.join(str(tmp_path), "bound_in")
+    cols = ["user", "tp", "v", "t"]
+    _write_event_files(d, [("e_0", [("u0", "view", 1.0, 1)])], cols)
+    source = client.build_features([_epoch_source("bound_src", d, cols, ["user"])])[0]
+    cases = {
+        "above": ({"s": 1, "n": bound + 1}, True),
+        "at": ({"s": 1, "n": bound}, False),
+        "single": ({"n": bound + 1}, False),
+    }
+    for tag, (windows, stateful) in cases.items():
+        view = client.build_features(
+            [_multi_size_view(source, f"bound_{tag}", windows=windows)]
+        )[0]
+        plan = _plan(client.processor.get_stream_dataframe(view))
+        assert ("FlatMapGroupsInPandasWithState" in plan) == stateful, tag
+
+
+@pytest.mark.parametrize("multi", [False, True])
+def test_streaming_collect_list_over_maps_matches_batch(client, tmp_path, multi):
+    """COLLECT_LIST over a map-typed value (unorderable: its pairs sort on
+    time alone) on the batch path and on the native stream path, with one
+    window size and with a second, larger one."""
+    from feathub_spark.common.types import MapType, VectorType
+
+    source = _stream_source(tmp_path, f"map_list_src_{int(multi)}")
+    with open(os.path.join(source.path, "part_sentinel.csv"), "w") as f:
+        f.write("name,cost,distance,time\n")
+        f.write("Zed,1,1,2022-01-20 00:00:00\n")
+
+    def make_view(name):
+        features = [
+            Feature(
+                "costs",
+                transform=SlidingWindowTransform(
+                    "MAP('c', cost)", "COLLECT_LIST",
+                    window_size=timedelta(days=1), step_size=timedelta(days=1),
+                    group_by_keys=["name"],
+                ),
+                dtype=VectorType(MapType(String, Int64)),
+            )
+        ]
+        if multi:
+            features.append(Feature(
+                "cnt_7d",
+                transform=SlidingWindowTransform(
+                    "cost", "COUNT", window_size=timedelta(days=7),
+                    step_size=timedelta(days=1), group_by_keys=["name"],
+                ),
+            ))
+        return SlidingFeatureView(
+            name=name, source=source, features=features,
+            enable_empty_window_output=False, skip_same_window_output=False,
+        )
+
+    def norm(v):
+        return None if v is None else tuple(tuple(dict(m).items()) for m in v)
+
+    def keyed(rows):
+        return {
+            (r["name"], r["window_time"]): (norm(r["costs"]), r.get("cnt_7d"))
+            for r in rows
+            if r["name"] != "Zed"
+        }
+
+    stream_view = client.build_features([source, make_view(f"map_list_{int(multi)}")])[1]
+    out = _run_to_memory(
+        client.spark, client.processor, stream_view, f"map_list_out_{int(multi)}"
+    )
+    stream = keyed([r.asDict() for r in out.collect()])
+    batch_view = client.build_features([make_view(f"map_list_batch_{int(multi)}")])[0]
+    batch = keyed(client.get_features(batch_view).to_pandas().to_dict("records"))
+    assert batch[("Alex", 1641081600000 - 1)][0] == ((("c", 100),),)
+    assert len(stream) == (24 if multi else 6)
+    assert stream == batch
+
+
+def test_stateful_sliding_checkpoint_refused_by_native_plan(
+    client, few_partitions, tmp_path
+):
+    """A multi-size view checkpointed by the stateful operator, the path
+    such views took before they ran natively, is refused when the native
+    plan resumes it: Spark checks the operator name in the checkpoint's
+    state metadata at start, and the resumed query emits nothing."""
+    from pyspark.errors import StreamingQueryException
+
+    from feathub_spark.streaming.stateful_sliding import stateful_sliding_window
+
+    d = os.path.join(str(tmp_path), "refuse_in")
+    cols = ["user", "tp", "v", "t"]
+    files = _multi_size_files(5)
+    _write_event_files(d, files[:2], cols)
+    source = _epoch_source("refuse_src", d, cols, ["user"])
+    view = client.build_features([source, _multi_size_view(source, "refuse_view")])[1]
+    ckpt = str(tmp_path / "ck")
+    stateful = stateful_sliding_window(_raw_epoch_stream(client.spark, d), view)
+    assert len(_run_checkpointed(stateful, ckpt)) > 0
+
+    _write_event_files(d, files[2:], cols)
+    rows = []
+    query = (
+        client.processor.get_stream_dataframe(view)
+        .writeStream.outputMode("append")
+        .foreachBatch(lambda b, _: rows.extend(b.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start()
+    )
+    with pytest.raises(
+        StreamingQueryException,
+        match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA",
+    ):
+        query.awaitTermination(120)
+    assert rows == []

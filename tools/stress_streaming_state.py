@@ -1,12 +1,14 @@
-"""Streaming state-size stress for the applyInPandasWithState operators.
+"""Streaming state-size stress for the sliding-window view.
 
-docs/SCALE.md pins the sliding operator's measured number (100k events /
-1,500 keys / shared 1d+7d windows); this tool re-runs that shape at an
-arbitrary scale so the claim "state per key is bounded by max_window /
-avg-interval rows, runtime grows linearly in event count" stays a
-measurement, not an assertion.  The round-8 10x run (1M events, same key
-count, ~10x denser per-key history) is recorded next to the original
-number in SCALE.md.
+docs/SCALE.md pins the measured numbers of a 1d+7d sliding view (100k
+events / 1,500 keys); this tool re-runs that shape at an arbitrary scale so
+the state bounds stay a measurement, not an assertion.  The view has no
+emission flags, so it runs as Spark's native windowed aggregation (state
+operator ``stateStoreSave``, one state row per key and open window); the
+result is labelled with the state operator the query reports, so a run on
+the stateful path (``applyInPandasWithState``, one row per key) shows as
+such.  The round-8 10x run (1M events, same key count, ~10x denser
+per-key history) is recorded next to the original number in SCALE.md.
 
 Round 12 adds state-store capture: each run drains the query's progress
 events and reports state rows, state bytes, and per-batch durations, so
@@ -40,14 +42,16 @@ def _progress_metrics(query) -> dict:
     """State-store and batch-duration metrics from the query's retained
     progress events (availableNow runs finish with all batches present)."""
     rows_max = bytes_max = 0
-    batch_ms = []
+    batch_ms, operators = [], set()
     for p in query.recentProgress:
         d = json.loads(p.json) if hasattr(p, "json") else p
         batch_ms.append(d.get("batchDuration") or 0)
         for op in d.get("stateOperators") or []:
+            operators.add(op.get("operatorName"))
             rows_max = max(rows_max, op.get("numRowsTotal") or 0)
             bytes_max = max(bytes_max, op.get("memoryUsedBytes") or 0)
     return {
+        "operator": "+".join(sorted(o or "?" for o in operators)),
         "batches": len(batch_ms),
         "batch_ms_median": (
             round(statistics.median(batch_ms)) if batch_ms else 0
@@ -148,7 +152,7 @@ def run_one(spark, scale: int) -> dict:
 def main() -> None:
     from feathub_spark import default_spark_session
 
-    spark = default_spark_session("stress_streaming_state", cpus=16)
+    spark = default_spark_session("stress_streaming_state", cpus=0)
     spark.sparkContext.setLogLevel("ERROR")
 
     if "--table" in sys.argv:
@@ -165,8 +169,8 @@ def main() -> None:
             scale = int(a)
     res = run_one(spark, scale)
     print(
-        f"RESULT stateful_sliding {res['events']} events / {KEYS} keys "
-        f"(1d+7d shared state): {res['wall_s']}s on local[16]; "
+        f"RESULT {res['operator']} {res['events']} events / {KEYS} keys "
+        f"(1d+7d): {res['wall_s']}s on {spark.sparkContext.master}; "
         f"state_rows_max={res['state_rows_max']} "
         f"state_bytes_max={res['state_bytes_max']} "
         f"batch_ms_median={res['batch_ms_median']}"
