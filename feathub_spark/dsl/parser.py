@@ -244,11 +244,10 @@ class ExprParser:
         return CaseOp(whens, thens, default)
 
 
-_PARSER = ExprParser()
-
-
 def parse_expr(text: str) -> ExprAST:
-    return _PARSER.parse(text)
+    # a parser per call: it keeps its position in its own fields, and
+    # concurrent serving threads lower expressions at the same time
+    return ExprParser().parse(text)
 
 
 def to_spark_sql(expr: str) -> str:

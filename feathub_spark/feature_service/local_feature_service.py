@@ -9,11 +9,18 @@ path without paying a Spark job per request).
 Cost of one call: one store ``get`` per table the view looks up (all of a
 table's features in one lookup, each proportional to the request), then
 one query per expression feature that selects only that feature's column.
-The service holds one DuckDB connection and takes a cursor from it per
-expression, so concurrent calls share the connection safely.
+Between them the service moves column arrays, not frames: it builds one
+frame per expression for DuckDB to scan and one frame to serve.  DuckDB
+reads the scanned frame through its replacement scan of a local name, with
+no view registered per query.  The service holds one DuckDB connection and
+one cursor on it per thread, reused across calls, so concurrent calls
+share the connection safely.
 """
 
 from __future__ import annotations
+
+import threading
+from typing import Any, Dict
 
 import pandas as pd
 
@@ -71,13 +78,16 @@ class LocalFeatureService:
 
         self.online_store = online_store or MemoryOnlineStore.get_instance()
         self._duckdb = duckdb.connect()
+        # one cursor per thread, reused by every call on that thread
+        self._cursors = threading.local()
 
     def get_online_features(
         self, request_df: pd.DataFrame, view: OnDemandFeatureView
     ) -> pd.DataFrame:
-        out = self._lookup(request_df.reset_index(drop=True), view.lookup_features())
+        columns = self._lookup(request_df, view.lookup_features())
         for feature in view.expression_features():
-            out[feature.name] = self._eval_expression(out, feature)
+            scan = pd.DataFrame(columns, copy=False)
+            columns[feature.name] = self._eval_expression(scan, feature)
         if not view.keep_source_fields:
             # strip: the lookup regex tolerates padded feature strings
             # ('tbl.feat '), so the projection name must too, or the
@@ -86,15 +96,20 @@ class LocalFeatureService:
                 f.name if not isinstance(f, str) else f.split(".", 1)[1].strip()
                 for f in view.features
             ]
-            keys = [c for c in request_df.columns]
-            out = out[[c for c in keys + names if c in out.columns]]
-        return out
+            # a name served twice (a looked-up key field, a name looked up
+            # from two tables, an expression named like a lookup) is served
+            # once, where it first appears, with the value the view computed
+            served = dict.fromkeys([*request_df.columns, *names])
+            columns = {c: columns[c] for c in served if c in columns}
+        return pd.DataFrame(columns)
 
-    def _lookup(self, out: pd.DataFrame, lookups) -> pd.DataFrame:
-        """One store ``get`` per table, serving what one ``get`` per
-        feature in declaration order would: the stored value wins a name
-        clash, so a name looked up twice takes the later table's value and
-        moves to the end, after the request columns it replaces."""
+    def _lookup(self, request: pd.DataFrame, lookups) -> Dict[str, Any]:
+        """The request's columns and the looked-up features, as column
+        arrays by name, from one store ``get`` per table.  They are what one
+        ``get`` per feature in declaration order would serve: the stored
+        value wins a name clash, so a name looked up twice takes the later
+        table's value and moves to the end, after the request columns it
+        replaces."""
         store = self.online_store
         keys = {table: store.key_fields(table) for table, _ in lookups}
         # a lookup of one of its table's key fields only reads the request
@@ -105,11 +120,21 @@ class LocalFeatureService:
         features = {table: [] for table in keys}
         for feature in order:
             features[owner[feature]].append(feature)
+        found = {}
         for table, names in features.items():
-            out = store.get(table, out, names)
-        return out[[c for c in out.columns if c not in owner] + order]
+            by = request
+            if not found.keys().isdisjoint(keys[table]):
+                # a key an earlier table looked up is matched by that value
+                by = pd.DataFrame(
+                    {k: found[k] if k in found else request[k].array for k in keys[table]}
+                )
+            got = store.get(table, by, names)
+            found.update((name, got[name].array) for name in names)
+        columns = {c: request[c].array for c in request.columns if c not in owner}
+        columns.update((feature, found[feature]) for feature in order)
+        return columns
 
-    def _eval_expression(self, df: pd.DataFrame, feature):
+    def _eval_expression(self, req: pd.DataFrame, feature):
         from feathub_spark.feature_views.transforms.expression_transform import (
             ExpressionTransform,
         )
@@ -120,7 +145,7 @@ class LocalFeatureService:
         tr = feature.transform
         if isinstance(tr, PythonUdfTransform):
             values = []
-            for _, row in df.iterrows():
+            for _, row in req.iterrows():
                 try:
                     values.append(tr.udf(row))
                 except Exception:
@@ -133,10 +158,10 @@ class LocalFeatureService:
                 f"OnDemandFeatureView supports expression/UDF features, got {tr!r}."
             )
         sql = _backticks_to_ansi(to_spark_sql(tr.expr))
-        cursor = self._duckdb.cursor()
-        try:
-            cursor.register("req", df)
-            result = cursor.execute(f'SELECT {sql} AS "{feature.name}" FROM req').df()
-        finally:
-            cursor.close()
+        cursor = getattr(self._cursors, "cursor", None)
+        if cursor is None:
+            cursor = self._cursors.cursor = self._duckdb.cursor()
+        # DuckDB's replacement scan reads `req`, the local the query selects
+        # from, without registering a view
+        result = cursor.execute(f'SELECT {sql} AS "{feature.name}" FROM req').df()
         return result[feature.name].array

@@ -10,6 +10,9 @@ A keyed table holds one row per key and a pandas index of its key fields
 row, so the cost of a call follows its input, not the table:
 
 - ``get`` looks up only the requested keys: proportional to the request.
+  It builds its result once, from the request's column arrays and each
+  feature's stored column taken at the found rows; only a request with a
+  key the table lacks reindexes, so its NULLs upcast like a left merge.
 - ``put`` dedupes only the incoming batch, compares timestamps only for the
   keys it touches, overwrites their rows and appends the new keys:
   proportional to the batch, plus copying the table's rows into the new
@@ -236,24 +239,23 @@ class MemoryOnlineStore:
             )
         if feature_names is None:
             feature_names = table.columns
-        cols = [c for c in feature_names if c not in key_fields]
+        cols = [c for c in dict.fromkeys(feature_names) if c not in key_fields]
         self._check_key_dtypes(table_name, table, input_data)
+        pos = table.positions(_key_index(input_data, key_fields))
+        if (pos >= 0).all():
+            found = table.frame
+        else:
+            # missing keys (row -1) read NULL, upcasting like a left merge
+            found, pos = table.frame.reindex(pos), None
         # the STORED value wins on name overlap (a request column or an
         # earlier lookup sharing a feature name) — matching the dict-
         # overwrite semantics of SqlOnlineStore/RedisOnlineStore.get; a
         # plain merge would suffix both sides to <c>_x/<c>_y and the
         # feature would silently vanish from the service projection
-        clash = [c for c in cols if c in input_data.columns]
-        # missing keys (row -1) read NULL, upcasting like a left merge
-        pos = table.positions(_key_index(input_data, key_fields))
-        found = table.frame.reindex(pos)[cols]
-        return pd.concat(
-            [
-                input_data.drop(columns=clash).reset_index(drop=True),
-                found.reset_index(drop=True),
-            ],
-            axis=1,
-        )
+        arrays = {c: input_data[c].array for c in input_data.columns if c not in cols}
+        for c in cols:
+            arrays[c] = found[c].array if pos is None else found[c].array.take(pos)
+        return pd.DataFrame(arrays)
 
     @staticmethod
     def _check_key_dtypes(table_name: str, table: _Table, input_data) -> None:

@@ -25,15 +25,25 @@ from feathub_spark.table.table_descriptor import TableDescriptor
 def default_spark_session(app_name: str = "feathub_spark", cpus: int = 0) -> SparkSession:
     """SparkSession tuned for this engine: UTC session tz (window alignment +
     timestamp parsing are timezone-dependent), AQE on (runtime re-plan, skew
-    join handling), non-ANSI mode (NULL-on-error semantics like x[missing])."""
+    join handling), non-ANSI mode (NULL-on-error semantics like x[missing]).
+
+    Shuffle width: batch exchanges start 32 wide and AQE coalesces them.
+    A new streaming query records ``spark.sql.shuffle.partitions`` as its
+    number of state partitions, and runs its micro-batches without AQE, so
+    that setting is the master's core count: one state-store task per
+    core.  ``SPARK_SHUFFLE_PARTITIONS``, when set, sets both widths."""
     import os
 
     master = f"local[{cpus}]" if cpus > 0 else "local[*]"
+    partitions = os.environ.get("SPARK_SHUFFLE_PARTITIONS")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", master))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+        # under AQE this, not spark.sql.shuffle.partitions, sets the width
+        # of a batch exchange before coalescing
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+                partitions or "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -53,7 +63,12 @@ def default_spark_session(app_name: str = "feathub_spark", cpus: int = 0) -> Spa
         # (tools/scale_study.py's spill capture)
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        partitions or str(spark.sparkContext.defaultParallelism),
+    )
+    return spark
 
 
 class SparkProcessor:

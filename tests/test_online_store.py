@@ -1,10 +1,16 @@
 """MemoryOnlineStore: the key-indexed store against a reference model of
-the full-table store it replaced, the mistyped-key guard, atomic puts under
-concurrent serving, and LocalFeatureService's one lookup per table."""
+the full-table store it replaced and against SqlOnlineStore, the
+mistyped-key guard, atomic puts under concurrent serving.
+LocalFeatureService: one lookup per table, the served frames (values,
+dtypes, column order, index), concurrent reads, and the DuckDB dialect
+bridge for expression features."""
 
 import random
+import sys
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -335,3 +341,295 @@ def test_memory_store_both_untimestamped_last_wins():
     s.put("t", pd.DataFrame({"k": [1], "v": [2.0],
                              "ts": [float("nan")]}), ["k"], "ts")
     assert s.get("t", pd.DataFrame({"k": [1]}))["v"].tolist() == [2.0]
+
+
+def _serving_store():
+    store = MemoryOnlineStore()
+    store.put(
+        "u",
+        pd.DataFrame({
+            "uid": [1, 2], "i": [10, 20], "b": [True, False],
+            "d": pd.to_datetime(["2024-01-01", "2024-01-02"]),
+            "s": ["p", "q"], "x": [0.5, 1.5], "oid": [8, 7],
+        }),
+        ["uid"],
+    )
+    store.put("o", pd.DataFrame({"oid": [7], "x": [9.0], "c": ["z"]}), ["oid"])
+    return store
+
+
+_REQUEST = pd.DataFrame(
+    {"uid": [2, 9, 1], "oid": [7, 7, 8], "x": [0.0] * 3, "r": [1.0, 2.0, 3.0]}
+)
+_REQUEST_SCHEMA = Schema(
+    ["uid", "oid", "x", "r"], [t.Int64, t.Int64, t.Float64, t.Float64]
+)
+_KEYS = {"uid": [2, 9, 1], "oid": [7, 7, 8]}
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "features, keep, req, want",
+    [
+        pytest.param(
+            ["u.i", "u.b", "u.d", "u.s"], True, _REQUEST,
+            pd.DataFrame({
+                **_KEYS, "x": [0.0] * 3, "r": [1.0, 2.0, 3.0],
+                "i": [20.0, _NAN, 10.0],
+                "b": pd.Series([False, _NAN, True], dtype=object),
+                "d": pd.to_datetime(["2024-01-02", None, "2024-01-01"]),
+                "s": ["q", _NAN, "p"],
+            }),
+            id="missing_key_upcasts",
+        ),
+        pytest.param(
+            ["u.x"], True, _REQUEST,
+            pd.DataFrame({**_KEYS, "r": [1.0, 2.0, 3.0], "x": [1.5, _NAN, 0.5]}),
+            id="stored_value_wins_clash",
+        ),
+        pytest.param(
+            ["u.i", Feature("y", transform="i * 2 + r"),
+             Feature("z", transform="y + 1"), Feature("r", transform="r * 10")],
+            True, _REQUEST,
+            pd.DataFrame({
+                **_KEYS, "x": [0.0] * 3, "r": [10.0, 20.0, 30.0],
+                "i": [20.0, _NAN, 10.0], "y": [41.0, _NAN, 23.0],
+                "z": [42.0, _NAN, 24.0],
+            }),
+            id="expressions_read_lookups_and_override_request",
+        ),
+        pytest.param(
+            ["u.i", Feature("y", transform="i + r"), "o.c"], True, _REQUEST,
+            pd.DataFrame({
+                **_KEYS, "x": [0.0] * 3, "r": [1.0, 2.0, 3.0],
+                "i": [20.0, _NAN, 10.0], "c": ["z", "z", _NAN],
+                "y": [21.0, _NAN, 13.0],
+            }),
+            id="keep_source_fields",
+        ),
+        pytest.param(
+            ["u.i", Feature("y", transform="i + r"), "o.c"], False, _REQUEST,
+            pd.DataFrame({
+                **_KEYS, "x": [0.0] * 3, "r": [1.0, 2.0, 3.0],
+                "i": [20.0, _NAN, 10.0], "y": [21.0, _NAN, 13.0],
+                "c": ["z", "z", _NAN],
+            }),
+            id="drop_source_fields",
+        ),
+        pytest.param(
+            ["u.s", "o.x", Feature("y", transform="x + r")], True,
+            _REQUEST.set_axis([10, 5, 3]),
+            pd.DataFrame({
+                **_KEYS, "r": [1.0, 2.0, 3.0], "s": ["q", _NAN, "p"],
+                "x": [9.0, 9.0, _NAN], "y": [10.0, 11.0, _NAN],
+            }),
+            id="request_index_not_range",
+        ),
+        pytest.param(
+            # a later table is looked up by the key an earlier one served
+            ["u.oid", "o.c"], True, _REQUEST,
+            pd.DataFrame({
+                "uid": [2, 9, 1], "x": [0.0] * 3, "r": [1.0, 2.0, 3.0],
+                "oid": [7.0, _NAN, 8.0], "c": ["z", _NAN, _NAN],
+            }),
+            id="key_served_by_earlier_table",
+        ),
+        pytest.param(
+            ["u.i", "u.s", Feature("y", transform="i + r")], True, _REQUEST[:0],
+            pd.DataFrame({
+                "uid": pd.Series([], dtype="int64"),
+                "oid": pd.Series([], dtype="int64"),
+                "x": pd.Series([], dtype="float64"),
+                "r": pd.Series([], dtype="float64"),
+                "i": pd.Series([], dtype="int64"),
+                "s": pd.Series([], dtype=object),
+                "y": pd.Series([], dtype="float64"),
+            }),
+            id="empty_request",
+        ),
+    ],
+)
+def test_service_serves_parent_frames(features, keep, req, want):
+    view = OnDemandFeatureView(
+        name="parity", features=features, request_schema=_REQUEST_SCHEMA,
+        keep_source_fields=keep,
+    )
+    service = LocalFeatureService(online_store=_serving_store())
+    got = service.get_online_features(req, view)
+    pd.testing.assert_frame_equal(got, want)
+    assert isinstance(got.index, pd.RangeIndex)
+    # the served frame is a copy: changing it cannot change the request
+    for c in req.columns.intersection(got.columns):
+        assert not np.shares_memory(got[c].to_numpy(), req[c].to_numpy())
+
+
+def test_service_without_source_fields_serves_each_name_once():
+    """A name that occurs twice (a lookup of a key field, a name looked up
+    from two tables, an expression named like a lookup) is served once,
+    where it first appears, with the value the rest of the view sees."""
+    view = OnDemandFeatureView(
+        name="dups",
+        features=[
+            "u.x", "o.x", "u.i", "u.b", "u.uid", Feature("y", transform="x + 1"),
+            Feature("i", transform="i + 1"), Feature("z", transform="y * 2"),
+        ],
+        request_schema=Schema(["uid", "oid"], [t.Int64, t.Int64]),
+        keep_source_fields=False,
+    )
+    service = LocalFeatureService(online_store=_serving_store())
+    got = service.get_online_features(_REQUEST[["uid", "oid"]], view)
+    want = pd.DataFrame({
+        **_KEYS, "x": [9.0, 9.0, _NAN], "i": [21.0, _NAN, 11.0],
+        "b": pd.Series([False, _NAN, True], dtype=object),
+        "y": [10.0, 10.0, _NAN], "z": [20.0, 20.0, _NAN],
+    })
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_service_concurrent_expression_reads_match_serial_reads():
+    """4 threads x 50 reads on one service, each with two expression
+    features: every read equals the same read served on one thread."""
+    rng = np.random.default_rng(3)
+    store = MemoryOnlineStore()
+    store.put(
+        "t",
+        pd.DataFrame({"k": np.arange(1000), "v": rng.normal(size=1000)}),
+        ["k"],
+    )
+    view = OnDemandFeatureView(
+        name="pooled",
+        features=["t.v", Feature("w", transform="v * m"),
+                  Feature("n", transform="w + k")],
+        request_schema=Schema(["k", "m"], [t.Int64, t.Float64]),
+    )
+    service = LocalFeatureService(online_store=store)
+    requests = [
+        pd.DataFrame({"k": rng.integers(0, 1200, 8), "m": rng.normal(size=8)})
+        for _ in range(200)
+    ]
+    serial = [service.get_online_features(r, view) for r in requests]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often, mid-read
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            pooled = list(pool.map(
+                lambda r: service.get_online_features(r, view), requests, timeout=120
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+    for want, got in zip(serial, pooled):
+        pd.testing.assert_frame_equal(got, want)
+
+
+class TestServingBacktickLiteral:
+    def test_backtick_inside_literal_survives(self):
+        import pandas as pd
+
+        from feathub_spark import Feature, OnDemandFeatureView, Schema
+        from feathub_spark.common import types as t
+        from feathub_spark.feature_service.local_feature_service import (
+            LocalFeatureService,
+            _backticks_to_ansi,
+        )
+
+        assert _backticks_to_ansi("CONCAT(`name`, 'x`y')") == (
+            'CONCAT("name", \'x`y\')'
+        )
+        view = OnDemandFeatureView(
+            name="od_bt",
+            features=[Feature("tagged", transform="CONCAT(name, 'x`y')")],
+            request_schema=Schema(["name"], [t.String]),
+        )
+        svc = LocalFeatureService()
+        got = svc.get_online_features(pd.DataFrame({"name": ["a"]}), view)
+        assert got["tagged"].tolist() == ["ax`y"]
+
+
+class TestStoreParityRandomized:
+    def test_memory_and_sql_store_agree_on_random_put_sequences(self):
+        """Property: for any sequence of keyed puts with (possibly NULL)
+        timestamps, MemoryOnlineStore and SqlOnlineStore serve the same
+        latest row per key."""
+        import random
+        import sqlite3
+
+        import pandas as pd
+
+        from feathub_spark.online_stores.memory_online_store import (
+            MemoryOnlineStore,
+        )
+        from feathub_spark.online_stores.sql_online_store import SqlOnlineStore
+
+        rng = random.Random(42)
+        for trial in range(20):
+            mem = MemoryOnlineStore()
+            sql = SqlOnlineStore(
+                lambda: sqlite3.connect(":memory:"),
+                table_name=f"t_{trial}",
+            )
+            n_puts = rng.randint(1, 6)
+            for _ in range(n_puts):
+                n_rows = rng.randint(1, 5)
+                rows = {
+                    "k": [rng.randint(1, 3) for _ in range(n_rows)],
+                    "v": [round(rng.uniform(0, 100), 3) for _ in range(n_rows)],
+                    "ts": [
+                        rng.choice([float("nan"), float(rng.randint(0, 50))])
+                        for _ in range(n_rows)
+                    ],
+                }
+                df = pd.DataFrame(rows)
+                mem.put("tbl", df, ["k"], "ts")
+                sql.put("tbl", df, ["k"], "ts")
+            req = pd.DataFrame({"k": [1, 2, 3]})
+            got_mem = mem.get("tbl", req).set_index("k")["v"]
+            got_sql = sql.get("tbl", req).set_index("k")["v"]
+            for k in (1, 2, 3):
+                a, b = got_mem.get(k), got_sql.get(k)
+                both_nan = pd.isna(a) and pd.isna(b)
+                assert both_nan or a == b, (
+                    f"trial {trial}: key {k} memory={a} sql={b}"
+                )
+
+
+class TestBackticksToAnsi:
+    def test_backtick_inside_literal_untouched(self):
+        from feathub_spark.feature_service.local_feature_service import (
+            _backticks_to_ansi,
+        )
+
+        assert _backticks_to_ansi("CONCAT(`name`, 'x`y')") == (
+            'CONCAT("name", \'x`y\')'
+        )
+
+    def test_duckdb_parses_rewritten_escape(self):
+        from feathub_spark.dsl.parser import to_spark_sql
+        from feathub_spark.feature_service.local_feature_service import (
+            _backticks_to_ansi,
+        )
+
+        # end-to-end: the DSL literal goes through ast.py's backslash
+        # escaping, then the serving bridge, then a real DuckDB parse
+        spark_sql = to_spark_sql("CONCAT(`name`, 'it''s')")
+        assert "\\'" in spark_sql  # precondition: generator emits \'
+        ansi = _backticks_to_ansi(spark_sql)
+        got = duckdb.sql(
+            f"SELECT {ansi} AS v FROM (SELECT 'x' AS name)"
+        ).fetchone()[0]
+        assert got == "xit's"
+
+    def test_serving_path_literal_with_quote(self):
+        from feathub_spark import Feature, OnDemandFeatureView, Schema
+        from feathub_spark.common import types as t
+        from feathub_spark.feature_service.local_feature_service import (
+            LocalFeatureService,
+        )
+
+        view = OnDemandFeatureView(
+            name="r13_quote_view",
+            features=[Feature("tagged", transform="CONCAT(`name`, 'it''s')")],
+            request_schema=Schema(["name"], [t.String]),
+        )
+        svc = LocalFeatureService()
+        out = svc.get_online_features(pd.DataFrame({"name": ["a"]}), view)
+        assert out["tagged"].tolist() == ["ait's"]

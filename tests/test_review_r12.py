@@ -1,6 +1,7 @@
 """Round-12 review fixes (ADVICE.md r11): ndarray-safe online-store codec,
 protobuf writer master fallback, SequenceField span check.  The checkpoint
-identity tests live in test_streaming.py."""
+identity tests live in test_streaming.py; the serving backtick and
+memory-vs-SQL store parity tests in test_online_store.py."""
 
 import numpy as np
 import pytest
@@ -112,77 +113,6 @@ class TestNullTimestampUpsert:
         s.put("t2", pd.DataFrame({"k": [1], "v": [2.0], "ts": [50.0]}),
               ["k"], "ts")
         assert s.get("t2", pd.DataFrame({"k": [1]}))["v"].tolist() == [2.0]
-
-
-class TestServingBacktickLiteral:
-    def test_backtick_inside_literal_survives(self):
-        import pandas as pd
-
-        from feathub_spark import Feature, OnDemandFeatureView, Schema
-        from feathub_spark.common import types as t
-        from feathub_spark.feature_service.local_feature_service import (
-            LocalFeatureService,
-            _backticks_to_ansi,
-        )
-
-        assert _backticks_to_ansi("CONCAT(`name`, 'x`y')") == (
-            'CONCAT("name", \'x`y\')'
-        )
-        view = OnDemandFeatureView(
-            name="od_bt",
-            features=[Feature("tagged", transform="CONCAT(name, 'x`y')")],
-            request_schema=Schema(["name"], [t.String]),
-        )
-        svc = LocalFeatureService()
-        got = svc.get_online_features(pd.DataFrame({"name": ["a"]}), view)
-        assert got["tagged"].tolist() == ["ax`y"]
-
-
-class TestStoreParityRandomized:
-    def test_memory_and_sql_store_agree_on_random_put_sequences(self):
-        """Property: for any sequence of keyed puts with (possibly NULL)
-        timestamps, MemoryOnlineStore and SqlOnlineStore serve the same
-        latest row per key."""
-        import random
-        import sqlite3
-
-        import pandas as pd
-
-        from feathub_spark.online_stores.memory_online_store import (
-            MemoryOnlineStore,
-        )
-        from feathub_spark.online_stores.sql_online_store import SqlOnlineStore
-
-        rng = random.Random(42)
-        for trial in range(20):
-            mem = MemoryOnlineStore()
-            sql = SqlOnlineStore(
-                lambda: sqlite3.connect(":memory:"),
-                table_name=f"t_{trial}",
-            )
-            n_puts = rng.randint(1, 6)
-            for _ in range(n_puts):
-                n_rows = rng.randint(1, 5)
-                rows = {
-                    "k": [rng.randint(1, 3) for _ in range(n_rows)],
-                    "v": [round(rng.uniform(0, 100), 3) for _ in range(n_rows)],
-                    "ts": [
-                        rng.choice([float("nan"), float(rng.randint(0, 50))])
-                        for _ in range(n_rows)
-                    ],
-                }
-                df = pd.DataFrame(rows)
-                mem.put("tbl", df, ["k"], "ts")
-                sql.put("tbl", df, ["k"], "ts")
-            req = pd.DataFrame({"k": [1, 2, 3]})
-            got_mem = mem.get("tbl", req).set_index("k")["v"]
-            got_sql = sql.get("tbl", req).set_index("k")["v"]
-            for k in (1, 2, 3):
-                a, b = got_mem.get(k), got_sql.get(k)
-                both_nan = pd.isna(a) and pd.isna(b)
-                assert both_nan or a == b, (
-                    f"trial {trial}: key {k} memory={a} sql={b}"
-                )
 
 
 class TestFileSinkPartitionBy:

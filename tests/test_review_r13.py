@@ -2,12 +2,11 @@
 backtick rewriting for the serving-path DuckDB dialect bridge,
 partition-layout-preserving compact_files, case-insensitive JDBC bounds
 probe.  The legacy checkpoint migration and streaming as-of tie encoding
-tests live in test_streaming.py."""
+tests live in test_streaming.py; the serving-path backtick tests in
+test_online_store.py."""
 
 import os
 
-import duckdb
-import pandas as pd
 import pytest
 
 
@@ -29,54 +28,12 @@ class TestBackticksToAnsi:
 
         assert _backticks_to_ansi("'a\\\\b'") == "'a\\b'"
 
-    def test_backtick_inside_literal_untouched(self):
-        from feathub_spark.feature_service.local_feature_service import (
-            _backticks_to_ansi,
-        )
-
-        assert _backticks_to_ansi("CONCAT(`name`, 'x`y')") == (
-            'CONCAT("name", \'x`y\')'
-        )
-
     def test_doubled_quote_style_still_scans(self):
         from feathub_spark.feature_service.local_feature_service import (
             _backticks_to_ansi,
         )
 
         assert _backticks_to_ansi("'it''s' || `c`") == "'it''s' || \"c\""
-
-    def test_duckdb_parses_rewritten_escape(self):
-        from feathub_spark.dsl.parser import to_spark_sql
-        from feathub_spark.feature_service.local_feature_service import (
-            _backticks_to_ansi,
-        )
-
-        # end-to-end: the DSL literal goes through ast.py's backslash
-        # escaping, then the serving bridge, then a real DuckDB parse
-        spark_sql = to_spark_sql("CONCAT(`name`, 'it''s')")
-        assert "\\'" in spark_sql  # precondition: generator emits \'
-        ansi = _backticks_to_ansi(spark_sql)
-        got = duckdb.sql(
-            f"SELECT {ansi} AS v FROM (SELECT 'x' AS name)"
-        ).fetchone()[0]
-        assert got == "xit's"
-
-    def test_serving_path_literal_with_quote(self):
-        from feathub_spark import Feature, OnDemandFeatureView, Schema
-        from feathub_spark.common import types as t
-        from feathub_spark.feature_service.local_feature_service import (
-            LocalFeatureService,
-        )
-
-        view = OnDemandFeatureView(
-            name="r13_quote_view",
-            features=[Feature("tagged", transform="CONCAT(`name`, 'it''s')")],
-            request_schema=Schema(["name"], [t.String]),
-        )
-        svc = LocalFeatureService()
-        out = svc.get_online_features(pd.DataFrame({"name": ["a"]}), view)
-        assert out["tagged"].tolist() == ["ait's"]
-
 
 class TestCompactFilesPartitioned:
     def test_hive_layout_preserved(self, spark, tmp_path):

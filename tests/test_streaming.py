@@ -4,6 +4,7 @@ batch path on the same data (stream-batch unification)."""
 
 import json
 import os
+import re
 import time
 from datetime import timedelta
 
@@ -953,16 +954,6 @@ def test_streaming_second_stateful_stage_raises(client, tmp_path, shape):
     assert len(client.get_features(view).to_pandas()) == 6
 
 
-@pytest.fixture()
-def few_partitions(spark):
-    """Four state partitions instead of the session's default: a stream
-    with few keys then runs each micro-batch in a fraction of the time."""
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-
-
 def _write_event_files(d, files, schema):
     """One parquet file per list of rows, mtimes increasing in list order
     so a stream with maxFilesPerTrigger=1 reads them in order."""
@@ -991,7 +982,7 @@ def _epoch_source(name, path, fields, keys):
     )
 
 
-def test_unbounded_over_wakes_only_keys_with_rows(client, few_partitions, tmp_path):
+def test_unbounded_over_wakes_only_keys_with_rows(client, tmp_path):
     """With an unbounded over window, a key whose buffered rows have all
     been emitted is not woken again: later micro-batches update state only
     for the keys that received rows, and the output still equals batch."""
@@ -1133,7 +1124,7 @@ def _run_checkpointed(df, ckpt):
 
 
 @pytest.mark.parametrize("op", ["sliding", "over", "asof", "scd2", "funnel"])
-def test_stateful_state_survives_restart(client, few_partitions, tmp_path, op):
+def test_stateful_state_survives_restart(client, tmp_path, op):
     """A stateful stream stopped after its first files and restarted on the
     same checkpoint once more files arrive emits exactly the rows of one
     uninterrupted run over all the files."""
@@ -1249,9 +1240,7 @@ def _plan(df):
     return df._jdf.queryExecution().logical().toString()
 
 
-def test_native_multi_size_sliding_equals_stateful_and_batch(
-    client, few_partitions, tmp_path
-):
+def test_native_multi_size_sliding_equals_stateful_and_batch(client, tmp_path):
     """A multi-size view without emission flags runs as one native windowed
     aggregation, and emits exactly the rows of the stateful operator on the
     same input and of the batch evaluator: no window missing, none extra."""
@@ -1384,9 +1373,7 @@ def test_streaming_collect_list_over_maps_matches_batch(client, tmp_path, multi)
     assert stream == batch
 
 
-def test_stateful_sliding_checkpoint_refused_by_native_plan(
-    client, few_partitions, tmp_path
-):
+def test_stateful_sliding_checkpoint_refused_by_native_plan(client, tmp_path):
     """A multi-size view checkpointed by the stateful operator, the path
     such views took before they ran natively, is refused when the native
     plan resumes it: Spark checks the operator name in the checkpoint's
@@ -1420,3 +1407,57 @@ def test_stateful_sliding_checkpoint_refused_by_native_plan(
     ):
         query.awaitTermination(120)
     assert rows == []
+
+
+def test_default_session_runs_one_state_partition_per_core(client, tmp_path):
+    """A stream on the default session keeps one state partition per core,
+    on the native windowed aggregation and on applyInPandasWithState, while
+    a batch exchange still starts 32 wide."""
+    from pyspark.sql import functions as F
+
+    from feathub_spark.feature_views.transforms import OverWindowTransform
+
+    spark = client.spark
+    cores = int(spark.sparkContext.master.strip("local[]"))
+    assert cores == spark.sparkContext.defaultParallelism
+    want = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS") or cores)
+    source = _stream_source(tmp_path, "width_src")
+    window = SlidingWindowTransform(
+        "cost", "SUM", window_size=timedelta(days=2), step_size=timedelta(days=1),
+        group_by_keys=["name"],
+    )
+    views = {
+        "stateStoreSave": SlidingFeatureView(
+            name="width_native", source=source,
+            features=[Feature("total_cost", transform=window)],
+            enable_empty_window_output=False, skip_same_window_output=False,
+        ),
+        "applyInPandasWithState": DerivedFeatureView(
+            name="width_stateful", source=source,
+            features=[Feature("cnt", transform=OverWindowTransform(
+                "cost", "COUNT", group_by_keys=["name"], limit=2))],
+            keep_source_fields=True,
+        ),
+    }
+    client.build_features([source, *views.values()])
+    for operator, view in views.items():
+        query = (
+            client.processor.get_stream_dataframe(view).writeStream
+            .outputMode("append").format("memory").queryName(view.name)
+            .trigger(availableNow=True).start()
+        )
+        assert query.awaitTermination(120)
+        state = [
+            op for p in query.recentProgress
+            for op in json.loads(p.json)["stateOperators"]
+        ]
+        assert state and {op["operatorName"] for op in state} == {operator}
+        assert {op["numShufflePartitions"] for op in state} == {want}
+
+    width = os.environ.get("SPARK_SHUFFLE_PARTITIONS") or "32"
+    ids = spark.range(100).withColumn("k", F.col("id") % 7)
+    for batch in (ids.groupBy("k").count(), ids.repartition("k")):
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            batch._jdf.queryExecution(), "simple"
+        )
+        assert re.search(rf"Exchange hashpartitioning\(k#\d+L, {width}\)", plan), plan

@@ -18,6 +18,10 @@ state bytes, median batch ms) rather than a single wall number.
 Usage:
   python tools/stress_streaming_state.py [scale]   # one run (default 10)
   python tools/stress_streaming_state.py --table   # 1x AND 10x, one JSON
+
+``--table`` first runs one untimed 1x stream, so that neither timed run
+pays the session's first-stream warm-up (JIT, code generation, the first
+Python worker).
 """
 
 from __future__ import annotations
@@ -156,6 +160,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     if "--table" in sys.argv:
+        run_one(spark, 1)  # warm-up, not reported
         table = {}
         for scale in (1, 10):
             table[f"{scale}x"] = run_one(spark, scale)
