@@ -1,21 +1,24 @@
-"""AST for the FeatHub expression language, lowered directly to Spark SQL.
+"""AST for the FeatHub expression language.
 
 Node inventory and typing rules re-express the reference DSL
 (/root/reference/python/feathub/dsl/ast.py:49-387): numeric precision rank
 Float64 > Float32 > Int64 > Int32, NULL-propagating arithmetic, CASE/CAST/
-TRY_CAST, map bracket lookup, and the 9 built-in scalar functions.  Unlike the
-reference (which keeps per-engine evaluators), our single target is Spark SQL,
-so each node knows how to render itself (`to_spark_sql`) and how to derive its
-result dtype (`eval_dtype`).
+TRY_CAST, map bracket lookup, and the 9 built-in scalar functions.  Each node
+knows how to derive its result dtype (`eval_dtype`) and has two ways to
+compute: it renders itself as Spark SQL (`to_spark_sql`) for batch and stream
+jobs, and it evaluates itself over a mapping of column arrays (`evaluate`,
+with Spark's non-ANSI semantics from `spark_semantics`) for on-demand
+serving, so both paths compute the same values.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence, Set
+from typing import Any, Dict, List, Mapping, Optional, Sequence, Set
 
 from feathub_spark.common.exceptions import ExpressionError
 from feathub_spark.common import types as t
 from feathub_spark.common.time_utils import to_java_date_format
+from feathub_spark.dsl import spark_semantics as ss
 
 # Column name the sliding-view planner substitutes for GET_WINDOW_TIME():
 # the bigint epoch-millis window time (window end - 1ms).
@@ -46,6 +49,11 @@ class ExprAST:
         raise NotImplementedError
 
     def to_spark_sql(self) -> str:
+        raise NotImplementedError
+
+    def evaluate(self, columns: Mapping[str, Any]) -> ss.Value:
+        """The value in each row of ``columns`` (equal-length arrays by
+        name): an Arrow array, or a scalar when no column is read."""
         raise NotImplementedError
 
     def collect_variables(self, out: Set[str]) -> None:
@@ -84,6 +92,9 @@ class ValueNode(ExprAST):
             return f"'{escaped}'"
         return repr(self.value)
 
+    def evaluate(self, columns):
+        return ss.literal(self.value)
+
 
 class NullNode(ExprAST):
     def eval_dtype(self, variable_types):
@@ -91,6 +102,9 @@ class NullNode(ExprAST):
 
     def to_spark_sql(self) -> str:
         return "NULL"
+
+    def evaluate(self, columns):
+        return ss.NULL
 
 
 class VariableNode(ExprAST):
@@ -106,6 +120,13 @@ class VariableNode(ExprAST):
 
     def to_spark_sql(self) -> str:
         return f"`{self.name}`"
+
+    def evaluate(self, columns):
+        if self.name not in columns:
+            raise ExpressionError(
+                f"Unknown column {self.name!r}; known: {sorted(columns)}"
+            )
+        return ss.to_arrow(columns[self.name])
 
     def collect_variables(self, out: Set[str]) -> None:
         out.add(self.name)
@@ -123,6 +144,9 @@ class GroupNode(ExprAST):
 
     def to_spark_sql(self) -> str:
         return f"({self.child.to_spark_sql()})"
+
+    def evaluate(self, columns):
+        return self.child.evaluate(columns)
 
 
 class BinaryOp(ExprAST):
@@ -148,6 +172,9 @@ class BinaryOp(ExprAST):
     def to_spark_sql(self) -> str:
         return f"{self.left.to_spark_sql()} {self.op} {self.right.to_spark_sql()}"
 
+    def evaluate(self, columns):
+        return ss.arithmetic(self.op, self.left.evaluate(columns), self.right.evaluate(columns))
+
 
 class UminusOp(ExprAST):
     def __init__(self, child: ExprAST) -> None:
@@ -161,6 +188,9 @@ class UminusOp(ExprAST):
 
     def to_spark_sql(self) -> str:
         return f"- {self.child.to_spark_sql()}"
+
+    def evaluate(self, columns):
+        return ss.negate(self.child.evaluate(columns))
 
 
 class CompareOp(ExprAST):
@@ -178,6 +208,9 @@ class CompareOp(ExprAST):
     def to_spark_sql(self) -> str:
         return f"{self.left.to_spark_sql()} {self.op} {self.right.to_spark_sql()}"
 
+    def evaluate(self, columns):
+        return ss.compare(self.op, self.left.evaluate(columns), self.right.evaluate(columns))
+
 
 class LogicalOp(ExprAST):
     def __init__(self, op: str, left: ExprAST, right: ExprAST) -> None:
@@ -193,6 +226,9 @@ class LogicalOp(ExprAST):
 
     def to_spark_sql(self) -> str:
         return f"{self.left.to_spark_sql()} {self.op} {self.right.to_spark_sql()}"
+
+    def evaluate(self, columns):
+        return ss.logical(self.op, self.left.evaluate(columns), self.right.evaluate(columns))
 
 
 class IsOp(ExprAST):
@@ -211,6 +247,9 @@ class IsOp(ExprAST):
     def to_spark_sql(self) -> str:
         kw = "IS NOT NULL" if self.is_not else "IS NULL"
         return f"{self.child.to_spark_sql()} {kw}"
+
+    def evaluate(self, columns):
+        return ss.is_null(self.child.evaluate(columns), self.is_not)
 
 
 class CastOp(ExprAST):
@@ -231,6 +270,9 @@ class CastOp(ExprAST):
         fn = "TRY_CAST" if self.safe else "CAST"
         spark_t = t.to_spark_sql_type_name(self.dtype)
         return f"{fn}({self.child.to_spark_sql()} AS {spark_t})"
+
+    def evaluate(self, columns):
+        return ss.cast(self.child.evaluate(columns), self.dtype, strict=self.safe)
 
 
 class CaseOp(ExprAST):
@@ -269,6 +311,13 @@ class CaseOp(ExprAST):
         parts.append("END")
         return " ".join(parts)
 
+    def evaluate(self, columns):
+        return ss.case(
+            [w.evaluate(columns) for w in self.whens],
+            [th.evaluate(columns) for th in self.thens],
+            None if self.default is None else self.default.evaluate(columns),
+        )
+
 
 class BracketOp(ExprAST):
     """Map entry lookup ``m[k]``; missing key → NULL (list index unsupported,
@@ -292,6 +341,9 @@ class BracketOp(ExprAST):
 
     def to_spark_sql(self) -> str:
         return f"{self.base.to_spark_sql()}[{self.key.to_spark_sql()}]"
+
+    def evaluate(self, columns):
+        return ss.map_lookup(self.base.evaluate(columns), self.key.evaluate(columns))
 
 
 class FuncCallOp(ExprAST):
@@ -347,6 +399,16 @@ class FuncCallOp(ExprAST):
         if len(self.args) != n:
             raise ExpressionError(f"{self.func_name} takes {n} argument(s).")
 
+    def _strftime_format(self) -> str:
+        """UNIX_TIMESTAMP's format: a string literal strftime pattern."""
+        if len(self.args) == 1:
+            return "%Y-%m-%d %H:%M:%S"
+        fmt_node = self.args[1]
+        inner = fmt_node.child if isinstance(fmt_node, GroupNode) else fmt_node
+        if not isinstance(inner, ValueNode) or not isinstance(inner.value, str):
+            raise ExpressionError("UNIX_TIMESTAMP format must be a string literal.")
+        return inner.value
+
     # -- lowering -------------------------------------------------------
     def to_spark_sql(self) -> str:
         f = self.func_name
@@ -361,17 +423,7 @@ class FuncCallOp(ExprAST):
             rest = ", ".join(f"CAST({a} AS STRING)" for a in args_sql[1:])
             return f"CONCAT_WS({sep}, {rest})"
         if f == "UNIX_TIMESTAMP":
-            if len(args_sql) == 1:
-                fmt = "yyyy-MM-dd HH:mm:ss"
-            else:
-                # Second arg must be a string literal strftime pattern.
-                fmt_node = self.args[1]
-                inner = fmt_node.child if isinstance(fmt_node, GroupNode) else fmt_node
-                if not isinstance(inner, ValueNode) or not isinstance(inner.value, str):
-                    raise ExpressionError(
-                        "UNIX_TIMESTAMP format must be a string literal."
-                    )
-                fmt = to_java_date_format(inner.value)
+            fmt = to_java_date_format(self._strftime_format())
             from feathub_spark.common.time_utils import sql_string_literal
 
             return f"TO_UNIX_TIMESTAMP({args_sql[0]}, '{sql_string_literal(fmt)}')"
@@ -392,4 +444,28 @@ class FuncCallOp(ExprAST):
             return f"size({args_sql[0]})"
         if f == "GET_WINDOW_TIME":
             return f"`{WINDOW_TIME_PLACEHOLDER}`"
+        raise ExpressionError(f"Unknown function {self.func_name}.")
+
+    # -- evaluation -----------------------------------------------------
+    def evaluate(self, columns):
+        f = self.func_name
+        if f == "GET_WINDOW_TIME":
+            return VariableNode(WINDOW_TIME_PLACEHOLDER).evaluate(columns)
+        args = [a.evaluate(columns) for a in self.args]
+        if f == "LOWER":
+            return ss.lower(args[0])
+        if f == "CONCAT":
+            return ss.concat(args)
+        if f == "CONCAT_WS":
+            return ss.concat_ws(args[0], args[1:])
+        if f == "UNIX_TIMESTAMP":
+            return ss.unix_timestamp(args[0], self._strftime_format())
+        if f == "JSON_STRING":
+            return ss.json_string(args[0])
+        if f == "MAP":
+            return ss.make_map(args)
+        if f == "ARRAY":
+            return ss.make_array(args)
+        if f == "SIZE":
+            return ss.size(args[0])
         raise ExpressionError(f"Unknown function {self.func_name}.")

@@ -9,11 +9,15 @@ case-insensitive keywords; backtick-quoted identifiers.
 
 from __future__ import annotations
 
+import functools
 import re
-from typing import Dict, List, Optional, Tuple
+from typing import Any, Dict, List, Mapping, Optional, Tuple
+
+import pyarrow as pa
 
 from feathub_spark.common.exceptions import ExpressionError
 from feathub_spark.common.types import DType
+from feathub_spark.dsl import spark_semantics
 from feathub_spark.dsl.ast import (
     BinaryOp,
     BracketOp,
@@ -244,9 +248,12 @@ class ExprParser:
         return CaseOp(whens, thens, default)
 
 
+@functools.lru_cache(maxsize=4096)
 def parse_expr(text: str) -> ExprAST:
-    # a parser per call: it keeps its position in its own fields, and
-    # concurrent serving threads lower expressions at the same time
+    """The AST of ``text``, parsed once per distinct string: a node is
+    never changed after parsing, so every caller can share it."""
+    # a parser per parse: it keeps its position in its own fields, and
+    # concurrent serving threads may parse at the same time
     return ExprParser().parse(text)
 
 
@@ -262,3 +269,12 @@ def derive_dtype(expr: str, variable_types: Dict[str, DType]) -> DType:
 def expr_and_dtype(expr: str, variable_types: Dict[str, DType]) -> Tuple[str, DType]:
     ast = parse_expr(expr)
     return ast.to_spark_sql(), ast.eval_dtype(variable_types)
+
+
+def evaluate(expr: str, columns: Mapping[str, Any], num_rows: int) -> pa.Array:
+    """The value of ``expr`` in each of ``num_rows`` rows of ``columns``
+    (arrays by name), computed in-process as Spark SQL computes it."""
+    try:
+        return spark_semantics.broadcast(parse_expr(expr).evaluate(columns), num_rows)
+    except pa.ArrowException as e:
+        raise ExpressionError(f"Cannot evaluate {expr!r}: {e}") from e

@@ -4,7 +4,8 @@ DataFrame plus online-store lookups
 
 Features are either ``{table}.{feature}`` strings (latest value from the
 online store by key) or expression Features over request fields and
-previously-declared features.  Serving is pandas-side (no Spark job),
+previously-declared features.  Serving evaluates the expressions
+in-process over column arrays with Spark's semantics (no Spark job),
 matching the reference's LocalFeatureService.
 """
 

@@ -9,10 +9,11 @@ A keyed table holds one row per key and a pandas index of its key fields
 (an ``Index``, or a ``MultiIndex`` for several keys) that maps a key to its
 row, so the cost of a call follows its input, not the table:
 
-- ``get`` looks up only the requested keys: proportional to the request.
-  It builds its result once, from the request's column arrays and each
-  feature's stored column taken at the found rows; only a request with a
-  key the table lacks reindexes, so its NULLs upcast like a left merge.
+- ``lookup`` looks up only the requested keys: proportional to the
+  request.  It returns each feature's stored column taken at the found
+  rows, as arrays by name; a key the table lacks reads NULL, upcast like
+  a left merge.  ``get`` serves the same lookup as one frame with the
+  request's columns.
 - ``put`` dedupes only the incoming batch, compares timestamps only for the
   keys it touches, overwrites their rows and appends the new keys:
   proportional to the batch, plus copying the table's rows into the new
@@ -32,10 +33,11 @@ row, never a mix.  Puts to one store are serialized by a lock.
 from __future__ import annotations
 
 import threading
-from typing import Dict, List, NamedTuple, Optional, Sequence
+from typing import Any, Dict, List, Mapping, NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+from pandas.api.extensions import take
 
 from feathub_spark.common.exceptions import FeathubError
 
@@ -62,16 +64,25 @@ class _Table(NamedTuple):
         return pos
 
 
-def _key_index(frame: pd.DataFrame, keys: Sequence[str]) -> pd.Index:
-    """The key fields of ``frame`` as an index.  NULL keys match each other,
-    as in a pandas merge and SqlOnlineStore: a MultiIndex codes every NULL
-    alike, and one object-dtype key has its None folded into NaN, which
-    also matches the NaN of a float key."""
+def _unwrap(values):
+    """A pandas array of numpy values as those values, whose dtype compares
+    equal to a stored key's (a frame column or a numpy array is kept)."""
+    if isinstance(values, pd.arrays.NumpyExtensionArray):
+        return values.to_numpy()
+    return values
+
+
+def _key_index(columns: Mapping[str, Any], keys: Sequence[str]) -> pd.Index:
+    """The key fields of ``columns`` (a frame, or arrays by name) as an
+    index.  NULL keys match each other, as in a pandas merge and
+    SqlOnlineStore: a MultiIndex codes every NULL alike, and one
+    object-dtype key has its None folded into NaN, which also matches the
+    NaN of a float key."""
     if len(keys) > 1:
-        return pd.MultiIndex.from_frame(frame[list(keys)])
-    col = frame[keys[0]]
+        return pd.MultiIndex.from_arrays([columns[k] for k in keys], names=keys)
+    col = columns[keys[0]]
     if col.dtype == object:
-        col = col.where(col.notna(), np.nan)
+        col = np.where(pd.isna(col), np.nan, col)
     return pd.Index(col, name=keys[0])
 
 
@@ -224,12 +235,17 @@ class MemoryOnlineStore:
             raise KeyError(f"Table {table_name!r} not in the online store.")
         return table
 
-    def get(
+    def lookup(
         self,
         table_name: str,
-        input_data: pd.DataFrame,
+        keys: Mapping[str, Any],
         feature_names: Optional[Sequence[str]] = None,
-    ) -> pd.DataFrame:
+    ) -> Dict[str, Any]:
+        """The stored features (all by default) of the latest row for each
+        requested key, as column arrays by name.  ``keys`` maps each key
+        field to its values: a request frame, or arrays by name.  Key
+        fields are not features: a name in ``feature_names`` that is one
+        is left to the request's own column."""
         table = self._table(table_name)
         key_fields = table.keys
         if not key_fields:
@@ -240,38 +256,46 @@ class MemoryOnlineStore:
         if feature_names is None:
             feature_names = table.columns
         cols = [c for c in dict.fromkeys(feature_names) if c not in key_fields]
-        self._check_key_dtypes(table_name, table, input_data)
-        pos = table.positions(_key_index(input_data, key_fields))
-        if (pos >= 0).all():
-            found = table.frame
-        else:
-            # missing keys (row -1) read NULL, upcasting like a left merge
-            found, pos = table.frame.reindex(pos), None
+        keys = {k: _unwrap(keys[k]) for k in key_fields}
+        self._check_key_dtypes(table_name, table, keys)
+        pos = table.positions(_key_index(keys, key_fields))
+        # missing keys (row -1) read NULL, upcasting like a left merge
+        # (int -> float64, bool -> object)
+        fill = not (pos >= 0).all()
+        return {c: take(table.frame[c].values, pos, allow_fill=fill) for c in cols}
+
+    def get(
+        self,
+        table_name: str,
+        input_data: pd.DataFrame,
+        feature_names: Optional[Sequence[str]] = None,
+    ) -> pd.DataFrame:
+        found = self.lookup(table_name, input_data, feature_names)
         # the STORED value wins on name overlap (a request column or an
         # earlier lookup sharing a feature name) — matching the dict-
         # overwrite semantics of SqlOnlineStore/RedisOnlineStore.get; a
         # plain merge would suffix both sides to <c>_x/<c>_y and the
         # feature would silently vanish from the service projection
-        arrays = {c: input_data[c].array for c in input_data.columns if c not in cols}
-        for c in cols:
-            arrays[c] = found[c].array if pos is None else found[c].array.take(pos)
+        arrays = {c: input_data[c].values for c in input_data.columns if c not in found}
+        arrays.update(found)
         return pd.DataFrame(arrays)
 
     @staticmethod
-    def _check_key_dtypes(table_name: str, table: _Table, input_data) -> None:
+    def _check_key_dtypes(table_name: str, table: _Table, keys) -> None:
         """A request key the store's keys cannot match (a string against an
         int64 key) fails loudly, as pandas' merge did, instead of reading
         NULL; int32 against int64 still matches."""
         index = table.index
         stored = list(index.dtypes) if index.nlevels > 1 else [index.dtype]
-        asked = [input_data[k].dtype for k in table.keys]
+        asked = [keys[k].dtype for k in table.keys]
         if asked == stored:
             return
         # pandas' merge-key coercion rules decide, on the request keys
         # against the first stored key (an empty table matches anything)
         probe = index[:1].to_frame(index=False)
         try:
-            input_data[table.keys].merge(probe, on=table.keys, how="left")
+            asked_keys = pd.DataFrame({k: keys[k] for k in table.keys})
+            asked_keys.merge(probe, on=table.keys, how="left")
         except ValueError as e:
             raise FeathubError(
                 f"Table {table_name!r}: request keys {table.keys} have dtypes "

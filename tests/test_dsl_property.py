@@ -1,25 +1,29 @@
 """Property-style cross-engine DSL check: randomly generated expressions in
 the portable subset (arithmetic, comparisons, AND/OR/NOT, IS [NOT] NULL,
-CASE) are evaluated two ways —
+CASE) are evaluated three ways —
 
-  1. DSL string -> parse_expr -> to_spark_sql -> Spark SQL, and
+  1. DSL string -> parse_expr -> to_spark_sql -> Spark SQL,
   2. the ORIGINAL DSL string run directly by DuckDB (this subset is plain
-     ANSI SQL),
+     ANSI SQL), and
+  3. DSL string -> parse_expr -> ExprAST.evaluate over Arrow arrays of the
+     same rows (the on-demand serving path),
 
 and every row must agree.  Because DuckDB parses the pre-lowering text, a
 precedence or parenthesization bug in the DSL parser/lowering shows up as a
-cross-engine mismatch even when the lowered SQL is itself self-consistent.
-Seeded RNG, batched into one query per engine, so the 200-expression sweep
-costs two scans.
+cross-engine mismatch even when the lowered SQL is itself self-consistent;
+the in-process evaluator must compute what Spark computes.  Seeded RNG,
+batched into one query per SQL engine, so the 200-expression sweep costs
+two scans.
 """
 
 import math
 import random
 
 import duckdb
+import pyarrow as pa
 import pytest
 
-from feathub_spark.dsl.parser import to_spark_sql
+from feathub_spark.dsl.parser import evaluate, to_spark_sql
 
 ROWS = [
     (1, 2, 0.5),
@@ -109,11 +113,22 @@ def test_dsl_matches_ansi_sql_on_random_expressions(spark, seed):
         lambda d: d.notna(), None
     )
 
+    # the same rows as Arrow columns, as the serving path reads them
+    columns = {
+        "a": pa.array([r[0] for r in ROWS], pa.int64()),
+        "b": pa.array([r[1] for r in ROWS], pa.int64()),
+        "c": pa.array([r[2] for r in ROWS], pa.float64()),
+    }
+
     for i, e in enumerate(exprs):
         col = f"x{i}"
+        served = evaluate(e, columns, len(ROWS)).to_pylist()
         for r in range(len(ROWS)):
             g, w = got[col][r], want[col][r]
             assert _eq(g, w), (
                 f"expr {e!r} lowered {to_spark_sql(e)!r} row {ROWS[r]}: "
                 f"spark={g!r} duckdb={w!r}"
+            )
+            assert _eq(served[r], g), (
+                f"expr {e!r} row {ROWS[r]}: evaluated={served[r]!r} spark={g!r}"
             )

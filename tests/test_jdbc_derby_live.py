@@ -193,3 +193,43 @@ def test_upsert_sql_keys_only_derby():
     stmt = upsert_sql("jdbc:derby:mem:x", "tgt", "stg", ["k"], ["k"])
     assert "WHEN MATCHED" not in stmt
     assert 'WHEN NOT MATCHED THEN INSERT ("k") VALUES (s."k")' in stmt
+
+
+class TestJdbcBoundsCaseFolding:
+    def test_uppercase_stored_column_lowercase_descriptor(self, spark, tmp_path):
+        from feathub_spark import Schema
+        from feathub_spark.common import types as t
+        from feathub_spark.feature_tables.sources.connector_sources import (
+            JdbcSource,
+        )
+        from feathub_spark.processors.spark.source_sink_utils import (
+            get_source_dataframe,
+        )
+
+        driver = "org.apache.derby.jdbc.EmbeddedDriver"
+        db = str(tmp_path / "derby_case_db")
+        url = f"jdbc:derby:{db};create=true"
+        # create the table with an UNQUOTED column -> Derby stores it
+        # uppercase (K); the descriptor asks for lowercase "k"
+        seed = spark.createDataFrame(
+            [(i, float(i)) for i in range(10)], "K bigint, V double"
+        )
+        try:
+            seed.write.format("jdbc").option("url", url).option(
+                "driver", driver
+            ).option("dbtable", "CASETBL").mode("overwrite").save()
+        except Exception as e:  # pragma: no cover - driver missing
+            pytest.skip(f"derby unavailable: {e}")
+
+        src = JdbcSource(
+            name="case_src",
+            url=url,
+            table="CASETBL",
+            driver=driver,
+            schema=Schema(["k", "v"], [t.Int64, t.Float64]),
+            partition_column="k",
+            num_partitions=3,
+        )
+        df = get_source_dataframe(spark, src)
+        assert df.count() == 10
+        assert df.rdd.getNumPartitions() == 3

@@ -1,7 +1,9 @@
 """Z-order layout: Morton interleave vs a pure-Python reference, the
 locality property that makes min/max skipping work, and the plan shape
-(one range exchange + local sort)."""
+(one range exchange + local sort); compact_files keeping a Hive partition
+layout and its on-disk value spelling."""
 
+import os
 import random
 
 import pytest
@@ -149,3 +151,68 @@ class TestCompactFiles:
 
         with _pytest.raises(ValueError, match="cannot target"):
             compact_files(spark, "s3://bucket/table")
+
+
+class TestCompactFilesPartitioned:
+    def test_hive_layout_preserved(self, spark, tmp_path):
+        from feathub_spark.datapipe.layout import compact_files
+
+        src = str(tmp_path / "tbl")
+        df = spark.createDataFrame(
+            [(i, f"{i % 2:02d}", float(i)) for i in range(200)],
+            "id bigint, day string, v double",
+        )
+        # many small files per partition: 8 shuffle partitions x 2 values
+        df.repartition(8).write.partitionBy("day").parquet(src)
+        before_dirs = sorted(
+            d for d in os.listdir(src) if d.startswith("day=")
+        )
+        assert before_dirs == ["day=00", "day=01"]  # zero-padded on disk
+
+        stats = compact_files(spark, src, target_mb=256)
+        after_dirs = sorted(d for d in os.listdir(src) if d.startswith("day="))
+        # the layout survives AND the values keep their exact on-disk
+        # spelling (inference would have coerced day=01 -> day=1)
+        assert after_dirs == ["day=00", "day=01"]
+        assert stats["partition_columns"] == ["day"]
+        assert stats["files_after"] < stats["files_before"]
+
+        # read back with inference off to see the on-disk strings (a
+        # default read applies Spark's OWN value inference — that's
+        # reader semantics, not the compactor's; the directory layout
+        # above is what the compactor must not destroy)
+        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            back = spark.read.parquet(src)
+            assert back.count() == 200
+            assert sorted(
+                r["day"] for r in back.select("day").distinct().collect()
+            ) == ["00", "01"]
+            # pruning still works on the compacted table
+            assert back.filter("day = '01'").count() == 100
+        finally:
+            spark.conf.set(key, prev)
+
+    def test_flat_layout_unchanged_behavior(self, spark, tmp_path):
+        from feathub_spark.datapipe.layout import compact_files
+
+        src = str(tmp_path / "flat")
+        spark.range(100).repartition(10).write.parquet(src)
+        stats = compact_files(spark, src, target_mb=256)
+        assert stats["partition_columns"] == []
+        assert stats["files_after"] < stats["files_before"]
+        assert spark.read.parquet(src).count() == 100
+
+    def test_inference_conf_restored(self, spark, tmp_path):
+        from feathub_spark.datapipe.layout import compact_files
+
+        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev = spark.conf.get(key)
+        src = str(tmp_path / "tbl2")
+        spark.createDataFrame(
+            [(1, "a"), (2, "b")], "id bigint, p string"
+        ).write.partitionBy("p").parquet(src)
+        compact_files(spark, src)
+        assert spark.conf.get(key) == prev

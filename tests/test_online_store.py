@@ -2,15 +2,15 @@
 the full-table store it replaced and against SqlOnlineStore, the
 mistyped-key guard, atomic puts under concurrent serving.
 LocalFeatureService: one lookup per table, the served frames (values,
-dtypes, column order, index), concurrent reads, and the DuckDB dialect
-bridge for expression features."""
+dtypes, column order, index), concurrent reads, string literals in
+expression features, and served values equal to Spark's for the same
+expressions."""
 
 import random
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -273,8 +273,8 @@ def test_service_one_get_per_table_serves_what_per_feature_gets_did():
         table, name = lookup.split(".")
         want = store.get(table, want, [name])
     calls = []
-    get = store.get
-    store.get = lambda table, *a: calls.append(table) or get(table, *a)
+    lookup = store.lookup
+    store.lookup = lambda table, *a: calls.append(table) or lookup(table, *a)
     got = LocalFeatureService(online_store=store).get_online_features(request, view)
     assert calls == ["u", "o"]
     pd.testing.assert_frame_equal(got, want)
@@ -521,6 +521,92 @@ def test_service_concurrent_expression_reads_match_serial_reads():
         pd.testing.assert_frame_equal(got, want)
 
 
+# one feature per case; each runs through serving and through Spark
+_SPARK_PARITY = {
+    "concat_null": "CONCAT(name, 'x')",
+    "concat_ws_skips_null": "CONCAT_WS('-', name, s)",
+    "cast_bigint": "CAST(x AS BIGINT)",
+    "cast_int": "CAST(x AS INTEGER)",
+    "cast_string": "CAST(x AS STRING)",
+    "div_zero": "x / 0",
+    "try_cast_string": "TRY_CAST(s AS BIGINT)",
+    "cast_string_bigint": "CAST(s AS BIGINT)",
+    "try_cast_overflow": "TRY_CAST(x * 1e10 AS INT)",
+    "cast_string_double": "CAST(s AS DOUBLE)",
+    "case_null_condition": "CASE WHEN x > 0 THEN 'pos' WHEN x <= 0 THEN 'nonpos' "
+                           "ELSE 'none' END",
+    "kleene": "x > 0 OR name IS NULL",
+    "wraps": "id * 4611686018427387904",
+    "quote_literal": "CONCAT(name, 'it''s')",
+    "backslash_literal": "CONCAT(name, 'a\\\\b')",
+    "backtick_literal": "CONCAT(name, 'x`y')",
+    "unix_timestamp": "UNIX_TIMESTAMP(t)",
+    "json_string": "JSON_STRING(name)",
+    "size_array": "SIZE(ARRAY(x, 1.5))",
+    "map_lookup": "MAP('k', x, 'j', 2.5)['k']",
+}
+
+
+def test_service_matches_spark_semantics(spark, tmp_path):
+    """One request through LocalFeatureService and through Spark's
+    get_table of a DerivedFeatureView with the same expressions: every
+    served value equals Spark's.  A NaN in a request reads as NULL on both
+    paths (pandas' NULL marker, written to parquet as NULL)."""
+    from feathub_spark import DerivedFeatureView, FileSystemSource, SparkProcessor
+    from feathub_spark.common.exceptions import ExpressionError
+
+    request = pd.DataFrame({
+        "id": [1, 2, 3, 4, 5, 6],
+        "name": ["a", None, "abc", "it", "x", None],
+        "x": [1.5, -1.5, 2.7, 0.0, float("nan"), None],
+        "s": ["1.5", "abc", None, "-2.7", " 12 ", "x"],
+        "t": ["2024-01-01 00:00:01", "2024-1-1 00:00:01", "junk", None,
+              "1969-12-31 23:59:59", "2024-02-29 12:00:00"],
+    })
+    schema = Schema(
+        ["id", "name", "x", "s", "t"],
+        [t.Int64, t.String, t.Float64, t.String, t.String],
+    )
+    features = [Feature(n, transform=e) for n, e in _SPARK_PARITY.items()]
+    path = str(tmp_path / "request")
+    request.to_parquet(path + ".parquet")
+    source = FileSystemSource(
+        name="parity_src", path=path + ".parquet", data_format="parquet",
+        schema=schema, keys=["id"],
+    )
+    view = DerivedFeatureView(name="parity_batch", source=source, features=features)
+    proc = SparkProcessor(spark)
+    proc.registry.build_features([source, view])
+    want = (proc.get_table(view).to_pandas().sort_values("id")
+            .reset_index(drop=True))
+    served = LocalFeatureService(online_store=MemoryOnlineStore()).get_online_features(
+        request, OnDemandFeatureView(name="parity", features=features,
+                                     request_schema=schema),
+    )
+
+    def same(a, b):
+        if pd.isna(a) or pd.isna(b):
+            return pd.isna(a) and pd.isna(b)
+        if isinstance(a, float) or isinstance(b, float):
+            return float(a) == pytest.approx(float(b))
+        return a == b
+
+    wrong = [
+        (name, i, served[name][i], want[name][i])
+        for name in _SPARK_PARITY for i in range(len(request))
+        if not same(served[name][i], want[name][i])
+    ]
+    assert not wrong, wrong
+    # what serving cannot compute as Spark does fails by the function's name
+    odd = OnDemandFeatureView(
+        name="odd", request_schema=schema,
+        features=[Feature("u", transform="UNIX_TIMESTAMP(t, '%Y-%m-%d %H:%M:%S.%f')")],
+    )
+    with pytest.raises(ExpressionError, match="UNIX_TIMESTAMP"):
+        LocalFeatureService(online_store=MemoryOnlineStore()).get_online_features(
+            request, odd)
+
+
 class TestServingBacktickLiteral:
     def test_backtick_inside_literal_survives(self):
         import pandas as pd
@@ -529,12 +615,8 @@ class TestServingBacktickLiteral:
         from feathub_spark.common import types as t
         from feathub_spark.feature_service.local_feature_service import (
             LocalFeatureService,
-            _backticks_to_ansi,
         )
 
-        assert _backticks_to_ansi("CONCAT(`name`, 'x`y')") == (
-            'CONCAT("name", \'x`y\')'
-        )
         view = OnDemandFeatureView(
             name="od_bt",
             features=[Feature("tagged", transform="CONCAT(name, 'x`y')")],
@@ -593,30 +675,7 @@ class TestStoreParityRandomized:
 
 
 class TestBackticksToAnsi:
-    def test_backtick_inside_literal_untouched(self):
-        from feathub_spark.feature_service.local_feature_service import (
-            _backticks_to_ansi,
-        )
-
-        assert _backticks_to_ansi("CONCAT(`name`, 'x`y')") == (
-            'CONCAT("name", \'x`y\')'
-        )
-
-    def test_duckdb_parses_rewritten_escape(self):
-        from feathub_spark.dsl.parser import to_spark_sql
-        from feathub_spark.feature_service.local_feature_service import (
-            _backticks_to_ansi,
-        )
-
-        # end-to-end: the DSL literal goes through ast.py's backslash
-        # escaping, then the serving bridge, then a real DuckDB parse
-        spark_sql = to_spark_sql("CONCAT(`name`, 'it''s')")
-        assert "\\'" in spark_sql  # precondition: generator emits \'
-        ansi = _backticks_to_ansi(spark_sql)
-        got = duckdb.sql(
-            f"SELECT {ansi} AS v FROM (SELECT 'x' AS name)"
-        ).fetchone()[0]
-        assert got == "xit's"
+    """String literals holding quotes and backticks serve as written."""
 
     def test_serving_path_literal_with_quote(self):
         from feathub_spark import Feature, OnDemandFeatureView, Schema
