@@ -20,6 +20,11 @@ bench:
 perfbench-smoke:
 	python -m pytest perfbench/test_smoke.py -q
 
+# Plan-shape audit of every query (exit 1 on a cartesian product or an
+# unexpected nested-loop join).  `python tools/plan_audit.py --dump DIR
+# [SF_DIR] [QUERY ...]` also writes each query's optimized logical plan to
+# DIR/<query>.txt with expression ids normalized, so two trees' plans
+# compare with `diff -r` (the check that a refactor changed no plan).
 plan-audit:
 	python tools/plan_audit.py
 

@@ -27,7 +27,7 @@ import pandas as pd
 from feathub_spark.common.exceptions import FeathubError
 from feathub_spark.dsl.parser import evaluate
 from feathub_spark.feature_views.on_demand_feature_view import OnDemandFeatureView
-from feathub_spark.online_stores.memory_online_store import MemoryOnlineStore
+from feathub_spark.online_stores.memory_online_store import MemoryOnlineStore, served
 
 
 class LocalFeatureService:
@@ -51,9 +51,9 @@ class LocalFeatureService:
             # a name served twice (a looked-up key field, a name looked up
             # from two tables, an expression named like a lookup) is served
             # once, where it first appears, with the value the view computed
-            served = dict.fromkeys([*request_df.columns, *names])
-            columns = {c: columns[c] for c in served if c in columns}
-        return pd.DataFrame(columns)
+            keep = dict.fromkeys([*request_df.columns, *names])
+            columns = {c: columns[c] for c in keep if c in columns}
+        return pd.DataFrame({c: served(v) for c, v in columns.items()})
 
     def _lookup(self, request: pd.DataFrame, lookups) -> Dict[str, Any]:
         """The request's columns and the looked-up features, as column
@@ -75,7 +75,10 @@ class LocalFeatureService:
         found = {}
         for table, names in features.items():
             # a key an earlier table looked up is matched by that value
-            by = {k: found[k] if k in found else request[k].values for k in keys[table]}
+            by = {
+                k: served(found[k]) if k in found else request[k].values
+                for k in keys[table]
+            }
             found.update(store.lookup(table, by, names))
         columns = {c: request[c].values for c in request.columns if c not in owner}
         columns.update((feature, found[feature]) for feature in order)
@@ -92,7 +95,8 @@ class LocalFeatureService:
         tr = feature.transform
         if isinstance(tr, PythonUdfTransform):
             values = []
-            for _, row in pd.DataFrame(columns, copy=False).iterrows():
+            frame = pd.DataFrame({c: served(v) for c, v in columns.items()}, copy=False)
+            for _, row in frame.iterrows():
                 try:
                     values.append(tr.udf(row))
                 except Exception:

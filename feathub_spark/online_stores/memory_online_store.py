@@ -11,9 +11,11 @@ row, so the cost of a call follows its input, not the table:
 
 - ``lookup`` looks up only the requested keys: proportional to the
   request.  It returns each feature's stored column taken at the found
-  rows, as arrays by name; a key the table lacks reads NULL, upcast like
-  a left merge.  ``get`` serves the same lookup as one frame with the
-  request's columns.
+  rows, as arrays by name; a key the table lacks reads NULL.  An int or
+  bool column with such a NULL comes back as an Arrow array of the stored
+  type, so expressions see a BIGINT, not the float64 a left merge would
+  upcast it to; ``served`` gives the merge's form.  ``get`` serves the
+  same lookup as one frame with the request's columns.
 - ``put`` dedupes only the incoming batch, compares timestamps only for the
   keys it touches, overwrites their rows and appends the new keys:
   proportional to the batch, plus copying the table's rows into the new
@@ -37,6 +39,7 @@ from typing import Any, Dict, List, Mapping, NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pandas.api.extensions import take
 
 from feathub_spark.common.exceptions import FeathubError
@@ -70,6 +73,24 @@ def _unwrap(values):
     if isinstance(values, pd.arrays.NumpyExtensionArray):
         return values.to_numpy()
     return values
+
+
+def _take_missing(values, pos: np.ndarray):
+    """``values`` at ``pos``, NULL where ``pos`` is -1 (a missing key)."""
+    if isinstance(values, np.ndarray) and values.dtype.kind in "iub":
+        # NULL without the upcast: the stored type stays visible
+        filled = take(values, pos, allow_fill=True, fill_value=values.dtype.type(0))
+        return pa.array(filled, mask=pos < 0)
+    return take(values, pos, allow_fill=True)
+
+
+def served(values):
+    """A ``lookup`` column as a left merge serves it: an int column with a
+    missing key as float64 with NaN, a bool one as object with NaN."""
+    if not isinstance(values, pa.Array):
+        return values
+    dtype = object if pa.types.is_boolean(values.type) else np.float64
+    return values.to_pandas().to_numpy(dtype=dtype, na_value=np.nan)
 
 
 def _key_index(columns: Mapping[str, Any], keys: Sequence[str]) -> pd.Index:
@@ -259,10 +280,9 @@ class MemoryOnlineStore:
         keys = {k: _unwrap(keys[k]) for k in key_fields}
         self._check_key_dtypes(table_name, table, keys)
         pos = table.positions(_key_index(keys, key_fields))
-        # missing keys (row -1) read NULL, upcasting like a left merge
-        # (int -> float64, bool -> object)
-        fill = not (pos >= 0).all()
-        return {c: take(table.frame[c].values, pos, allow_fill=fill) for c in cols}
+        if (pos >= 0).all():
+            return {c: take(table.frame[c].values, pos) for c in cols}
+        return {c: _take_missing(table.frame[c].values, pos) for c in cols}
 
     def get(
         self,
@@ -277,7 +297,7 @@ class MemoryOnlineStore:
         # plain merge would suffix both sides to <c>_x/<c>_y and the
         # feature would silently vanish from the service projection
         arrays = {c: input_data[c].values for c in input_data.columns if c not in found}
-        arrays.update(found)
+        arrays.update((c, served(v)) for c, v in found.items())
         return pd.DataFrame(arrays)
 
     @staticmethod

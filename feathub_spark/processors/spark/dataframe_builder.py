@@ -46,7 +46,6 @@ from feathub_spark.feature_views.feature import Feature
 from feathub_spark.feature_views.feature_view import FeatureView
 from feathub_spark.feature_views.sliding_feature_view import SlidingFeatureView
 from feathub_spark.feature_views.sql_feature_view import SqlFeatureView
-from feathub_spark.feature_views.transforms.agg_func import AggFunc
 from feathub_spark.feature_views.transforms.expression_transform import (
     ExpressionTransform,
 )
@@ -60,6 +59,7 @@ from feathub_spark.feature_views.transforms.python_udf_transform import (
 from feathub_spark.feature_views.transforms.sliding_window_transform import (
     SlidingWindowTransform,
 )
+from feathub_spark.processors.spark.agg_table import SALTED
 from feathub_spark.processors.spark.constants import (
     EVENT_TIME_COL,
     METADATA_COLS,
@@ -309,12 +309,7 @@ class SparkDataFrameBuilder:
             ).append(f_)
         for desc, group in windows.items():
             fields = [AggField.from_feature(f_) for f_ in group]
-            decomposable = all(
-                f_.agg_func
-                in (AggFunc.SUM, AggFunc.COUNT, AggFunc.AVG, AggFunc.MIN,
-                    AggFunc.MAX, AggFunc.ROW_NUMBER)
-                for f_ in fields
-            )
+            decomposable = all(f_.agg_func in SALTED for f_ in fields)
             chunk_ms = None
             if self._salt_chunk_ms is not None and desc.limit is None and decomposable:
                 chunk_ms = resolve_salt_chunk_ms(

@@ -16,6 +16,12 @@ Physical strategy (all JVM-side, no Python UDFs):
   slice / higher-order-function aggregation, entirely in Catalyst
   expressions.
 
+Each frame aggregate of the other functions is the aggregate table's
+(``agg_table.LOWERINGS``) one-pass lowering.  The hot-key salted plans
+(``evaluate_salted_over_window`` and its bounded twin) take the table's
+``SALTED`` functions: they build its states per time chunk and combine
+them with the previous chunks' prefix or suffix.
+
 This closes the reference Spark processor's gaps (its
 over_window_utils.py:86-173 rejects filter_expr, window_size+limit, and
 VALUE_COUNTS/COLLECT_LIST).  Aggregations sharing one OverWindowDescriptor
@@ -27,7 +33,7 @@ from __future__ import annotations
 
 from typing import NamedTuple, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
+from pyspark.sql import DataFrame, Window, WindowSpec, functions as F
 
 from feathub_spark.common import types as t
 from feathub_spark.common.exceptions import PlanError
@@ -37,6 +43,16 @@ from feathub_spark.feature_views.feature import Feature
 from feathub_spark.feature_views.transforms.agg_func import AggFunc
 from feathub_spark.feature_views.transforms.over_window_transform import (
     OverWindowTransform,
+)
+from feathub_spark.processors.spark.agg_table import (
+    LOWERINGS,
+    check_salted,
+    combine_parts,
+    filtered_value_sql,
+    is_orderable,
+    keep_last_sql,
+    single_phase,
+    with_empty_default,
 )
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL
 
@@ -74,19 +90,6 @@ class AggField(NamedTuple):
         )
 
 
-def _is_orderable(dtype: t.DType) -> bool:
-    """Spark rejects map types in ordering expressions (and in struct
-    comparisons), including maps nested in arrays; everything else the
-    engine emits is orderable.  (For COLLECT_LIST fields the OUTPUT
-    dtype is the vector of the value expr's type, so unwrapping vectors
-    also answers for the underlying value expression.)"""
-    if isinstance(dtype, t.MapType):
-        return False
-    if isinstance(dtype, t.VectorType):
-        return _is_orderable(dtype.dtype)
-    return True
-
-
 def _sort_pairs_sql(pairs_sql: str, agg: AggFunc, dtype: t.DType) -> str:
     """``array_sort`` of an array of ``struct(t, v)`` rows for a field of
     ``agg`` and output ``dtype``: by (t, v) when the value is orderable, by
@@ -95,7 +98,7 @@ def _sort_pairs_sql(pairs_sql: str, agg: AggFunc, dtype: t.DType) -> str:
     maps already do."""
     if agg == AggFunc.VALUE_COUNTS and isinstance(dtype, t.MapType):
         dtype = dtype.key_dtype  # the output map is keyed by the value
-    if _is_orderable(dtype):
+    if is_orderable(dtype):
         return f"array_sort({pairs_sql})"
     return (
         f"array_sort({pairs_sql}, (a, b) -> "
@@ -116,7 +119,7 @@ def _window_spec(
         # exprs are skipped — Spark rejects them as ordering expressions,
         # and they are only along for the tiebreak.
         order = [F.expr(_ORDER_MS)] + [
-            F.expr(f.expr_sql) for f in fields if _is_orderable(f.dtype)
+            F.expr(f.expr_sql) for f in fields if is_orderable(f.dtype)
         ]
         w = Window.partitionBy(
             *[F.col(k) for k in desc.group_by_keys]
@@ -131,9 +134,9 @@ def _window_spec(
 
 
 def _needs_collect(desc: OverWindowDescriptor, agg: AggFunc) -> bool:
-    if agg in (AggFunc.VALUE_COUNTS, AggFunc.COLLECT_LIST):
+    if agg not in LOWERINGS:  # VALUE_COUNTS, COLLECT_LIST
         return True
-    if agg in (AggFunc.FIRST_VALUE, AggFunc.LAST_VALUE) and desc.filter_expr:
+    if LOWERINGS[agg].pick and desc.filter_expr:
         # positional first/last INCLUDING null values (reference l[0]/l[-1]):
         # with a filter, "row filtered out" and "row passing with NULL value"
         # are indistinguishable to first()/last(), so collect the rows.
@@ -141,12 +144,6 @@ def _needs_collect(desc: OverWindowDescriptor, agg: AggFunc) -> bool:
     return desc.limit is not None and (
         desc.window_size_ms is not None or desc.filter_expr is not None
     )
-
-
-def _filtered_value_sql(value_sql: str, filter_sql: Optional[str]) -> str:
-    if filter_sql is None:
-        return value_sql
-    return f"CASE WHEN {filter_sql} THEN {value_sql} END"
 
 
 def _array_agg_sql(vals: str, agg: AggFunc, dtype: t.DType) -> str:
@@ -216,9 +213,10 @@ def evaluate_salted_over_window(
          the hot key now parallelizes across its chunks;
       4. combine prefix + within-chunk value per row.
 
-    Supports SUM / COUNT / AVG / MIN / MAX (+ filter_expr), unbounded frames
-    only — exactly the shape of "lifetime stats per entity" that hits the
-    hot-key wall first.  Other shapes fall back to the standard plan.
+    Supports the functions of ``agg_table.SALTED`` (+ filter_expr),
+    unbounded frames only — exactly the shape of "lifetime stats per
+    entity" that hits the hot-key wall first.  Other shapes fall back to
+    the standard plan.
     """
     assert desc.window_size_ms is None and desc.limit is None
     filter_sql = to_spark_sql(desc.filter_expr) if desc.filter_expr else None
@@ -228,25 +226,12 @@ def evaluate_salted_over_window(
         "__ow_chunk__", F.floor(F.col("__ow_ms__") / F.lit(chunk_ms))
     )
 
-    partial_aggs, combine = [], {}
-    for i, f_ in enumerate(fields):
-        v = _filtered_value_sql(f_.expr_sql, filter_sql)
-        p = f"__owp{i}_"
-        a = f_.agg_func
-        if a in (AggFunc.SUM, AggFunc.AVG):
-            partial_aggs.append(F.expr(f"sum({v})").alias(p + "sum"))
-        if a in (AggFunc.AVG, AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            # AVG divides by the non-null VALUE count; COUNT/ROW_NUMBER
-            # count filter-passing ROWS incl null values (reference len(l))
-            cnt_v = v if a == AggFunc.AVG else _filtered_value_sql("1", filter_sql)
-            partial_aggs.append(F.expr(f"count({cnt_v})").alias(p + "cnt"))
-        if a == AggFunc.MAX:
-            partial_aggs.append(F.expr(f"max({v})").alias(p + "max"))
-        if a == AggFunc.MIN:
-            partial_aggs.append(F.expr(f"min({v})").alias(p + "min"))
-        if a not in (AggFunc.SUM, AggFunc.AVG, AggFunc.COUNT, AggFunc.ROW_NUMBER,
-                     AggFunc.MAX, AggFunc.MIN):
-            raise PlanError(f"Salted over-window does not support {a}.")
+    check_salted(fields, "Salted over-window")
+    partial_aggs = [
+        F.expr(st.partial_sql(f_.expr_sql, filter_sql)).alias(f"__owp{i}_{st.name}")
+        for i, f_ in enumerate(fields)
+        for st in LOWERINGS[f_.agg_func].states
+    ]
 
     partials = base.groupBy(
         *[F.col(k) for k in keys], F.col("__ow_chunk__")
@@ -258,18 +243,13 @@ def evaluate_salted_over_window(
         .orderBy(F.col("__ow_chunk__"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    prefix_cols = {}
-    for i, f_ in enumerate(fields):
-        p = f"__owp{i}_"
-        a = f_.agg_func
-        if a in (AggFunc.SUM, AggFunc.AVG):
-            prefix_cols[p + "psum"] = F.sum(p + "sum").over(wprev)
-        if a in (AggFunc.AVG, AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            prefix_cols[p + "pcnt"] = F.sum(p + "cnt").over(wprev)
-        if a == AggFunc.MAX:
-            prefix_cols[p + "pmax"] = F.max(p + "max").over(wprev)
-        if a == AggFunc.MIN:
-            prefix_cols[p + "pmin"] = F.min(p + "min").over(wprev)
+    prefix_cols = {
+        f"__owp{i}_p{st.name}": (
+            F.expr(st.merge_sql(f"`__owp{i}_{st.name}`")).over(wprev)
+        )
+        for i, f_ in enumerate(fields)
+        for st in LOWERINGS[f_.agg_func].states
+    }
     prefixes = partials.withColumns(prefix_cols).select(
         *keys, "__ow_chunk__", *prefix_cols.keys()
     ).alias("pf")
@@ -291,35 +271,14 @@ def evaluate_salted_over_window(
         .orderBy(F.col("__ow_ms__"))
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out_cols = {}
-    for i, f_ in enumerate(fields):
-        v = _filtered_value_sql(f_.expr_sql, filter_sql)
-        p = f"__owp{i}_"
-        a = f_.agg_func
-        if a == AggFunc.SUM:
-            col = F.coalesce(F.expr(f"sum({v})").over(wchunk), F.lit(0)) + F.coalesce(
-                F.col(p + "psum"), F.lit(0)
-            )
-        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            cnt_v = _filtered_value_sql("1", filter_sql)
-            col = F.expr(f"count({cnt_v})").over(wchunk) + F.coalesce(
-                F.col(p + "pcnt"), F.lit(0)
-            )
-        elif a == AggFunc.AVG:
-            total = F.coalesce(F.expr(f"sum({v})").over(wchunk), F.lit(0)) + F.coalesce(
-                F.col(p + "psum"), F.lit(0)
-            )
-            n = F.expr(f"count({v})").over(wchunk) + F.coalesce(
-                F.col(p + "pcnt"), F.lit(0)
-            )
-            col = F.when(n > 0, total / n)
-        elif a == AggFunc.MAX:
-            col = F.greatest(
-                F.expr(f"max({v})").over(wchunk), F.col(p + "pmax")
-            )
-        elif a == AggFunc.MIN:
-            col = F.least(F.expr(f"min({v})").over(wchunk), F.col(p + "pmin"))
-        out_cols[f_.name] = col.cast(t.to_spark_type(f_.dtype))
+    out_cols = {
+        f_.name: combine_parts(
+            f_.agg_func,
+            lambda st: F.expr(st.partial_sql(f_.expr_sql, filter_sql)).over(wchunk),
+            lambda st: F.col(f"__owp{i}_p{st.name}"),
+        ).cast(t.to_spark_type(f_.dtype))
+        for i, f_ in enumerate(fields)
+    }
 
     joined = joined.withColumns(out_cols)
     drop = ["__ow_ms__", "__ow_chunk__"] + [
@@ -349,12 +308,12 @@ def evaluate_salted_bounded_over_window(
          using the union + forward first_value trick — one shuffle on
          (keys, chunk).  Windows that don't reach back into the previous
          chunk find no event at ms >= b there and combine with NULL/0;
-      3. combine (sum/least/greatest per agg kind) + join back on
+      3. combine (each state's agg_table combine) + join back on
          (keys, ms) — results depend only on (keys, ms), so rows tied on
          the timestamp share one computed result.
 
-    Supports SUM / COUNT / ROW_NUMBER / AVG / MIN / MAX with filter_expr;
-    limit and collect-path aggs fall back to the standard plan.
+    Supports the functions of ``agg_table.SALTED`` with filter_expr; limit
+    and collect-path aggs fall back to the standard plan.
     """
     assert desc.window_size_ms is not None and desc.limit is None
     window_ms = desc.window_size_ms
@@ -383,29 +342,12 @@ def evaluate_salted_bounded_over_window(
         .orderBy(F.col("__ob_ms__").desc())
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    check_salted(fields, "Salted bounded over-window")
     for i, f_ in enumerate(fields):
-        v = _filtered_value_sql(f_.expr_sql, filter_sql)
-        ind = _filtered_value_sql("1", filter_sql)
-        p = f"__ob{i}_"
-        a = f_.agg_func
-        if a in (AggFunc.SUM, AggFunc.AVG):
-            cur_cols[p + "csum"] = F.expr(f"sum({v})").over(wchunk)
-            suffix_specs.append((p + "ssum", F.expr(f"sum({v})").over(wsuf)))
-        if a == AggFunc.AVG:
-            cur_cols[p + "cvcnt"] = F.expr(f"count({v})").over(wchunk)
-            suffix_specs.append((p + "svcnt", F.expr(f"count({v})").over(wsuf)))
-        if a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            cur_cols[p + "crcnt"] = F.expr(f"count({ind})").over(wchunk)
-            suffix_specs.append((p + "srcnt", F.expr(f"count({ind})").over(wsuf)))
-        if a == AggFunc.MAX:
-            cur_cols[p + "cmax"] = F.expr(f"max({v})").over(wchunk)
-            suffix_specs.append((p + "smax", F.expr(f"max({v})").over(wsuf)))
-        if a == AggFunc.MIN:
-            cur_cols[p + "cmin"] = F.expr(f"min({v})").over(wchunk)
-            suffix_specs.append((p + "smin", F.expr(f"min({v})").over(wsuf)))
-        if a not in (AggFunc.SUM, AggFunc.AVG, AggFunc.COUNT, AggFunc.ROW_NUMBER,
-                     AggFunc.MAX, AggFunc.MIN):
-            raise PlanError(f"Salted bounded over-window does not support {a}.")
+        for st in LOWERINGS[f_.agg_func].states:
+            partial = F.expr(st.partial_sql(f_.expr_sql, filter_sql))
+            cur_cols[f"__ob{i}_c{st.name}"] = partial.over(wchunk)
+            suffix_specs.append((f"__ob{i}_s{st.name}", partial.over(wsuf)))
 
     base = base.withColumns(cur_cols)
 
@@ -469,31 +411,14 @@ def evaluate_salted_bounded_over_window(
         *[F.col(f"p.`__p_{name}`") for name in suffix_names],
     )
 
-    out_cols = {}
-    for i, f_ in enumerate(fields):
-        p = f"__ob{i}_"
-        a = f_.agg_func
-        if a == AggFunc.SUM:
-            col = F.coalesce(F.col(p + "csum"), F.lit(0)) + F.coalesce(
-                F.col(f"__p_{p}ssum"), F.lit(0)
-            )
-        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            col = F.coalesce(F.col(p + "crcnt"), F.lit(0)) + F.coalesce(
-                F.col(f"__p_{p}srcnt"), F.lit(0)
-            )
-        elif a == AggFunc.AVG:
-            total = F.coalesce(F.col(p + "csum"), F.lit(0)) + F.coalesce(
-                F.col(f"__p_{p}ssum"), F.lit(0)
-            )
-            n = F.coalesce(F.col(p + "cvcnt"), F.lit(0)) + F.coalesce(
-                F.col(f"__p_{p}svcnt"), F.lit(0)
-            )
-            col = F.when(n > 0, total / n)
-        elif a == AggFunc.MAX:
-            col = F.greatest(F.col(p + "cmax"), F.col(f"__p_{p}smax"))
-        else:  # MIN
-            col = F.least(F.col(p + "cmin"), F.col(f"__p_{p}smin"))
-        out_cols[f_.name] = col.cast(t.to_spark_type(f_.dtype))
+    out_cols = {
+        f_.name: combine_parts(
+            f_.agg_func,
+            lambda st: F.col(f"__ob{i}_c{st.name}"),
+            lambda st: F.col(f"__p___ob{i}_s{st.name}"),
+        ).cast(t.to_spark_type(f_.dtype))
+        for i, f_ in enumerate(fields)
+    }
 
     joined = joined.withColumns(out_cols)
     return joined.drop(
@@ -803,42 +728,15 @@ def evaluate_over_window(
     direct_fields = [f for f in fields if not _needs_collect(desc, f.agg_func)]
 
     for f_ in direct_fields:
-        value_sql = _filtered_value_sql(f_.expr_sql, filter_sql)
-        agg = f_.agg_func
-        if agg == AggFunc.AVG:
-            col = F.expr(f"avg({value_sql})").over(spec)
-        elif agg == AggFunc.SUM:
-            col = F.coalesce(F.expr(f"sum({value_sql})").over(spec), F.lit(0))
-        elif agg == AggFunc.MAX:
-            col = F.expr(f"max({value_sql})").over(spec)
-        elif agg == AggFunc.MIN:
-            col = F.expr(f"min({value_sql})").over(spec)
-        elif agg in (AggFunc.FIRST_VALUE, AggFunc.LAST_VALUE):
-            # filter_sql is None here (_needs_collect) → positional first/
-            # last including null values (reference l[0]/l[-1]).  The
-            # window orders by event time only, so tied times make
-            # first()/last() run-dependent — min/max over struct(t, v)
-            # pins the collect path's (t, v) tie rule for orderable
-            # types; unorderable (map-typed) values keep the positional
-            # form (struct ordering would reject them)
-            fn = "min" if agg == AggFunc.FIRST_VALUE else "max"
-            if _is_orderable(f_.dtype):
-                col = F.expr(
-                    f"{fn}(struct({_ORDER_MS} AS t, {value_sql} AS v))"
-                ).over(spec).getField("v")
-            elif agg == AggFunc.FIRST_VALUE:
-                col = F.expr(f"first({value_sql}, false)").over(spec)
-            else:
-                col = F.expr(f"last({value_sql}, false)").over(spec)
-        elif agg in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            # rows in window (after filter) INCLUDING null values —
-            # reference len(l), aggregation_utils.py; ROW_NUMBER is the
-            # same count up to the current row (ties included)
-            col = F.expr(
-                f"count({_filtered_value_sql('1', filter_sql)})"
-            ).over(spec)
-        else:
-            raise PlanError(f"Unsupported direct agg {agg}.")
+        # FIRST/LAST: filter_sql is None here (_needs_collect).  The window
+        # orders by event time only, so tied times would make first()/
+        # last() run-dependent — min/max over struct(t, v) pins the collect
+        # path's (t, v) tie rule for orderable types
+        col = single_phase(
+            f_.agg_func, f_.expr_sql, filter_sql, _ORDER_MS,
+            is_orderable(f_.dtype), over=lambda c: c.over(spec),
+        )
+        col = with_empty_default(f_.agg_func, col, f_.dtype)
         out_cols[f_.name] = col.cast(t.to_spark_type(f_.dtype))
 
     if collect_fields:
@@ -850,7 +748,7 @@ def evaluate_over_window(
             if f_.agg_func == AggFunc.VALUE_COUNTS and desc.limit is None:
                 # multiset semantics: no time ordering needed — collect the
                 # (filtered) values directly, skipping struct build + sort
-                value_sql = _filtered_value_sql(f_.expr_sql, filter_sql)
+                value_sql = filtered_value_sql(f_.expr_sql, filter_sql)
                 df = df.withColumn(
                     vals_col, F.expr(f"collect_list({value_sql})").over(spec)
                 )
@@ -873,10 +771,7 @@ def evaluate_over_window(
                     "s -> s.v)"
                 )
                 if desc.limit is not None:
-                    sorted_vals = (
-                        f"slice({sorted_vals}, "
-                        f"greatest(1, size(`{tmp}`) + 1 - {desc.limit}), {desc.limit})"
-                    )
+                    sorted_vals = keep_last_sql(sorted_vals, desc.limit, f"`{tmp}`")
                 df = df.withColumn(vals_col, F.expr(sorted_vals))
             agg_sql = _array_agg_sql(f"`{vals_col}`", f_.agg_func, f_.dtype)
             out_cols[f_.name] = F.expr(agg_sql).cast(t.to_spark_type(f_.dtype))

@@ -28,7 +28,9 @@ runtime SlidingWindowUtils.java:76-186 but batch-declarative):
    keys) to realize empty windows; lag() over (keys, wend) to skip unchanged
    emissions.
 
-SUM/COUNT/AVG/MIN/MAX/FIRST/LAST use constant-size accumulators;
+The functions of the aggregate table (``agg_table.LOWERINGS``) use its
+constant-size states: stage 1 builds each state's partial, stage 2 merges
+it, and the table's final expression gives the feature.
 VALUE_COUNTS/COLLECT_LIST and any field with ``limit`` carry
 (time, value) struct arrays.
 """
@@ -40,16 +42,19 @@ from typing import List, NamedTuple, Optional
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from feathub_spark.common import types as t
-from feathub_spark.common.exceptions import PlanError
 from feathub_spark.common.types import to_spark_type
 from feathub_spark.dsl.parser import to_spark_sql
 from feathub_spark.feature_views.feature import Feature
 from feathub_spark.feature_views.transforms.agg_func import AggFunc
+from feathub_spark.processors.spark.agg_table import (
+    LOWERINGS,
+    is_orderable,
+    keep_last_sql,
+    with_empty_default,
+)
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL, WINDOW_TIME_MS_COL
 from feathub_spark.processors.spark.over_window_utils import (
     _array_agg_sql,
-    _filtered_value_sql,
-    _is_orderable,
     _sort_pairs_sql,
 )
 
@@ -101,21 +106,6 @@ class SlidingAggField(NamedTuple):
             AggFunc.COLLECT_LIST,
         )
 
-    def value_sql(self) -> str:
-        return _filtered_value_sql(self.expr_sql, self.filter_sql)
-
-    def row_gate_sql(self) -> str:
-        """Non-null exactly for rows that enter the window (filter-passing),
-        regardless of the value expression — COUNT/ROW_NUMBER count these
-        rows including null values (reference len(l))."""
-        return _filtered_value_sql("1", self.filter_sql)
-
-
-def _default_col(field: SlidingAggField, col: Column) -> Column:
-    if field.agg_func in (AggFunc.SUM, AggFunc.COUNT):
-        return F.coalesce(col, F.lit(0).cast(to_spark_type(field.dtype)))
-    return col
-
 
 def evaluate_sliding_window(
     df: DataFrame,
@@ -140,7 +130,6 @@ def evaluate_sliding_window(
     # ---- stage 1: partial accumulators per (keys, step_end) -------------
     partial_aggs: List[Column] = []
     for i, f_ in enumerate(fields):
-        v = f_.value_sql()
         p = f"__p{i}_"
         a = f_.agg_func
         if f_.vc_distributive:
@@ -156,53 +145,13 @@ def evaluate_sliding_window(
             )
             arr = _sort_pairs_sql(f"collect_list({pair})", a, f_.dtype)
             if f_.limit is not None:
-                arr = (
-                    f"slice({arr}, greatest(1, size({arr}) + 1 - {f_.limit}), "
-                    f"{f_.limit})"
-                )
+                arr = keep_last_sql(arr, f_.limit)
             partial_aggs.append(F.expr(arr).alias(p + "arr"))
-        elif a == AggFunc.AVG:
-            partial_aggs.append(F.expr(f"sum({v})").alias(p + "sum"))
-            partial_aggs.append(F.expr(f"count({v})").alias(p + "cnt"))
-        elif a == AggFunc.SUM:
-            partial_aggs.append(F.expr(f"sum({v})").alias(p + "sum"))
-        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            # filter-passing ROWS incl null values (reference len(l))
-            partial_aggs.append(
-                F.expr(f"count({f_.row_gate_sql()})").alias(p + "cnt")
-            )
-        elif a == AggFunc.MAX:
-            partial_aggs.append(F.expr(f"max({v})").alias(p + "max"))
-        elif a == AggFunc.MIN:
-            partial_aggs.append(F.expr(f"min({v})").alias(p + "min"))
-        elif a in (AggFunc.FIRST_VALUE, AggFunc.LAST_VALUE):
-            # min/max(struct(ms, value)) — deterministic earliest/latest
-            # ROW pick, including rows whose value is NULL (reference
-            # l[0]/l[-1]).  Struct comparison rejects map-typed values, so
-            # those fall back to min_by/max_by on the timestamp alone
-            # (deterministic up to timestamp ties, which maps cannot
-            # tiebreak anyway).
-            fn = "min" if a == AggFunc.FIRST_VALUE else "max"
-            suffix = "first" if a == AggFunc.FIRST_VALUE else "last"
-            if _is_orderable(f_.dtype):
-                partial_aggs.append(
-                    F.expr(
-                        f"{fn}(CASE WHEN {f_.row_gate_sql()} IS NOT NULL "
-                        f"THEN struct(`{_MS}` AS t, {f_.expr_sql} AS v) END)"
-                    ).alias(p + suffix)
-                )
-            else:
-                fnby = "min_by" if a == AggFunc.FIRST_VALUE else "max_by"
-                partial_aggs.append(
-                    F.expr(
-                        f"{fnby}(CASE WHEN {f_.row_gate_sql()} IS NOT NULL "
-                        f"THEN struct(`{_MS}` AS t, {f_.expr_sql} AS v) END, "
-                        f"CASE WHEN {f_.row_gate_sql()} IS NOT NULL "
-                        f"THEN `{_MS}` END)"
-                    ).alias(p + suffix)
-                )
-        else:
-            raise PlanError(f"Unsupported sliding agg {a}.")
+            continue
+        orderable = is_orderable(f_.dtype)
+        for s in LOWERINGS[a].states:
+            sql = s.partial_sql(f_.expr_sql, f_.filter_sql, f"`{_MS}`", orderable)
+            partial_aggs.append(F.expr(sql).alias(p + s.name))
 
     if not partial_aggs:
         # every field is distributive VALUE_COUNTS: keep one placeholder so
@@ -243,46 +192,22 @@ def evaluate_sliding_window(
     merge_aggs: List[Column] = []
     for i, f_ in enumerate(fields):
         p = f"__p{i}_"
-        m_i = f_.window_ms // step_ms
-        guard = f"`{_K}` < {m_i}"
-        a = f_.agg_func
+        guard = f"`{_K}` < {f_.window_ms // step_ms}"
 
-        def g(col_sql: str) -> str:
-            return f"CASE WHEN {guard} THEN {col_sql} END"
+        def g(name: str) -> str:
+            return f"CASE WHEN {guard} THEN `{p}{name}` END"
 
         if f_.vc_distributive:
             continue  # merged relationally below, not through the agg
         if f_.uses_array:
             merge_aggs.append(
-                F.expr(f"flatten(collect_list({g('`' + p + 'arr`')})) ").alias(p + "arr")
+                F.expr(f"flatten(collect_list({g('arr')})) ").alias(p + "arr")
             )
-        elif a == AggFunc.AVG:
-            merge_aggs.append(F.expr(f"sum({g('`' + p + 'sum`')})").alias(p + "sum"))
-            merge_aggs.append(F.expr(f"sum({g('`' + p + 'cnt`')})").alias(p + "cnt"))
-        elif a == AggFunc.SUM:
-            merge_aggs.append(F.expr(f"sum({g('`' + p + 'sum`')})").alias(p + "sum"))
-        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            merge_aggs.append(F.expr(f"sum({g('`' + p + 'cnt`')})").alias(p + "cnt"))
-        elif a == AggFunc.MAX:
-            merge_aggs.append(F.expr(f"max({g('`' + p + 'max`')})").alias(p + "max"))
-        elif a == AggFunc.MIN:
-            merge_aggs.append(F.expr(f"min({g('`' + p + 'min`')})").alias(p + "min"))
-        elif a in (AggFunc.FIRST_VALUE, AggFunc.LAST_VALUE):
-            # map-typed values: the partials carry (t, v) structs picked
-            # by min_by/max_by; merging compares on t alone for the same
-            # reason (struct comparison rejects maps)
-            fn = "min" if a == AggFunc.FIRST_VALUE else "max"
-            suffix = "first" if a == AggFunc.FIRST_VALUE else "last"
-            part = g("`" + p + suffix + "`")
-            if _is_orderable(f_.dtype):
-                merge_aggs.append(
-                    F.expr(f"{fn}({part})").alias(p + suffix)
-                )
-            else:
-                fnby = "min_by" if a == AggFunc.FIRST_VALUE else "max_by"
-                merge_aggs.append(
-                    F.expr(f"{fnby}({part}, ({part}).t)").alias(p + suffix)
-                )
+            continue
+        orderable = is_orderable(f_.dtype)
+        for s in LOWERINGS[f_.agg_func].states:
+            merge = s.merge_sql(g(s.name), orderable)
+            merge_aggs.append(F.expr(merge).alias(p + s.name))
 
     if not merge_aggs:
         # every field is distributive VALUE_COUNTS: placeholder keeps the
@@ -336,10 +261,7 @@ def evaluate_sliding_window(
         if f_.uses_array:
             arr = _sort_pairs_sql(f"`{p}arr`", a, f_.dtype)
             if f_.limit is not None:
-                arr = (
-                    f"slice({arr}, greatest(1, size({arr}) + 1 - {f_.limit}), "
-                    f"{f_.limit})"
-                )
+                arr = keep_last_sql(arr, f_.limit)
             # materialize the sorted/sliced composite ONCE as a column:
             # _array_agg_sql references its input several times (incl.
             # inside a transform lambda for VALUE_COUNTS, where
@@ -350,28 +272,14 @@ def evaluate_sliding_window(
                 vals_col, F.expr(f"transform({arr}, s -> s.v)")
             )
             col = F.expr(_array_agg_sql(f"`{vals_col}`", a, f_.dtype))
-            # empty-window defaults: ONLY COUNT and SUM are 0 in the
-            # reference (aggregation_utils.get_default_value_and_type);
-            # ROW_NUMBER is NULL like every other func — the scalar path's
-            # _default_col already agrees
-            if a in (AggFunc.COUNT, AggFunc.SUM):
-                col = F.coalesce(col, F.lit(0))
-        elif a == AggFunc.AVG:
-            col = F.col(p + "sum") / F.col(p + "cnt")
-        elif a == AggFunc.SUM:
-            col = F.col(p + "sum")
-        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            col = F.col(p + "cnt")
-        elif a == AggFunc.MAX:
-            col = F.col(p + "max")
-        elif a == AggFunc.MIN:
-            col = F.col(p + "min")
-        elif a == AggFunc.FIRST_VALUE:
-            col = F.col(p + "first").getField("v")
-        elif a == AggFunc.LAST_VALUE:
-            col = F.col(p + "last").getField("v")
-        col = _default_col(f_, col).cast(to_spark_type(f_.dtype))
-        out_cols[f_.name] = col
+        else:
+            col = LOWERINGS[a].result(lambda name: F.col(p + name))
+        # empty-window defaults: ONLY COUNT and SUM are 0 in the reference
+        # (aggregation_utils.get_default_value_and_type); ROW_NUMBER is
+        # NULL like every other func
+        out_cols[f_.name] = with_empty_default(a, col, f_.dtype).cast(
+            to_spark_type(f_.dtype)
+        )
 
     result = result.withColumns(out_cols)
     result = result.drop(

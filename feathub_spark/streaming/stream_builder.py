@@ -53,16 +53,19 @@ from feathub_spark.feature_views.transforms.over_window_transform import (
 from feathub_spark.feature_views.transforms.python_udf_transform import (
     PythonUdfTransform,
 )
+from feathub_spark.processors.spark.agg_table import (
+    LOWERINGS,
+    gated_sql,
+    single_phase,
+    with_empty_default,
+)
 from feathub_spark.processors.spark.constants import EVENT_TIME_COL, WINDOW_TIME_MS_COL
 from feathub_spark.processors.spark.dataframe_builder import SparkDataFrameBuilder
 from feathub_spark.processors.spark.over_window_utils import (
     _array_agg_sql,
     _sort_pairs_sql,
 )
-from feathub_spark.processors.spark.sliding_window_utils import (
-    SlidingAggField,
-    _default_col,
-)
+from feathub_spark.processors.spark.sliding_window_utils import SlidingAggField
 from feathub_spark.processors.spark.source_sink_utils import (
     _parse_kafka_value,
     append_event_time,
@@ -250,19 +253,12 @@ class SparkStreamBuilder(SparkDataFrameBuilder):
 _NATIVE_MULTI_SIZE_MAX_STEPS = 96
 
 
-def _gated(field: SlidingAggField, sql: str) -> str:
-    """``sql`` on the rows that pass the field's filter, NULL elsewhere."""
-    if field.filter_sql is None:
-        return sql
-    return f"CASE WHEN {field.row_gate_sql()} IS NOT NULL THEN {sql} END"
-
-
 def _native_sliding_window(
     df: DataFrame, keys: List[str], step_ms: int, fields: List[SlidingAggField]
 ) -> DataFrame:
-    """No emission flags: Spark's own windowed aggregation, with the batch
-    evaluator's value / row-gate lowering and empty-window defaults
-    (sliding_window_utils.py).  All fields share one window over the
+    """No emission flags: Spark's own windowed aggregation, with the
+    aggregate table's one-pass lowering and empty-window defaults
+    (agg_table.py).  All fields share one window over the
     largest size; a smaller field's row gate also keeps only the rows in
     the last ``window_ms`` of it, so every size is computed in one pass and
     a window is emitted when its largest size holds a row, as in batch."""
@@ -286,33 +282,29 @@ def _native_sliding_window(
                 gate = f"({f_.filter_sql}) AND {gate}"
             f_ = f_._replace(filter_sql=gate)
         a = f_.agg_func
-        if a == AggFunc.AVG:
-            col = F.expr(f"avg({f_.value_sql()})")
-        elif a == AggFunc.SUM:
-            col = F.expr(f"sum({f_.value_sql()})")
-        elif a in (AggFunc.COUNT, AggFunc.ROW_NUMBER):
-            col = F.expr(f"count({f_.row_gate_sql()})")
-        elif a in (AggFunc.MAX, AggFunc.MIN):
-            col = F.expr(f"{a.name.lower()}({f_.value_sql()})")
-        elif a in (AggFunc.FIRST_VALUE, AggFunc.LAST_VALUE):
-            # the ORDERING key is gated, not the value: min_by/max_by
-            # ignore NULL-ordered rows, so a filtered-out row never wins
-            # the slot and emits NULL where batch emits the first/last
-            # PASSING value
-            order = _gated(f_, ms_sql)
-            fn = "min_by" if a == AggFunc.FIRST_VALUE else "max_by"
-            col = F.expr(f"{fn}({f_.expr_sql}, {order})")
-        else:  # COLLECT_LIST
+        lowering = LOWERINGS.get(a)
+        if lowering is None:  # COLLECT_LIST
             # struct-wrapped so NULL VALUES survive (collect_list drops
             # bare NULL elements; batch semantics include them), sorted
             # by event time for a deterministic order; NULL, not an empty
             # list, when no row of the window passes the gates
-            pair = _gated(f_, f"struct({ms_sql} AS t, ({f_.expr_sql}) AS v)")
+            pair = f"struct({ms_sql} AS t, ({f_.expr_sql}) AS v)"
+            pair = gated_sql(pair, f_.filter_sql)
             pairs = _sort_pairs_sql(f"collect_list({pair})", a, f_.dtype)
             col = F.expr(
                 _array_agg_sql(f"transform({pairs}, s -> s.v)", a, f_.dtype)
             )
-        col = _default_col(f_, col).cast(to_spark_type(f_.dtype))
+        elif lowering.pick is not None:
+            # FIRST/LAST keep their own form, which the state-store schema
+            # depends on: the ORDERING key is gated, not the value —
+            # min_by/max_by ignore NULL-ordered rows, so a filtered-out row
+            # never wins the slot and emits NULL where batch emits the
+            # first/last PASSING value
+            by = gated_sql(ms_sql, f_.filter_sql)
+            col = F.expr(f"{lowering.pick}_by({f_.expr_sql}, {by})")
+        else:
+            col = single_phase(a, f_.expr_sql, f_.filter_sql, ms_sql, True)
+        col = with_empty_default(a, col, f_.dtype).cast(to_spark_type(f_.dtype))
         aggs.append(col.alias(f_.name))
 
     return (

@@ -597,6 +597,32 @@ def test_service_matches_spark_semantics(spark, tmp_path):
         if not same(served[name][i], want[name][i])
     ]
     assert not wrong, wrong
+    # looked-up BIGINT and BOOLEAN features with one of three requested
+    # keys missing: expressions over them compute what Spark computes over
+    # the stored types ('10', not '10.0'); the served frame keeps a left
+    # merge's dtypes (int -> float64, bool -> object)
+    store = MemoryOnlineStore()
+    store.put("ints", pd.DataFrame({"k": [1, 2], "i": [10, -3], "b": [True, False]}),
+              key_fields=["k"])
+    lookup_exprs = {"si": "CAST(i AS STRING)", "i2": "i * 2",
+                    "bi": "CASE WHEN b THEN 1 ELSE 0 END"}
+    lookup_view = OnDemandFeatureView(
+        name="parity_lookup", request_schema=Schema(["k"], [t.Int64]),
+        features=["ints.i", "ints.b",
+                  *[Feature(n, transform=e) for n, e in lookup_exprs.items()]],
+    )
+    got = LocalFeatureService(online_store=store).get_online_features(
+        pd.DataFrame({"k": [1, 3, 2]}), lookup_view)
+    want = spark.createDataFrame(
+        [(10, True), (None, None), (-3, False)], "i bigint, b boolean"
+    ).selectExpr(*[f"{e} AS {n}" for n, e in lookup_exprs.items()]).toPandas()
+    wrong = [
+        (name, i, got[name][i], want[name][i])
+        for name in lookup_exprs for i in range(3)
+        if not same(got[name][i], want[name][i])
+    ]
+    assert not wrong, wrong
+    assert (got["i"].dtype, got["b"].dtype) == (np.float64, object)
     # what serving cannot compute as Spark does fails by the function's name
     odd = OnDemandFeatureView(
         name="odd", request_schema=schema,

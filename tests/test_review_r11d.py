@@ -1,5 +1,5 @@
 """Regression pins for the round-11 fourth review batch (processor
-shell, skew probe, common utilities)."""
+shell, common utilities)."""
 
 from datetime import timedelta
 
@@ -21,32 +21,6 @@ def test_strftime_microseconds_parse_fully(spark):
     vals = [r[0] for r in df.select(F.expr(sql)).collect()]
     assert all(v is not None for v in vals)
     assert vals[0].microsecond == 123456
-
-
-def test_skew_probe_all_null_timestamps_fall_back(spark):
-    """An all-NULL probed time column must return 'no salting', not
-    abort the compile with int(None)."""
-    from pyspark.sql import functions as F
-
-    from feathub_spark.processors.spark.skew_probe import decide_salt_chunk_ms
-
-    df = spark.createDataFrame(
-        [("k", None)] * 50, "k string, ts timestamp"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    assert (
-        decide_salt_chunk_ms(df, ["k"], "ts", threshold=1.0, min_hot_rows=1)
-        is None
-    )
-
-
-def test_salt_chunk_bool_spec_rejected(spark):
-    """salt_chunk_ms=True must raise the bad-spec error, not silently
-    compile a pathological 1ms-chunk plan (bool is an int subclass)."""
-    from feathub_spark.processors.spark.skew_probe import resolve_salt_chunk_ms
-
-    df = spark.createDataFrame([("k", 1)], "k string, v long")
-    with pytest.raises(ValueError):
-        resolve_salt_chunk_ms(True, df, ["k"], "v")
 
 
 def test_protowire_map_entry_defaults_and_wire_mismatch():
@@ -79,39 +53,6 @@ def test_protowire_map_entry_defaults_and_wire_mismatch():
     # round-trip still clean
     enc = encode_row({"m": {3: 0.5}}, specs)
     assert decode_message(enc, specs)["m"] == {3: 0.5}
-
-
-def test_skew_probe_cache_survives_across_get_table(spark, tmp_path):
-    """The processor owns the probe memoization, so two get_table calls
-    over the same descriptor run ONE probe job ('pay once')."""
-    from feathub_spark import DerivedFeatureView, Feature, Float64
-    from feathub_spark.feature_views.transforms import OverWindowTransform
-    from feathub_spark.processors.spark.spark_processor import SparkProcessor
-    from tests.fixtures import write_f1_source
-
-    source = write_f1_source(tmp_path)
-    view = DerivedFeatureView(
-        name="probe_cache_view",
-        source=source,
-        features=[
-            Feature(
-                "s",
-                transform=OverWindowTransform(
-                    "cost", "SUM", group_by_keys=["name"]
-                ),
-                dtype=Float64,
-            )
-        ],
-        keep_source_fields=True,
-    )
-    proc = SparkProcessor(spark, over_window_salt_chunk_ms="auto")
-    built = proc.registry.build_features([source, view])
-    proc.get_table(built[1]).to_pandas()
-    assert len(proc._skew_probe_cache) >= 1
-    before = dict(proc._skew_probe_cache)
-    proc.get_table(built[1]).to_pandas()
-    # same entries, nothing re-probed under a new key
-    assert set(proc._skew_probe_cache) == set(before)
 
 
 def test_release_caches_concurrent_threads():

@@ -49,6 +49,7 @@ def test_salted_equals_standard(spark, tmp_path, seed, filter_pos):
             Feature("a", transform=OverWindowTransform("v", "AVG", **kwargs)),
             Feature("mx", transform=OverWindowTransform("v", "MAX", **kwargs)),
             Feature("mn", transform=OverWindowTransform("v", "MIN", **kwargs)),
+            Feature("rn", transform=OverWindowTransform("v", "ROW_NUMBER", **kwargs)),
         ],
         keep_source_fields=True,
     )
@@ -63,6 +64,7 @@ def test_salted_equals_standard(spark, tmp_path, seed, filter_pos):
     salted.registry.build_features([source])
     built_salt = salted.registry.build_features([view])[0]
     got = salted.get_table(built_salt).to_pandas()
+    assert [d[2] for d in salted.last_salt_decisions] == [100_000]
 
     cols = sorted(expected.columns)
     exp_sorted = expected[cols].sort_values(cols).reset_index(drop=True)
@@ -174,3 +176,89 @@ def test_salted_asof_equals_standard(spark, tmp_path, seed):
     got = norm(build(SparkProcessor(spark, asof_salt_chunk_ms=100_000)))
     assert got == expected
     assert len(got) == len(left_rows)
+
+
+def test_salted_asof_matches_unsalted_on_microsecond_ties(spark):
+    """The time-chunked as-of plan must order at FULL event-time
+    precision: sub-millisecond data used to match a right row up to
+    999us in the left row's future."""
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from feathub_spark.processors.spark.constants import EVENT_TIME_COL
+    from feathub_spark.processors.spark.join_utils import temporal_join
+
+    def ts(us):
+        return datetime(2026, 1, 1, tzinfo=timezone.utc).replace(
+            microsecond=us
+        )
+
+    left = spark.createDataFrame(
+        [("k", ts(100)), ("k", ts(950))], "k string, t timestamp"
+    ).withColumn(EVENT_TIME_COL, F.col("t"))
+    right = spark.createDataFrame(
+        [("k", ts(900), 42.0)], "k string, t timestamp, v double"
+    ).withColumn(EVENT_TIME_COL, F.col("t"))
+    plain = temporal_join(left, right, ["k"], {"v": "v"})
+    salted = temporal_join(
+        left, right, ["k"], {"v": "v"}, salt_chunk_ms=3_600_000
+    )
+    want = [(100, None), (950, 42.0)]
+    for out in (plain, salted):
+        got = sorted(
+            (r["t"].microsecond, r["v"]) for r in out.select("t", "v").collect()
+        )
+        assert got == want
+
+
+def test_salt_decision_records_effective_plan(spark, tmp_path):
+    """An explicit salt chunk SMALLER than a bounded window falls back to
+    the plain over-window plan — the recorded decision must say None, and
+    results must match the plain processor."""
+    from datetime import timedelta
+
+    from feathub_spark import DerivedFeatureView, Feature
+    from feathub_spark.feature_views.transforms import OverWindowTransform
+    from feathub_spark.processors.spark.spark_processor import SparkProcessor
+
+    from tests.fixtures import write_f1_source
+
+    source = write_f1_source(tmp_path)
+
+    def _view():
+        return DerivedFeatureView(
+            name="salt_decision_view",
+            source=source,
+            features=[
+                Feature(
+                    "cost_24h",
+                    transform=OverWindowTransform(
+                        "cost", "SUM", window_size=timedelta(hours=24),
+                        group_by_keys=["name"],
+                    ),
+                ),
+            ],
+            keep_source_fields=True,
+        )
+
+    plain = SparkProcessor(spark)
+    plain.registry.build_features([source])
+    expected = plain.get_table(
+        plain.registry.build_features([_view()])[0]
+    ).to_pandas()
+
+    salted = SparkProcessor(spark, over_window_salt_chunk_ms=3_600_000)
+    salted.registry.build_features([source])
+    got = salted.get_table(
+        salted.registry.build_features([_view()])[0]
+    ).to_pandas()
+
+    ow = [d for d in salted.last_salt_decisions if d[0] == "over_window"]
+    assert len(ow) == 1
+    assert ow[0][2] is None  # fell back to the plain plan, recorded as such
+
+    cols = sorted(expected.columns)
+    exp = expected[cols].sort_values(cols).reset_index(drop=True)
+    act = got[cols].sort_values(cols).reset_index(drop=True)
+    assert act.equals(exp)

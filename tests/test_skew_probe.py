@@ -6,6 +6,7 @@ results must match the plain plan bit-for-bit."""
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from feathub_spark import DerivedFeatureView, Feature, SparkProcessor
 from feathub_spark.feature_views.transforms import OverWindowTransform
@@ -184,3 +185,87 @@ def test_probe_cache_memoizes(spark):
         resolve_salt_chunk_ms(1234, skewed, ["k"], "__event_time__", cache=cache)
         == 1234
     )
+
+
+def test_skew_probe_cache_keys_include_policy(spark):
+    """Two AutoSalt policies sharing one probe cache must not read each
+    other's verdicts."""
+    from feathub_spark.processors.spark.skew_probe import (
+        AutoSalt,
+        resolve_salt_chunk_ms,
+    )
+
+    df = spark.createDataFrame(
+        [("hot", i * 1000) for i in range(400)] + [("cold", 0)],
+        "k string, ts long",
+    ).withColumn("t", F.timestamp_millis(F.col("ts")))
+    cache = {}
+    a = resolve_salt_chunk_ms(
+        AutoSalt(threshold=1e9, min_hot_rows=10**9), df, ["k"], "t",
+        cache=cache,
+    )
+    b = resolve_salt_chunk_ms(
+        AutoSalt(threshold=1.0, min_hot_rows=1), df, ["k"], "t",
+        cache=cache,
+    )
+    assert a is None and b is not None
+    assert len(cache) == 2
+
+
+def test_skew_probe_all_null_timestamps_fall_back(spark):
+    """An all-NULL probed time column must return 'no salting', not
+    abort the compile with int(None)."""
+    from pyspark.sql import functions as F
+
+    from feathub_spark.processors.spark.skew_probe import decide_salt_chunk_ms
+
+    df = spark.createDataFrame(
+        [("k", None)] * 50, "k string, ts timestamp"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    assert (
+        decide_salt_chunk_ms(df, ["k"], "ts", threshold=1.0, min_hot_rows=1)
+        is None
+    )
+
+
+def test_salt_chunk_bool_spec_rejected(spark):
+    """salt_chunk_ms=True must raise the bad-spec error, not silently
+    compile a pathological 1ms-chunk plan (bool is an int subclass)."""
+    from feathub_spark.processors.spark.skew_probe import resolve_salt_chunk_ms
+
+    df = spark.createDataFrame([("k", 1)], "k string, v long")
+    with pytest.raises(ValueError):
+        resolve_salt_chunk_ms(True, df, ["k"], "v")
+
+
+def test_skew_probe_cache_survives_across_get_table(spark, tmp_path):
+    """The processor owns the probe memoization, so two get_table calls
+    over the same descriptor run ONE probe job ('pay once')."""
+    from feathub_spark import DerivedFeatureView, Feature, Float64
+    from feathub_spark.feature_views.transforms import OverWindowTransform
+    from feathub_spark.processors.spark.spark_processor import SparkProcessor
+    from tests.fixtures import write_f1_source
+
+    source = write_f1_source(tmp_path)
+    view = DerivedFeatureView(
+        name="probe_cache_view",
+        source=source,
+        features=[
+            Feature(
+                "s",
+                transform=OverWindowTransform(
+                    "cost", "SUM", group_by_keys=["name"]
+                ),
+                dtype=Float64,
+            )
+        ],
+        keep_source_fields=True,
+    )
+    proc = SparkProcessor(spark, over_window_salt_chunk_ms="auto")
+    built = proc.registry.build_features([source, view])
+    proc.get_table(built[1]).to_pandas()
+    assert len(proc._skew_probe_cache) >= 1
+    before = dict(proc._skew_probe_cache)
+    proc.get_table(built[1]).to_pandas()
+    # same entries, nothing re-probed under a new key
+    assert set(proc._skew_probe_cache) == set(before)

@@ -6,12 +6,22 @@ Complements tools/check_correctness.py (results) with the plan-shape side
 of the 100 TB story.  One line per query; exit 1 if any query trips a
 red flag (cartesian product / non-broadcast-bounded nested loop).
 
-Usage: python tools/plan_audit.py [sf_dir] [query ...]
+Usage: python tools/plan_audit.py [--dump DIR] [sf_dir] [query ...]
+
+``--dump DIR`` also writes each selected query's optimized logical plan to
+``DIR/<query>.txt`` with expression ids normalized (``#123`` -> ``#``), so
+the plans of two source trees compare with ``diff -r`` — the check that a
+refactor left every plan as it was:
+
+    python tools/plan_audit.py --dump plans_a SF_DIR over_cumulative  # tree A
+    python tools/plan_audit.py --dump plans_b SF_DIR over_cumulative  # tree B
+    diff -r plans_a plans_b
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,6 +64,11 @@ _BOUNDED_BNLJ_OK = {
 
 
 def main() -> None:
+    dump = None
+    if sys.argv[1:2] == ["--dump"]:
+        dump = sys.argv.pop(2)
+        del sys.argv[1]
+        os.makedirs(dump, exist_ok=True)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
@@ -69,7 +84,12 @@ def main() -> None:
             continue
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            qe = df._jdf.queryExecution()
+            if dump:
+                logical = re.sub(r"#\d+", "#", qe.optimizedPlan().toString())
+                with open(os.path.join(dump, f"{name}.txt"), "w") as f:
+                    f.write(logical)
+            plan = qe.executedPlan().toString()
         except Exception as e:
             print(f"{name:24s} PLAN-ERROR {type(e).__name__}: {e}")
             failures.append(name)
